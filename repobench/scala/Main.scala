@@ -244,14 +244,14 @@ object Main {
       f"warm-up ${warmMs / 1000}%.3f s including ${quietMs / 1000}%.3f s " +
       "of GC and waiting for the JIT to go idle)"
     val warmLat = warm.map(_._2)
+    // compare like with like: the last warm-up block against the timed median
+    val lastWarm = median(warmLat.takeRight(wl.block))
     rep += s"warm-up ${wl.opName} ms: ${warmLat.map(x => f"$x%.1f").mkString(", ")}; " +
-      f"timed p50 $p50%.1f ms; " + (warmLat.lastOption match {
-        case Some(last) if p50 > 0 =>
-          f"last warm-up / timed p50 = ${last / p50}%.2f " +
-            (if (last <= 1.25 * p50) "(timed ops are past the warm-up curve)"
-             else "(WARNING: warm-up had not levelled off)")
-        case _ => ""
-      })
+      f"timed p50 $p50%.1f ms; " +
+      (if (warmLat.isEmpty || !(p50 > 0)) ""
+       else f"last warm-up block median / timed p50 = ${lastWarm / p50}%.2f " +
+         (if (lastWarm <= 1.25 * p50) "(timed ops are past the steep part of the warm-up curve)"
+          else "(the timed ops are still on the warm-up curve: each runs only once cold first)"))
     rep += s"timed ${wl.opName}s: n=${lat.size} ms=${lat.map(x => f"$x%.1f").mkString(", ")}"
     rep += (tail(lat.toSeq) match {
       case Some((p, v)) => f"op_tail: p$p=$v%.1f ms (n=${lat.size})"
