@@ -180,8 +180,6 @@ def main():
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=float)
     ap.add_argument("--trace", required=True, choices=("0", "1"))
-    ap.add_argument("--record-expected", action="store_true",
-                    help="query_mix: rewrite expected/query_mix.json from this run")
     a = ap.parse_args()
 
     cp = build()
@@ -197,8 +195,7 @@ def main():
     cpu0 = cpu_jiffies()
     cmd = (jvm_cmd(cp, work) + [
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-            "--trace", a.trace, "--work", work, "--nproc", str(nproc), "--bench-dir", HERE,
-            "--record-expected", "1" if a.record_expected else "0"])
+            "--trace", a.trace, "--work", work, "--nproc", str(nproc), "--bench-dir", HERE])
     ru0 = resource.getrusage(resource.RUSAGE_CHILDREN)
     err_path = os.path.join(work_root, f"{a.workload}-{os.getpid()}.log")
     with open(err_path, "w") as err:

@@ -18,8 +18,7 @@ final case class Args(
     trace: Boolean,
     work: Path,
     nproc: Int,
-    benchDir: Path,
-    recordExpected: Boolean)
+    benchDir: Path)
 
 object Args {
   def parse(a: Array[String]): Args = {
@@ -27,7 +26,7 @@ object Args {
     def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     Args(need("workload"), need("seed").toLong, need("seconds").toDouble,
       need("trace") == "1", Paths.get(need("work")).toAbsolutePath, need("nproc").toInt,
-      Paths.get(need("bench-dir")).toAbsolutePath, m.get("record-expected").contains("1"))
+      Paths.get(need("bench-dir")).toAbsolutePath)
   }
 }
 
@@ -36,13 +35,25 @@ object Args {
 final case class OpResult(latencyNs: Long, ok: Boolean, detail: String = "")
 
 /** Shared by the workloads: the session, the tracer, and a timer that
-  * records each timed window for the driver-gap computation. */
+  * records each timed window for the driver-gap computation and adds
+  * the Java threads' CPU time spent inside it to `timedCpuNs`. */
 final class Ctx(val spark: SparkSession, val args: Args, val tracer: Tracer) {
+  private val threads = ManagementFactory.getThreadMXBean
+  /** CPU time of every live Java thread by id. JIT compiler and GC
+    * threads are not among them: how much of their backlog falls into
+    * a window depends on how busy the host is, not on the program. */
+  private def threadCpu(): Map[Long, Long] =
+    threads.getAllThreadIds.map(id => id -> threads.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
+  /** Java-thread CPU time inside `timed` so far. Threads that end
+    * inside a window are not counted. */
+  var timedCpuNs = 0L
   def timed[T](f: => T): (T, Long) = {
     val w0 = System.currentTimeMillis()
+    val c0 = threadCpu()
     val t0 = System.nanoTime()
     val r = f
     val d = System.nanoTime() - t0
+    timedCpuNs += threadCpu().iterator.map { case (id, c) => c - c0.getOrElse(id, 0L) }.sum
     tracer.opWindow(w0, System.currentTimeMillis())
     (r, d)
   }
@@ -56,10 +67,6 @@ trait Workload {
   /** Hash of every generated input. */
   def inputHash: String
   def warmupOps: Int
-  /** Operations come in blocks of this many (a fixed mix of kinds); the
-    * timed phase runs whole blocks until at least --seconds have passed,
-    * so every run measures the same mix. */
-  def block: Int
   /** Number of operations of a traced run (fixed, so per-layer counts
     * repeat exactly for a seed). */
   def traceOps: Int
@@ -204,21 +211,27 @@ object Main {
     // ---- timed loop ----
     tracer.start()
     val lat = mutable.ArrayBuffer.empty[Double]
+    val cpu = mutable.ArrayBuffer.empty[Double]
+    val jitPerOp = mutable.ArrayBuffer.empty[Long]
     val loop0 = System.nanoTime()
     var i = 0
     def more: Boolean =
       if (args.trace) i < wl.traceOps
-      else i == 0 || i % wl.block != 0 || System.nanoTime() - loop0 < (args.seconds * 1e9).toLong
+      else i == 0 || System.nanoTime() - loop0 < (args.seconds * 1e9).toLong
     while (more) {
+      val cpu0 = ctx.timedCpuNs
+      val jit0 = jit.getTotalCompilationTime
       val r = guarded(i, wl.opName)
+      jitPerOp += jit.getTotalCompilationTime - jit0
       account(r, s"${wl.opName} $i")
-      if (r.ok) lat += r.latencyNs / 1e6
+      if (r.ok) { lat += r.latencyNs / 1e6; cpu += (ctx.timedCpuNs - cpu0) / 1e6 }
       i += 1
     }
     val peakHeapMb = heapPools.map(_.getPeakUsage.getUsed.toDouble).sum / (1024.0 * 1024.0)
     val layers = tracer.finish() ++ (if (args.trace) wl.layerMetrics(ctx) else Map.empty)
 
     val p50 = if (lat.isEmpty) Double.NaN else median(lat.toSeq)
+    val cpuP50 = if (cpu.isEmpty) Double.NaN else median(cpu.toSeq)
     val metrics = new java.util.LinkedHashMap[String, AnyRef]()
     def put(k: String, v: Double, unit: String): Unit = {
       val m = new java.util.LinkedHashMap[String, AnyRef]()
@@ -228,6 +241,7 @@ object Main {
     val failedRatio = if (attempted == 0) 1.0 else failed.toDouble / attempted
     if (!args.trace) {
       put("op_p50_ms", p50, "ms")
+      put("op_cpu_ms", cpuP50, "ms")
       put("setup_s", setupS, "s")
     } else {
       val all = layers ++ Map("failed_op_ratio" -> failedRatio, "trace.op_p50_ms" -> p50,
@@ -244,15 +258,16 @@ object Main {
       f"warm-up ${warmMs / 1000}%.3f s including ${quietMs / 1000}%.3f s " +
       "of GC and waiting for the JIT to go idle)"
     val warmLat = warm.map(_._2)
-    // compare like with like: the last warm-up block against the timed median
-    val lastWarm = median(warmLat.takeRight(wl.block))
+    val lastWarm = warmLat.lastOption.getOrElse(Double.NaN)
     rep += s"warm-up ${wl.opName} ms: ${warmLat.map(x => f"$x%.1f").mkString(", ")}; " +
       f"timed p50 $p50%.1f ms; " +
       (if (warmLat.isEmpty || !(p50 > 0)) ""
-       else f"last warm-up block median / timed p50 = ${lastWarm / p50}%.2f " +
+       else f"last warm-up ${wl.opName} / timed p50 = ${lastWarm / p50}%.2f " +
          (if (lastWarm <= 1.25 * p50) "(timed ops are past the steep part of the warm-up curve)"
           else "(the timed ops are still on the warm-up curve: each runs only once cold first)"))
-    rep += s"timed ${wl.opName}s: n=${lat.size} ms=${lat.map(x => f"$x%.1f").mkString(", ")}"
+    rep += s"timed ${wl.opName} latencies: n=${lat.size} ms=${lat.map(x => f"$x%.1f").mkString(", ")}"
+    rep += s"timed ${wl.opName} Java-thread CPU ms: ${cpu.map(x => f"$x%.1f").mkString(", ")}; " +
+      s"JIT compile ms during each: ${jitPerOp.mkString(", ")}"
     rep += (tail(lat.toSeq) match {
       case Some((p, v)) => f"op_tail: p$p=$v%.1f ms (n=${lat.size})"
       case None => s"op_tail: omitted (n=${lat.size} < 20)"

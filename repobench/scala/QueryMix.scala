@@ -146,7 +146,6 @@ final class QueryMix(ctx: Ctx) extends Workload {
   private var hash = ""
   private var starHash = ""
   private val rng = new scala.util.Random(ctx.args.seed)
-  private val seen = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String)]
   private val sync = new Sync(ctx)
 
   private lazy val expected: Map[String, (Long, String)] = {
@@ -174,7 +173,6 @@ final class QueryMix(ctx: Ctx) extends Workload {
 
   override def inputHash: String = hash
   override def warmupOps: Int = 1
-  override def block: Int = 1
   override def traceOps: Int = 2
   override def inputSeconds: Double = genSeconds
   override def opName: String = "pass"
@@ -200,8 +198,7 @@ final class QueryMix(ctx: Ctx) extends Workload {
       } else {
         val (r, t) = ctx.timed(runKey(k))
         ns += t
-        seen(k) = r
-        if (ctx.args.recordExpected || expected.get(k).contains(r)) Nil
+        if (expected.get(k).contains(r)) Nil
         else Seq(s"$k got rows=${r._1} fp=${r._2}, expected ${expected.get(k)}")
       }
     }
@@ -216,21 +213,8 @@ final class QueryMix(ctx: Ctx) extends Workload {
     Seq(s"ops.${k}_s" -> (a + b) / 1000.0, s"ops.$k.build_ms" -> b, s"ops.$k.action_ms" -> a)
   }.toMap ++ sync.layerMetrics(c)
 
-  override def report: Seq[String] = {
-    if (ctx.args.recordExpected) {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = m.createObjectNode()
-      root.put("data_seed", StarData.DataSeed)
-      root.put("input_hash", starHash)
-      val ks = root.putObject("keys")
-      seen.toSeq.sortBy(_._1).foreach { case (k, (n, fp)) =>
-        val o = ks.putObject(k); o.put("rows", n); o.put("fingerprint", fp)
-      }
-      Files.createDirectories(expectedPath.getParent)
-      m.writerWithDefaultPrettyPrinter().writeValue(expectedPath.toFile, root)
-      Seq(s"recorded ${seen.size} expected fingerprints to $expectedPath")
-    } else Seq(s"items (${keys.size + 1}): ${(keys :+ SyncItem).mkString(" ")}") ++ sync.report
-  }
+  override def report: Seq[String] =
+    Seq(s"items (${keys.size + 1}): ${(keys :+ SyncItem).mkString(" ")}") ++ sync.report
 
   override def close(): Unit = sync.close()
 }

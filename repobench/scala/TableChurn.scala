@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** `table_churn`: one SnapshotTable with an incremental MV on it. One
-  * operation is one step: a write verb (append, merge, DV delete, DV
-  * update, or compactSmall at the end of each block) with the MV
-  * refresh after it, then a read (full, time-travel, or a readWhere
-  * range read over the commitClustered first version). Every read is compared with an
-  * in-benchmark model of that version; the MV with the model's
-  * aggregate. */
+  * operation is one block of five steps; a step is a write verb
+  * (append, merge, DV delete, DV update, or compactSmall closing the
+  * block) with the MV refresh after it, then a read (full, time-travel,
+  * or a readWhere range read over the commitClustered first version).
+  * A block's latency is the sum of its steps' timed parts. Every read
+  * is compared with an in-benchmark model of that version, and the MV
+  * with the model's aggregate, outside the timing. */
 final class TableChurn(ctx: Ctx) extends Workload {
   import TableChurn._
   private val spark = ctx.spark
@@ -65,11 +66,10 @@ final class TableChurn(ctx: Ctx) extends Workload {
   }
 
   override def inputHash: String = hash
-  override def warmupOps: Int = Writes.size
-  override def block: Int = Writes.size
-  override def traceOps: Int = Writes.size
+  override def warmupOps: Int = 1
+  override def traceOps: Int = 1
   override def inputSeconds: Double = 0.0
-  override def opName: String = "step"
+  override def opName: String = "block"
 
   /** Walks the table and MV roots, counting bytes of files not seen
     * before as written. */
@@ -153,42 +153,51 @@ final class TableChurn(ctx: Ctx) extends Workload {
     Seq(n, si, sg, sv, sc)
   }
 
-  /** Runs one read verb; returns (got, expected). */
-  private def read(verb: String): (Seq[Long], Seq[Long]) = verbSpan(s"tables.$verb") {
-    verb match {
-      case "read" => (aggregate(table.read()), expect(model(current)))
-      case "read_version" =>
-        val v = 1L + rng.nextInt(current.toInt)
-        (aggregate(table.read(v)), expect(model(v)))
-      case "read_where" =>
-        val lo = rng.nextInt(InitialRows - RangeWidth).toLong + 1
-        val hi = lo + RangeWidth - 1
-        val df = table.readWhere(1L, "id", lo, hi)
-        rangeFilesRead += df.inputFiles.length
-        rangeFilesTotal += table.read(1L).inputFiles.length
-        (aggregate(df), expect(model(1L).filter { case (k, _) => k >= lo && k <= hi }))
-    }
+  /** Picks what one read verb reads: (version, id range). */
+  private def readTarget(verb: String): (Long, Option[(Long, Long)]) = verb match {
+    case "read" => (current, None)
+    case "read_version" => (1L + rng.nextInt(current.toInt), None)
+    case "read_where" =>
+      val lo = rng.nextInt(InitialRows - RangeWidth).toLong + 1
+      (1L, Some((lo, lo + RangeWidth - 1)))
   }
 
-  private var step = 0
+  private def readDf(verb: String, v: Long, range: Option[(Long, Long)]): DataFrame = verb match {
+    case "read" => table.read()
+    case "read_version" => table.read(v)
+    case "read_where" => table.readWhere(v, "id", range.get._1, range.get._2)
+  }
 
-  override def op(i: Int): OpResult = {
-    val w = Writes(step % Writes.size)
-    val rv = Reads(step % Reads.size)
-    step += 1
-    val (((got, want), mode), ns) = ctx.timed {
+  /** One step: (timed ns, refresh mode, read result, version read, id
+    * range read). Picking the read target is not timed. */
+  private def step(w: String, rv: String): (Long, String, Seq[Long], Long, Option[(Long, Long)]) = {
+    val (mode, writeNs) = ctx.timed {
       write(w)
-      val mode = verbSpan("plans.mv_refresh") {
+      verbSpan("plans.mv_refresh") {
         val res = MaterializedViews.refresh(mvFp).get
         mvFp = res.fingerprint
         res.mode
       }
-      (read(rv), mode)
     }
-    if (i >= 0) refreshModes += mode
-    trackWrites()
-    val mvBad = checkMv()
-    val bad = (if (got != want) Seq(s"$rv after $w: got $got expected $want") else Nil) ++ mvBad
+    val (v, range) = readTarget(rv)
+    val (got, readNs) = ctx.timed(verbSpan(s"tables.$rv")(aggregate(readDf(rv, v, range))))
+    (writeNs + readNs, mode, got, v, range)
+  }
+
+  override def op(i: Int): OpResult = {
+    var ns = 0L
+    val bad = Writes.zip(Reads).flatMap { case (w, rv) =>
+      val (t, mode, got, v, range) = step(w, rv)
+      ns += t
+      if (i >= 0) refreshModes += mode
+      if (ctx.args.trace && range.isDefined) {
+        rangeFilesRead += readDf(rv, v, range).inputFiles.length
+        rangeFilesTotal += table.read(v).inputFiles.length
+      }
+      trackWrites()
+      val want = expect(model(v).filter { case (k, _) => range.forall { case (lo, hi) => k >= lo && k <= hi } })
+      (if (got != want) Seq(s"$rv after $w: got $got expected $want") else Nil) ++ checkMv()
+    }
     OpResult(ns, bad.isEmpty, bad.mkString("; "))
   }
 
@@ -252,9 +261,9 @@ final class TableChurn(ctx: Ctx) extends Workload {
 final case class Rec(grp: Int, v: Long, payload: String)
 
 object TableChurn {
-  /** One block of steps: the write verbs in a fixed order (compactSmall
-    * last, so it finds the block's small files), each paired with a
-    * read. The seed picks rows, keys, predicates, versions and ranges. */
+  /** One block: the write verbs in a fixed order (compactSmall last, so
+    * it finds the block's small files), each paired with a read. The
+    * seed picks rows, keys, predicates, versions and ranges. */
   val Writes: Seq[String] = Seq("append", "merge", "delete", "update", "compact_small")
   val Reads: Seq[String] = Seq("read", "read_where", "read_version", "read_where", "read")
   val verbs: Seq[String] = Seq("append", "merge", "delete", "update", "compact_small",

@@ -217,7 +217,7 @@ final class Sync(ctx: Ctx) {
     inv = new Inventory(ctx.args.seed)
     stub = new Stub(inv, ctx.args.nproc)
     cfg = VerkadaPipeline.Config(apiBase = stub.base, serverBase = stub.base, apiKey = "bench",
-      layerId = LayerId, concurrency = ctx.args.nproc, leasePageSize = LeasePage)
+      layerId = LayerId, leasePageSize = LeasePage)
   }
 
   def inputHash: String = QueryMix.sha256(
