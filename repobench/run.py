@@ -4,7 +4,7 @@ its outputs, and print one JSON result line.
 
 Run from the root of a checkout:
 
-    python3 repobench/run.py --workload query_mix --seed 1 --seconds 5 --trace 0
+    python3 repobench/run.py --workload query_mix --seed 1 --seconds 20 --trace 0
 
 Workloads: query_mix, table_churn (see repobench/README.md).
 With --trace 0 the result carries the end-to-end metrics; with --trace 1
@@ -181,6 +181,8 @@ def main():
     ap.add_argument("--seconds", required=True, type=float)
     ap.add_argument("--trace", required=True, choices=("0", "1"))
     a = ap.parse_args()
+    # a TERM becomes SystemExit, so the harness JVM is killed below too
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     cp = build()
     t_start = time.time()

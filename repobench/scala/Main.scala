@@ -30,13 +30,17 @@ object Args {
   }
 }
 
-/** What one timed operation did. `latencyNs` covers only the timed
-  * part; checks run outside it. */
-final case class OpResult(latencyNs: Long, ok: Boolean, detail: String = "")
+/** What one operation did; its timed parts are in `Ctx.takeParts`.
+  * Checks run outside the timed parts. */
+final case class OpResult(ok: Boolean, detail: String = "")
+
+/** One timed part of an operation: wall and Java-thread CPU time. */
+final case class Part(name: String, wallNs: Long, cpuNs: Long)
 
 /** Shared by the workloads: the session, the tracer, and a timer that
-  * records each timed window for the driver-gap computation and adds
-  * the Java threads' CPU time spent inside it to `timedCpuNs`. */
+  * records each timed part of the current operation (wall time and the
+  * Java threads' CPU time inside it) and each timed window for the
+  * driver-gap computation. */
 final class Ctx(val spark: SparkSession, val args: Args, val tracer: Tracer) {
   private val threads = ManagementFactory.getThreadMXBean
   /** CPU time of every live Java thread by id. JIT compiler and GC
@@ -44,19 +48,23 @@ final class Ctx(val spark: SparkSession, val args: Args, val tracer: Tracer) {
     * a window depends on how busy the host is, not on the program. */
   private def threadCpu(): Map[Long, Long] =
     threads.getAllThreadIds.map(id => id -> threads.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
-  /** Java-thread CPU time inside `timed` so far. Threads that end
-    * inside a window are not counted. */
-  var timedCpuNs = 0L
-  def timed[T](f: => T): (T, Long) = {
+  private val parts = mutable.ArrayBuffer.empty[Part]
+  /** Times `f` as part `name` of the current operation. Part names are
+    * unique within an operation and the same in every operation. CPU
+    * time of threads that end inside the part is not counted. */
+  def timed[T](name: String)(f: => T): T = {
     val w0 = System.currentTimeMillis()
     val c0 = threadCpu()
     val t0 = System.nanoTime()
     val r = f
     val d = System.nanoTime() - t0
-    timedCpuNs += threadCpu().iterator.map { case (id, c) => c - c0.getOrElse(id, 0L) }.sum
+    val cpu = threadCpu().iterator.map { case (id, c) => c - c0.getOrElse(id, 0L) }.sum
+    parts += Part(name, d, cpu)
     tracer.opWindow(w0, System.currentTimeMillis())
-    (r, d)
+    r
   }
+  /** The parts timed since the last call. */
+  def takeParts(): Seq[Part] = { val p = parts.toList; parts.clear(); p }
   def span[T](name: String)(f: => T): T = tracer.span(name)(f)
 }
 
@@ -107,6 +115,12 @@ object Layers {
 }
 
 object Main {
+  /** An untimed run times `--seconds / OpSeconds` operations (a pass
+    * or a block takes about 7 s on a 4-vCPU host), and at least three,
+    * so that each part has a median of three. */
+  val OpSeconds = 7.0
+  val MinTimedOps = 3
+
   /** Fingerprint of every column of every row: (rows, Σ xxhash64).
     * Order-independent and exact, so no column can be pruned away and
     * partitioning does not matter. */
@@ -175,11 +189,14 @@ object Main {
       attempted += 1
       if (!r.ok) { failed += 1; if (failures.size < 10) failures += s"$tag: ${r.detail}" }
     }
-    def guarded(i: Int, tag: String): OpResult =
-      try wl.op(i)
-      catch { case e: Exception =>
-        OpResult(0L, ok = false, s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300))
-      }
+    def guarded(i: Int, tag: String): (OpResult, Seq[Part]) = {
+      val r =
+        try wl.op(i)
+        catch { case e: Exception =>
+          OpResult(ok = false, s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300))
+        }
+      (r, ctx.takeParts())
+    }
 
     // ---- set-up: session, seeded inputs and state, warm-up ----
     val prep0 = System.nanoTime()
@@ -187,9 +204,9 @@ object Main {
     val prepMs = (System.nanoTime() - prep0) / 1e6
     val warm = (1 to wl.warmupOps).map { w =>
       val t0 = System.nanoTime()
-      val r = guarded(-w, "warm-up")
+      val (r, parts) = guarded(-w, "warm-up")
       account(r, s"warm-up $w")
-      (System.nanoTime() - t0, r.latencyNs / 1e6)
+      (System.nanoTime() - t0, parts.map(_.wallNs).sum / 1e6, parts)
     }
     // let the JIT finish compiling what the warm-up made hot (bounded),
     // and start the timed phase on a collected heap
@@ -198,7 +215,7 @@ object Main {
     val jit = ManagementFactory.getCompilationMXBean
     var jitMs = jit.getTotalCompilationTime
     var idle = 0
-    while (idle < 2 && System.nanoTime() - quiet0 < 10e9) {
+    while (idle < 2 && System.nanoTime() - quiet0 < 3e9) {
       Thread.sleep(250)
       val now = jit.getTotalCompilationTime
       if (now == jitMs) idle += 1 else { idle = 0; jitMs = now }
@@ -208,30 +225,35 @@ object Main {
     val setupS = (sessionMs + prepMs + warmMs) / 1000.0 - wl.inputSeconds
     heapPools.foreach(_.resetPeakUsage())
 
-    // ---- timed loop ----
+    // ---- timed loop: a fixed number of operations, so every run of
+    // a workload times the same operations of its warm-up curve ----
+    val nOps =
+      if (args.trace) wl.traceOps
+      else math.max(MinTimedOps, math.round(args.seconds / OpSeconds).toInt)
     tracer.start()
-    val lat = mutable.ArrayBuffer.empty[Double]
-    val cpu = mutable.ArrayBuffer.empty[Double]
+    val timedParts = mutable.ArrayBuffer.empty[Seq[Part]]
     val jitPerOp = mutable.ArrayBuffer.empty[Long]
-    val loop0 = System.nanoTime()
-    var i = 0
-    def more: Boolean =
-      if (args.trace) i < wl.traceOps
-      else i == 0 || System.nanoTime() - loop0 < (args.seconds * 1e9).toLong
-    while (more) {
-      val cpu0 = ctx.timedCpuNs
+    for (i <- 0 until nOps) {
       val jit0 = jit.getTotalCompilationTime
-      val r = guarded(i, wl.opName)
+      val (r, parts) = guarded(i, wl.opName)
       jitPerOp += jit.getTotalCompilationTime - jit0
       account(r, s"${wl.opName} $i")
-      if (r.ok) { lat += r.latencyNs / 1e6; cpu += (ctx.timedCpuNs - cpu0) / 1e6 }
-      i += 1
+      if (r.ok) timedParts += parts
     }
     val peakHeapMb = heapPools.map(_.getPeakUsage.getUsed.toDouble).sum / (1024.0 * 1024.0)
     val layers = tracer.finish() ++ (if (args.trace) wl.layerMetrics(ctx) else Map.empty)
 
-    val p50 = if (lat.isEmpty) Double.NaN else median(lat.toSeq)
-    val cpuP50 = if (cpu.isEmpty) Double.NaN else median(cpu.toSeq)
+    // an operation's latency is the sum of its parts; the reported one
+    // sums each part's median over the timed operations, so a stall
+    // that hits one part of one operation does not move it
+    val partNames = timedParts.headOption.map(_.map(_.name)).getOrElse(Nil)
+    def partMedianSum(f: Part => Long): Double =
+      if (timedParts.isEmpty) Double.NaN
+      else partNames.map(n => median(timedParts.toSeq.flatMap(_.filter(_.name == n)).map(f(_) / 1e6))).sum
+    val lat = timedParts.map(_.map(_.wallNs).sum / 1e6)
+    val cpu = timedParts.map(_.map(_.cpuNs).sum / 1e6)
+    val p50 = partMedianSum(_.wallNs)
+    val cpuP50 = partMedianSum(_.cpuNs)
     val metrics = new java.util.LinkedHashMap[String, AnyRef]()
     def put(k: String, v: Double, unit: String): Unit = {
       val m = new java.util.LinkedHashMap[String, AnyRef]()
@@ -260,14 +282,22 @@ object Main {
     val warmLat = warm.map(_._2)
     val lastWarm = warmLat.lastOption.getOrElse(Double.NaN)
     rep += s"warm-up ${wl.opName} ms: ${warmLat.map(x => f"$x%.1f").mkString(", ")}; " +
-      f"timed p50 $p50%.1f ms; " +
+      f"timed ${wl.opName} (sum of part medians) $p50%.1f ms; " +
       (if (warmLat.isEmpty || !(p50 > 0)) ""
-       else f"last warm-up ${wl.opName} / timed p50 = ${lastWarm / p50}%.2f " +
+       else f"last warm-up ${wl.opName} / timed = ${lastWarm / p50}%.2f " +
          (if (lastWarm <= 1.25 * p50) "(timed ops are past the steep part of the warm-up curve)"
-          else "(the timed ops are still on the warm-up curve: each runs only once cold first)"))
-    rep += s"timed ${wl.opName} latencies: n=${lat.size} ms=${lat.map(x => f"$x%.1f").mkString(", ")}"
+          else "(the timed ops are still on the warm-up curve; every run times the same " +
+            s"operations of it, n=$nOps)"))
+    rep += s"timed ${wl.opName} latencies: n=${lat.size} ms=${lat.map(x => f"$x%.1f").mkString(", ")}" +
+      f"; plain median ${median(lat.toSeq)}%.1f ms"
     rep += s"timed ${wl.opName} Java-thread CPU ms: ${cpu.map(x => f"$x%.1f").mkString(", ")}; " +
       s"JIT compile ms during each: ${jitPerOp.mkString(", ")}"
+    rep += "part ms (warm-up | timed):"
+    partNames.foreach { n =>
+      def ms(ps: Iterable[Seq[Part]]) =
+        ps.flatMap(_.filter(_.name == n)).map(p => f"${p.wallNs / 1e6}%.1f").mkString(", ")
+      rep += f"  $n%-24s ${ms(warm.map(_._3))} | ${ms(timedParts)}"
+    }
     rep += (tail(lat.toSeq) match {
       case Some((p, v)) => f"op_tail: p$p=$v%.1f ms (n=${lat.size})"
       case None => s"op_tail: omitted (n=${lat.size} < 20)"

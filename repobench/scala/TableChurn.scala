@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** `table_churn`: one SnapshotTable with an incremental MV on it. One
-  * operation is one block of five steps; a step is a write verb
-  * (append, merge, DV delete, DV update, or compactSmall closing the
-  * block) with the MV refresh after it, then a read (full, time-travel,
-  * or a readWhere range read over the commitClustered first version).
-  * A block's latency is the sum of its steps' timed parts. Every read
-  * is compared with an in-benchmark model of that version, and the MV
-  * with the model's aggregate, outside the timing. */
+  * operation is one block of five writes (append, merge, DV delete, DV
+  * update, and compactSmall closing the block), three reads (a readWhere
+  * range read over the commitClustered first version after the merge, a
+  * time-travel read after the delete, a full read after the compaction)
+  * and an MV refresh, which folds the changes of the block's five
+  * commits. Each write, read and the refresh is one timed part; a
+  * block's latency is the sum of its parts. Every read is compared with
+  * an in-benchmark model of that version, and the MV with the model's
+  * aggregate, outside the timing. */
 final class TableChurn(ctx: Ctx) extends Workload {
   import TableChurn._
   private val spark = ctx.spark
@@ -168,37 +170,34 @@ final class TableChurn(ctx: Ctx) extends Workload {
     case "read_where" => table.readWhere(v, "id", range.get._1, range.get._2)
   }
 
-  /** One step: (timed ns, refresh mode, read result, version read, id
-    * range read). Picking the read target is not timed. */
-  private def step(w: String, rv: String): (Long, String, Seq[Long], Long, Option[(Long, Long)]) = {
-    val (mode, writeNs) = ctx.timed {
-      write(w)
+  /** The write, timed as part `w`, then the read `rv` if the step has
+    * one, timed as part `rv@w`; picking the read target is not timed. */
+  override def op(i: Int): OpResult = {
+    val bad = Steps.flatMap { case (w, read) =>
+      ctx.timed(w)(write(w))
+      trackWrites()
+      read.toSeq.flatMap { rv =>
+        val (v, range) = readTarget(rv)
+        val got = ctx.timed(s"$rv@$w")(verbSpan(s"tables.$rv")(aggregate(readDf(rv, v, range))))
+        if (ctx.args.trace && range.isDefined) {
+          rangeFilesRead += readDf(rv, v, range).inputFiles.length
+          rangeFilesTotal += table.read(v).inputFiles.length
+        }
+        val want = expect(model(v).filter { case (k, _) => range.forall { case (lo, hi) => k >= lo && k <= hi } })
+        if (got != want) Seq(s"$rv after $w: got $got expected $want") else Nil
+      }
+    }
+    val mode = ctx.timed("mv_refresh") {
       verbSpan("plans.mv_refresh") {
         val res = MaterializedViews.refresh(mvFp).get
         mvFp = res.fingerprint
         res.mode
       }
     }
-    val (v, range) = readTarget(rv)
-    val (got, readNs) = ctx.timed(verbSpan(s"tables.$rv")(aggregate(readDf(rv, v, range))))
-    (writeNs + readNs, mode, got, v, range)
-  }
-
-  override def op(i: Int): OpResult = {
-    var ns = 0L
-    val bad = Writes.zip(Reads).flatMap { case (w, rv) =>
-      val (t, mode, got, v, range) = step(w, rv)
-      ns += t
-      if (i >= 0) refreshModes += mode
-      if (ctx.args.trace && range.isDefined) {
-        rangeFilesRead += readDf(rv, v, range).inputFiles.length
-        rangeFilesTotal += table.read(v).inputFiles.length
-      }
-      trackWrites()
-      val want = expect(model(v).filter { case (k, _) => range.forall { case (lo, hi) => k >= lo && k <= hi } })
-      (if (got != want) Seq(s"$rv after $w: got $got expected $want") else Nil) ++ checkMv()
-    }
-    OpResult(ns, bad.isEmpty, bad.mkString("; "))
+    if (i >= 0) refreshModes += mode
+    trackWrites()
+    val all = bad ++ checkMv()
+    OpResult(all.isEmpty, all.mkString("; "))
   }
 
   /** The MV's materialization equals the model's per-group aggregate. */
@@ -262,10 +261,11 @@ final case class Rec(grp: Int, v: Long, payload: String)
 
 object TableChurn {
   /** One block: the write verbs in a fixed order (compactSmall last, so
-    * it finds the block's small files), each paired with a read. The
-    * seed picks rows, keys, predicates, versions and ranges. */
-  val Writes: Seq[String] = Seq("append", "merge", "delete", "update", "compact_small")
-  val Reads: Seq[String] = Seq("read", "read_where", "read_version", "read_where", "read")
+    * it finds the block's small files), three of them followed by a
+    * read, one of each kind. The seed picks rows, keys, predicates,
+    * versions and ranges. */
+  val Steps: Seq[(String, Option[String])] = Seq("append" -> None, "merge" -> Some("read_where"),
+    "delete" -> Some("read_version"), "update" -> None, "compact_small" -> Some("read"))
   val verbs: Seq[String] = Seq("append", "merge", "delete", "update", "compact_small",
     "read", "read_version", "read_where")
   val InitialRows = 4000
