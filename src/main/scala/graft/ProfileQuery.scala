@@ -43,6 +43,13 @@ object ProfileQuery {
     }
   }
 
+  /** Warm-up fixture for the dev tools: the smallest sibling
+    * (`sf0.001`) of the configured sf dir, None when absent (then the
+    * first query runs cold — acceptable for a dev tool). */
+  private[graft] def warmDir(sfDir: String): Option[String] =
+    Some(new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001"))
+      .filter(_.isDirectory).map(_.getPath)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -57,25 +64,17 @@ object ProfileQuery {
       val df = SparkEntry.queries(q)(spark, dir)
       if (noop) df.write.format("noop").mode("overwrite").save() else df.count()
     }
-    // warmup fixture: smallest sibling of the configured sfDir (r16
-    // advisor: the hardcoded /root/testdata path broke the profiler on
-    // any machine where only SPARK_GRAFT_SF_DIR exists). Skipped if
-    // absent — first-query JIT noise is acceptable for a dev tool.
-    val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
     args.foreach { q =>
-      if (new java.io.File(warmDir).isDirectory) run(q, warmDir) // warmup
+      warmDir(sfDir).foreach(run(q, _))
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       listener.reset()
       val t0 = System.nanoTime()
       run(q, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
-      // let listener events drain: poll for job-end completeness with
-      // a bounded wait (r16 advisor: a fixed 300 ms sleep under load
-      // silently under-reported job wall / task sums)
-      val deadline = System.nanoTime() + 3000000000L
-      while (listener.jobs.values.exists(_.end == 0L) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
+      // listener events arrive asynchronously: read the metrics only
+      // once the bus has delivered every event the run posted
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       val js = listener.jobs.values.toSeq
       val jobWall = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
       println(f"\n=== $q wall=$wall%.3f s, jobs=${js.size}, " +

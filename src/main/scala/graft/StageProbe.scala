@@ -34,7 +34,7 @@ object StageProbe {
       }
     })
     args.foreach { q =>
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count() // warmup
+      ProfileQuery.warmDir(sfDir).foreach(SparkEntry.queries(q)(spark, _).count())
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       st.clear()
@@ -42,7 +42,7 @@ object StageProbe {
       val n = SparkEntry.queries(q)(spark, sfDir).count()
       println(f"\n=== $q rows=$n time=${(System.nanoTime() - t0) / 1e9}%.3f " +
         f"stages=${st.size} taskSumTotal=${st.values.map(_.ms).sum / 1e3}%.3f")
-      Thread.sleep(500)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       st.toSeq.sortBy(-_._2.ms).take(16).foreach { case (sid, s) =>
         println(f"stage $sid%4d taskSum=${s.ms / 1e3}%8.3f tasks=${s.nTasks}%3d " +
           f"inRec=${s.inRec}%8d shRead=${s.shRead}%8d shWrite=${s.shWrite}%8d")

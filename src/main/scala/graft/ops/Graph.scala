@@ -87,16 +87,14 @@ object Graph extends QueryPack {
     // scale. Derive the count from the EDGE data instead: the
     // generator emits 2·Fanout directed edges (~16 B each) per order
     // row, so edge bytes ≈ 7× the orders parquet footprint; target
-    // ~4 MB per partition, floor 4. One metadata read, no extra job;
-    // at 100 TB the same formula grows the loop width with the graph
-    // (driver partition-invariance audits pin that the COUNT cannot
-    // change results).
-    val parts = {
-      val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-      val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      math.max(4, (bytes * 7 / (4L << 20)).toInt)
-    }
+    // ~4 MB per partition, floor 4. The size comes from the listing
+    // Tables took when rawPairs loaded orders (no extra IO, no job),
+    // and a source that cannot be listed gets the floor. At 100 TB
+    // the same formula grows the loop width with the graph
+    // (partition-invariance audits pin that the COUNT cannot change
+    // results).
+    val parts = Tables.bytes(s, d, "orders")
+      .fold(4)(bytes => math.max(4, (bytes * 7 / (4L << 20)).toInt))
     dir.groupBy("src").agg(collect_set(col("dst")).as("dsts"))
       .select(col("src"), size(col("dsts")).cast("long").as("deg"), col("dsts"))
       .repartition(parts, col("src")).sortWithinPartitions("src").persist()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.StructType
 
 /** Transparent materialized-view rewrite (SURVEY.md §4 "custom
   * pieces", the classic warehouse accelerator): a view is REGISTERED
@@ -520,7 +521,12 @@ object MaterializedViews {
     partial: DataFrame => DataFrame,
     combine: DataFrame => DataFrame,
     finalizeFn: DataFrame => DataFrame,
-    partialDelta: Option[DataFrame => DataFrame] = None)
+    partialDelta: Option[DataFrame => DataFrame],
+    stateSchema: StructType) {
+    /** The persisted state, read with the schema it was written with
+      * (no schema-inference job). */
+    def state: DataFrame = table.spark.read.schema(stateSchema).parquet(statePath)
+  }
 
   private val incremental = new ConcurrentHashMap[String, IncEntry]()
 
@@ -552,16 +558,18 @@ object MaterializedViews {
     val statePath = s"$basePath-state-${java.util.UUID.randomUUID()}"
     val viewPath = s"$basePath-${java.util.UUID.randomUUID()}"
     val fp = fingerprint(query(table.read(version)))
+    val stateDf = combine(partial(table.read(version)))
+    val entry = IncEntry(table, version, statePath, basePath,
+      query, partial, combine, finalize, partialDelta, stateDf.schema)
     withRewriteDisabled {
-      combine(partial(table.read(version))).write.parquet(statePath)
-      finalize(table.spark.read.parquet(statePath)).write.parquet(viewPath)
+      stateDf.write.parquet(statePath)
+      finalize(entry.state).write.parquet(viewPath)
     }
     deadFps.remove(fp)
     rebornFps.add(fp)
     Option(registry.put(fp, Entry(viewPath)))
       .foreach(old => superseded.add((old.path, System.currentTimeMillis())))
-    Option(incremental.put(fp, IncEntry(table, version, statePath, basePath,
-      query, partial, combine, finalize, partialDelta)))
+    Option(incremental.put(fp, entry))
       .foreach(o => superseded.add((o.statePath, System.currentTimeMillis())))
     withRewriteDisabled { indexShape(fp, query(table.read(version))) }
     persist()
@@ -591,7 +599,7 @@ object MaterializedViews {
     val (newStateDf, mode) =
       if (appendOnly) {
         val delta = t.changesBetween(e.version, newVersion)
-        (e.combine(t.spark.read.parquet(e.statePath).unionAll(e.partial(delta))),
+        (e.combine(e.state.unionAll(e.partial(delta))),
           "incremental")
       } else if (e.partialDelta.isDefined && t.isRowTracked(e.version, newVersion)) {
         // RETRACTION-based IVM: every commit in the range records its
@@ -603,13 +611,14 @@ object MaterializedViews {
         // combine-fold retracts (count/sum-style), and finalize drops
         // zero-count groups.
         val delta = t.rowChangesBetween(e.version, newVersion)
-        (e.combine(t.spark.read.parquet(e.statePath)
-          .unionAll(e.partialDelta.get(delta))), "incremental-cdc")
+        (e.combine(e.state.unionAll(e.partialDelta.get(delta))), "incremental-cdc")
       } else (e.combine(e.partial(t.read(newVersion))), "full")
     val inputs = withRewriteDisabled { newStateDf.inputFiles.toSeq }
+    val next = e.copy(version = newVersion, statePath = newStatePath,
+      stateSchema = newStateDf.schema)
     val newFp = withRewriteDisabled {
       newStateDf.write.parquet(newStatePath)
-      e.finalizeFn(t.spark.read.parquet(newStatePath)).write.parquet(newViewPath)
+      e.finalizeFn(next.state).write.parquet(newViewPath)
       fingerprint(e.query(t.read(newVersion)))
     }
     // swap: new fingerprint answers current-version queries; the old
@@ -618,7 +627,7 @@ object MaterializedViews {
     rebornFps.add(newFp)
     Option(registry.put(newFp, Entry(newViewPath)))
       .foreach(old => superseded.add((old.path, System.currentTimeMillis())))
-    incremental.put(newFp, e.copy(version = newVersion, statePath = newStatePath))
+    incremental.put(newFp, next)
     withRewriteDisabled { indexShape(newFp, e.query(t.read(newVersion))) }
     if (newFp != fp) {
       deadFps.putIfAbsent(fp, System.currentTimeMillis())

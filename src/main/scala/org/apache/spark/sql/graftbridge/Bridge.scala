@@ -40,4 +40,11 @@ object Bridge {
         }
       case _ => ()
     }
+
+  /** Block until every event already posted to the listener bus has
+    * been delivered, so counts a SparkListener keeps are complete
+    * when read (the bus is asynchronous; polling a listener's own
+    * state can stop before a queued event arrives). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }
