@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * broadcast per-subspace candidate array `cands:
   * ARRAY<STRUCT<cid: BIGINT, cvec: ARRAY<FLOAT|DOUBLE>>>`, return the
   * cid minimizing (l2sq(sv, cvec), cid) under the total (distance,
-  * id) order — exactly `min_by(cid, struct(d2, cid))` over the k
-  * exploded candidate rows, fused into ONE expression evaluation.
+  * id) order — `min_by(cid, struct(d2, cid))` over the k exploded
+  * candidate rows, fused into ONE expression evaluation, for every
+  * candidate whose d2 is defined (see the null rule below).
   *
   * Why (optimization r17): the quantizer kernels (PQ/IVF+PQ Lloyd
   * assignment and encode) were shaped as broadcast-join row blowups —
@@ -34,10 +35,14 @@ import org.apache.spark.sql.types._
   *    `java.lang.Double.compare` matches Spark's double ordering on
   *    every value reachable here (sums of squares are never -0.0);
   *  - a candidate whose d2 would be null (length mismatch, null cvec
-  *    element) is skipped, as min_by skips null ordering keys; if no
-  *    candidate survives (or `sv` has a null element, nulling every
-  *    d2) the result is null. Inputs here are fixed-width non-null
-  *    slices, so these paths are unreachable on real data.
+  *    element) is SKIPPED — it has no distance, so it cannot be the
+  *    nearest. Here the kernel deliberately departs from the min_by
+  *    formulation: its ordering key struct(d2, cid) is never null even
+  *    when d2 is, and a null field sorts first, so min_by would pick
+  *    the null-d2 candidate. If no candidate survives (or `sv` has a
+  *    null element, nulling every d2) the result is null. Inputs here
+  *    are fixed-width non-null slices, so these paths are unreachable
+  *    on real data; L2KernelsSpec pins the skip.
   */
 case class ArgMinL2(left: Expression, right: Expression)
     extends BinaryExpression {

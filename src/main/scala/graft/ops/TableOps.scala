@@ -241,8 +241,9 @@ object TableOps extends QueryPack {
   }
 
   /** Z-ORDER 2-D data skipping: orders committed sorted by the Morton
-    * interleave of (o_custkey, o_orderkey) with per-file min/max on
-    * BOTH dimensions; a rectangle read opens only intersecting files
+    * interleave of (o_custkey, o_orderkey) — the N-dim z-order with
+    * two keys — with per-file min/max on BOTH dimensions (`#rangen=`
+    * manifest lines); a rectangle read opens only intersecting files
     * (pruning itself asserted in SnapshotTableSpec) and the residual
     * filter makes it row-exact — hash-matched against the oracle's
     * plain 2-D BETWEEN. */
@@ -252,8 +253,8 @@ object TableOps extends QueryPack {
       val df = Tables.orders(s, d).select(
         col("o_custkey").as("cust"), col("o_orderkey").as("k"),
         col("o_totalprice").as("v"))
-      val v1 = t.commitZOrdered(df, "cust", "k", 16)
-      t.readWhere2(v1, 100L, 800L, 1000L, 20000L)
+      val v1 = t.commitZOrderedN(df, Seq("cust", "k"), 16)
+      t.readWhereN(v1, Seq(("cust", 100L, 800L), ("k", 1000L, 20000L)))
         .agg(count(lit(1)).as("n"), Det.dsum(col("v"), 2).as("total"))
         .localCheckpoint(true)
     } finally SnapshotTable.drop(t)
@@ -973,9 +974,10 @@ object TableOps extends QueryPack {
   }
 
   /** OPTIMIZE ZORDER through the gate: an append chain accretes small
-    * files, a DV delete stacks tombstones, then optimizeZOrdered
-    * rewrites the LIVE rows z-clustered on (cust, k) — folding the
-    * tombstones in, coalescing files, and minting 2-D skipping stats.
+    * files, a DV delete stacks tombstones, then optimizeZOrderedN
+    * rewrites the LIVE rows z-clustered on the two keys (cust, k) —
+    * folding the tombstones in, coalescing files, and minting 2-D
+    * `#rangen=` skipping stats.
     * The gated read is a rectangle over the optimized version, so the
     * hash proves the maintenance rewrite lost nothing while the
     * pruning stayed row-exact. */
@@ -988,8 +990,8 @@ object TableOps extends QueryPack {
       t.commit(df.filter(col("k") % 2 === 0))
       t.appendOnce(df.filter(col("k") % 2 === 1), 0L)
       t.delete(col("k") % 9 === 0)
-      val v = t.optimizeZOrdered("cust", "k", 16)
-      t.readWhere2(v, 100L, 800L, 1000L, 20000L)
+      val v = t.optimizeZOrderedN(Seq("cust", "k"), 16)
+      t.readWhereN(v, Seq(("cust", 100L, 800L), ("k", 1000L, 20000L)))
         .agg(count(lit(1)).as("n"), Det.dsum(col("v"), 2).as("total"))
         .localCheckpoint(true)
     } finally SnapshotTable.drop(t)

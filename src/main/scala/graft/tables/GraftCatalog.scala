@@ -717,9 +717,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
       Seq(param("table", StringType), param("key_x", StringType),
         param("key_y", StringType), param("n_files",
           org.apache.spark.sql.types.IntegerType)),
+      // the same key twice is a 1-D z-order: a range sort on that key
       in => oneRow(VersionOut,
-        snapshotOf(in.getUTF8String(0).toString).optimizeZOrdered(
-          in.getUTF8String(1).toString, in.getUTF8String(2).toString,
+        snapshotOf(in.getUTF8String(0).toString).optimizeZOrderedN(
+          Seq(in.getUTF8String(1).toString, in.getUTF8String(2).toString).distinct,
           in.getInt(3)))))
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * manifest-stats FILE pruning — the piece that makes the table's
   * data-skipping layouts ([[SnapshotTable.commitClustered]]'s range
   * stats, [[SnapshotTable.commitClusteredString]]'s truncated string
-  * bounds, [[SnapshotTable.commitZOrdered]]'s 2-D rectangles,
+  * bounds, [[SnapshotTable.commitZOrderedN]]'s N-dim boxes,
   * [[SnapshotTable.commitBloom]]'s point-lookup sidecars) transparent
   * to ANY Spark query: `spark.read.format("graft-table")` pushes its
   * WHERE clause here, the scan plans only intersecting files, and
@@ -230,11 +230,6 @@ private[tables] object ManifestPruning {
     meta.collectFirst { case SnapshotTable.ClusterSMeta(k) => k }.foreach { k =>
       used ++= strBounds(lg(k), filters)._2
     }
-    meta.collectFirst { case SnapshotTable.ZClusterMeta(x, y) => (x, y) }.foreach {
-      case (x, y) =>
-        used ++= longBounds(lg(x), filters)._2
-        used ++= longBounds(lg(y), filters)._2
-    }
     meta.collectFirst { case SnapshotTable.ZClusterNMeta(ks) => ks }.foreach { ks =>
       ks.split('|').foreach(k => used ++= longBounds(lg(k), filters)._2)
     }
@@ -294,42 +289,11 @@ private[tables] object ManifestPruning {
       }
     }
 
-    meta.collectFirst { case SnapshotTable.ZClusterMeta(x, y) => (x, y) }.foreach {
-      case (xKey, yKey) =>
-        val (bx, _) = longBounds(lg(xKey), filters)
-        val (by, _) = longBounds(lg(yKey), filters)
-        if (bx.isBounded || by.isBounded) {
-          val rects: Map[String, (Long, Long, Long, Long)] = meta.collect {
-            case SnapshotTable.Range2Meta(rel, a, b2, c, d) =>
-              rel -> (a.toLong, b2.toLong, c.toLong, d.toLong)
-          }.toMap
-          kept = kept.filter { rel =>
-            rects.get(rel).forall { case (xlo, xhi, ylo, yhi) =>
-              bx.hi.forall(xlo <= _) && bx.lo.forall(xhi >= _) &&
-                by.hi.forall(ylo <= _) && by.lo.forall(yhi >= _)
-            }
-          }
-        }
-    }
-
     meta.collectFirst { case SnapshotTable.ZClusterNMeta(ks) => ks.split('|').toSeq }
       .foreach { keys =>
         val bs = keys.map(k => longBounds(lg(k), filters)._1)
-        if (bs.exists(_.isBounded)) {
-          val rects: Map[String, Seq[Long]] = meta.collect {
-            case SnapshotTable.RangeNMeta(rel, b) =>
-              rel -> b.split('|').toSeq.map(_.toLong)
-          }.toMap
-          kept = kept.filter { rel =>
-            rects.get(rel) match {
-              case Some(b) if b.length == 2 * keys.length =>
-                bs.zipWithIndex.forall { case (bb, j) =>
-                  bb.hi.forall(b(2 * j) <= _) && bb.lo.forall(b(2 * j + 1) >= _)
-                }
-              case _ => true // stat-less or arity-drifted: keep
-            }
-          }
-        }
+        if (bs.exists(_.isBounded))
+          kept = SnapshotTable.boxPrunedFiles(lines, kept, bs.map(b => (b.lo, b.hi)))
       }
 
     meta.collectFirst { case SnapshotTable.BucketMeta(n, k) => (n.toInt, k) }.foreach {
@@ -658,8 +622,6 @@ class GraftTableScan(root: String, version: Long, tableSchema: StructType,
       meta.collectFirst { case SnapshotTable.ClusterSMeta(k) => k } ++
       meta.collectFirst { case SnapshotTable.BloomKMeta(k, _) => k } ++
       meta.collectFirst { case SnapshotTable.BucketMeta(_, k) => k } ++
-      meta.collectFirst { case SnapshotTable.ZClusterMeta(x, y) => x } ++
-      meta.collectFirst { case SnapshotTable.ZClusterMeta(x, y) => y } ++
       meta.collectFirst { case SnapshotTable.ZClusterNMeta(ks) => ks }
         .toSeq.flatMap(_.split('|').toSeq))
       .toArray.distinct

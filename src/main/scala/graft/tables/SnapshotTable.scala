@@ -99,11 +99,9 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   // with the instance read paths — aliased here for pattern matching
   private val RangeMeta = SnapshotTable.RangeMeta
   private val RowsMeta = SnapshotTable.RowsMeta
-  private val Range2Meta = SnapshotTable.Range2Meta
   private val RangeSMeta = SnapshotTable.RangeSMeta
   private val BloomFMeta = SnapshotTable.BloomFMeta
   private val ClusterMeta = SnapshotTable.ClusterMeta
-  private val ZClusterMeta = SnapshotTable.ZClusterMeta
   private val BloomKMeta = SnapshotTable.BloomKMeta
   private val DvMeta = SnapshotTable.DvMeta
 
@@ -185,7 +183,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
 
   /** Parquet scan of `relFiles` with the manifest's deletion vectors
     * applied — the ONE read primitive every read path shares
-    * ([[read]], [[readWhere]], [[readWhere2]], [[mergeBucketed]]'s
+    * ([[read]], [[readWhere]], [[readWhereN]], [[mergeBucketed]]'s
     * touched-bucket read), so row-level deletes are invisible
     * everywhere. DV-free manifests take the plain-scan fast path (no
     * metadata columns, no join in the plan). */
@@ -433,7 +431,6 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
           l == SnapshotTable.DvMinMax => false // re-minted below when valid
         case SnapshotTable.DvRowsMeta(_, _) => false // regenerated merged
         case DvMeta(_) => !priorDvInert // inert carried sidecars drop
-        case RowsMeta(rel, _) => keptSet(rel)
         // a touched file's commit-era bounds are STALE after a re-mint
         // (an extreme may have been tombstoned) — replaced by the fresh
         // lines, or dropped entirely when only null keys survive
@@ -443,10 +440,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
         // still be counted) — replaced by the re-minted lines
         case SnapshotTable.SumMeta(rel, _, _) =>
           keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-        case Range2Meta(rel, _, _, _, _) => keptSet(rel)
-        case RangeSMeta(rel, _, _, _) => keptSet(rel)
-        case SnapshotTable.RangeNMeta(rel, _) => keptSet(rel)
-        case BloomFMeta(rel, _) => keptSet(rel)
+        case SnapshotTable.FileStat(rel) => keptSet(rel)
         case _ => true
       }
       val tmp = writeTmpManifest(version, schema,
@@ -628,10 +622,6 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
         case l if l == SnapshotTable.DvMinMax => false // re-minted above when alive
         case ClusterMeta(_) => false // re-emitted full or weakened above
         case SnapshotTable.ClusterPartMeta(_) => false
-        // #rows survives (paired with #dvrows), and the post-image
-        // files mint their own counts below — live = Σrows − Σdvrows
-        // stays exact, so metaCount answers straight through updates
-        case RowsMeta(rel, _) => keptSet(rel)
         // post-image files are not bucket-addressed, so a carried
         // bucket spec would lie to the next mergeBucketed — drop it
         // (the merge then refuses loudly instead of mis-routing)
@@ -645,10 +635,10 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
         // attempted; stale-conservative (pruning-safe) otherwise
         case RangeMeta(rel, _, _) =>
           keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-        case Range2Meta(rel, _, _, _, _) => keptSet(rel)
-        case RangeSMeta(rel, _, _, _) => keptSet(rel)
-        case SnapshotTable.RangeNMeta(rel, _) => keptSet(rel)
-        case BloomFMeta(rel, _) => keptSet(rel)
+        // #rows survives (paired with #dvrows), and the post-image
+        // files mint their own counts below — live = Σrows − Σdvrows
+        // stays exact, so metaCount answers straight through updates
+        case SnapshotTable.FileStat(rel) => keptSet(rel)
         case _ => true
       }
       val postRowsLines = postStats.map(_._3).getOrElse(footerRowsLines(newFiles))
@@ -812,7 +802,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * it keeps: counts/ranges/sums/bloom sidecars stay valid per file
     * (every consumer keeps stat-less new files conservatively), and
     * tombstone ledgers are untouched by an append. Whole-table layout
-    * claims (#clusters/#zcluster/#buckets) are NOT carried — a
+    * claims (#clusters/#zclustern/#buckets) are NOT carried — a
     * min/max/sum answered from stats that do not cover the new files
     * would be silently wrong, so those consumers must refuse. The
     * Long-domain `#cluster=` claim is the exception WHEN the caller
@@ -823,12 +813,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   private def appendStatCarry(prev: Vector[String],
       carriedSet: Set[String], newFilesCovered: Boolean = false): Vector[String] = {
     val kept = prev.drop(2).filter {
-      case RowsMeta(rel, _) => carriedSet(rel)
-      case SnapshotTable.SumMeta(rel, _, _) => carriedSet(rel)
-      case RangeMeta(rel, _, _) => carriedSet(rel)
-      case Range2Meta(rel, _, _, _, _) => carriedSet(rel)
-      case RangeSMeta(rel, _, _, _) => carriedSet(rel)
-      case BloomFMeta(rel, _) => carriedSet(rel)
+      case SnapshotTable.FileStat(rel) => carriedSet(rel)
       case SnapshotTable.DvRowsMeta(_, _) => true // no new tombstones
       case l if l == SnapshotTable.DvMinMax => true // claim unchanged
       case BloomKMeta(_, _) => true // sidecar-less files kept conservatively
@@ -1131,16 +1116,12 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       // otherwise
       case SnapshotTable.SumMeta(rel, _, _) =>
         keptSet(rel) && !touchedKeptSet(rel)
-      case RowsMeta(rel, _) => keptSet(rel)
       case BucketMeta(_, _) => dataRels.isEmpty
       // touched bounds: replaced by the fresh re-mint when attempted;
       // stale-conservative (pruning-safe) otherwise
       case RangeMeta(rel, _, _) =>
         keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-      case Range2Meta(rel, _, _, _, _) => keptSet(rel)
-      case RangeSMeta(rel, _, _, _) => keptSet(rel)
-      case SnapshotTable.RangeNMeta(rel, _) => keptSet(rel)
-      case BloomFMeta(rel, _) => keptSet(rel)
+      case SnapshotTable.FileStat(rel) => keptSet(rel)
       case _ => true
     }
     val (cdcSnap, cdcLines) = writeCdcData(deltaCdc(baseLines, dvRels,
@@ -1867,7 +1848,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     // appends pay no driver-side footer reads (the counts ride the
     // same pass). Without a claim, fresh files mint footer counts
     // only; carried files keep their per-file stat lines either way,
-    // and the other whole-table layout claims (#clusters/#zcluster/
+    // and the other whole-table layout claims (#clusters/#zclustern/
     // #buckets) still die — their stats would not cover the new files.
     val mintKeyPhys: Option[String] =
       if (version == 1) None
@@ -2659,157 +2640,42 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   }
 
   /** Z-ORDERED snapshot commit: rows sorted by the Morton interleave
-    * of TWO (encoded) key dimensions and range-partitioned into
-    * `nFiles` z-contiguous files, with per-file [min, max] stats ON
-    * BOTH dimensions in the manifest. The interleave bounds each
-    * file's span in EACH dimension (the q_zorder tile property), so a
-    * 2-D range read ([[readWhere2]]) opens only files whose rectangle
-    * intersects the query's — the layout single-key clustering cannot
-    * give (one clustered dimension leaves the other's per-file range
-    * ~full-width). Each dimension is min/max-normalized into `bits`-
-    * wide coordinates first (one extra O(data) agg pass at write
-    * time); keys may be integral, timestamp or date, encoded exactly
-    * as in [[commitClustered]]. */
-  def commitZOrdered(df: DataFrame, keyX: String, keyY: String, nFiles: Int,
-      bits: Int = 12): Long =
-    // optimizeZOrdered skips the guard: it rewrites the table's own
-    // already-validated rows
-    zOrderedInternal(guarded(df), keyX, keyY, nFiles, bits, tracked = false)
-
-  /** OPTIMIZE: rewrite the CURRENT version's live rows Z-ordered on
-    * (keyX, keyY) — Delta's `OPTIMIZE ... ZORDER BY`. Reads through
-    * [[read]], so deletion vectors FOLD IN and small files coalesce
-    * while the layout gains 2-D skipping stats; content-identical, so
-    * the commit tracks zero row-level changes (change-feed consumers
-    * skip it, like [[compact]]). The maintenance op a 100 TB event
-    * table runs nightly: one O(live data) rewrite buys every
-    * subsequent rectangle read its file pruning. */
-  def optimizeZOrdered(keyX: String, keyY: String, nFiles: Int,
-      bits: Int = 12): Long =
-    zOrderedInternal(read(), keyX, keyY, nFiles, bits, tracked = true)
-
-  private def zOrderedInternal(df: DataFrame, keyX: String, keyY: String,
-      nFiles: Int, bits: Int, tracked: Boolean): Long = {
-    val xEnc = statLongExpr(df.schema(keyX).dataType, keyX)
-    val yEnc = statLongExpr(df.schema(keyY).dataType, keyY)
-    val statHead = df.agg(min(xEnc), max(xEnc), min(yEnc), max(yEnc)).head()
-    // empty (or all-null-key) input degenerates to trivial bounds:
-    // null keys get a null z, pool into the first range partition,
-    // and that file records no stats — pruning conservatively keeps
-    // stat-less files, mirroring commitClustered's null treatment
-    val (xLo, xHi, yLo, yHi) =
-      if (statHead.isNullAt(0) || statHead.isNullAt(2)) (0L, 0L, 0L, 0L)
-      else (statHead.getLong(0), statHead.getLong(1),
-        statHead.getLong(2), statHead.getLong(3))
-    val side = (1L << bits) - 1
-    // divide-first scaling: step = range/side keeps every intermediate
-    // within Long even for epoch-micros keys (multiply-first would
-    // overflow at ~Long.Max/side range width)
-    def scaled(enc: org.apache.spark.sql.Column, lo: Long, hi: Long) = {
-      val step = math.max(1L, (hi - lo) / side)
-      least((enc - lit(lo)) / lit(step), lit(side)).cast("long")
-    }
-    val z = (0 until bits).map { i =>
-      shiftleft(shiftright(scaled(xEnc, xLo, xHi), i).bitwiseAND(lit(1L)), 2 * i) +
-        shiftleft(shiftright(scaled(yEnc, yLo, yHi), i).bitwiseAND(lit(1L)), 2 * i + 1)
-    }.reduce(_ + _)
-    val version = currentVersion + 1
-    val snap = dataDir.resolve(s"v$version-${UUID.randomUUID()}")
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.parquet(snap.toString)
-    val statRows = spark.read.parquet(snap.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(xEnc).as("xlo"), max(xEnc).as("xhi"),
-        min(yEnc).as("ylo"), max(yEnc).as("yhi"))
-      .collect() // nFiles rows — bounded driver metadata
-    val byName = statRows.filterNot(r => (1 to 4).exists(r.isNullAt)).map { r =>
-      r.getString(0).split('/').last ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    }.toMap
-    val files = listParquetRec(snap).map(p => rootPath.relativize(p).toString).sorted
-    val statLines = files.flatMap { rel =>
-      byName.get(rel.split('/').last).map { case (a, b, c, dd) =>
-        s"#range2=$rel|$a|$b|$c|$dd" }
-    }
-    val head =
-      if (tracked) Vector(SnapshotTable.CdcTracked, s"#zcluster=$keyX|$keyY")
-      else Vector(s"#zcluster=$keyX|$keyY")
-    val tmp = writeTmpManifest(version, df.schema,
-      (head ++ statLines) ++ files, op = if (tracked) "OPTIMIZE" else "WRITE")
-    try publish(version, tmp)
-    catch { case e: CommitConflictException =>
-      deleteRecursively(snap); throw e
-    }
-    version
-  }
-
-  /** Files of `version` whose 2-D stats rectangle intersects the
-    * query rectangle; files without stats are conservatively kept. */
-  def prunedFiles2(version: Long, xLo: Long, xHi: Long,
-      yLo: Long, yHi: Long): Seq[String] = {
-    val lines = manifestLines(version)
-    val rects: Map[String, (Long, Long, Long, Long)] = lines.drop(2).collect {
-      case Range2Meta(rel, a, b, c, d) => rel -> (a.toLong, b.toLong, c.toLong, d.toLong)
-    }.toMap
-    manifestFiles(lines).filter { rel =>
-      rects.get(rel) match {
-        case Some((a, b, c, d)) => a <= xHi && b >= xLo && c <= yHi && d >= yLo
-        case None => true
-      }
-    }
-  }
-
-  /** 2-D range read over a z-ordered version: manifest rectangle
-    * pruning, then the exact residual filter on both dimensions. */
-  def readWhere2(version: Long, xLo: Long, xHi: Long,
-      yLo: Long, yHi: Long): DataFrame = {
-    val lines = manifestLines(version)
-    val (kx, ky) = lines.drop(2).collectFirst {
-      case ZClusterMeta(x, y) =>
-        (SnapshotTable.logicalNameFor(lines, x),
-          SnapshotTable.logicalNameFor(lines, y))
-    }.getOrElse(throw new IllegalArgumentException(
-      s"version $version is not z-ordered"))
-    val schema = schemaOf(lines)
-    val base = scanWithDv(lines, prunedFiles2(version, xLo, xHi, yLo, yHi))
-    val xe = statLongExpr(schema(kx).dataType, kx)
-    val ye = statLongExpr(schema(ky).dataType, ky)
-    base.filter(xe >= xLo && xe <= xHi && ye >= yLo && ye <= yHi)
-  }
-
-  /** N-DIMENSIONAL Z-ORDER commit (generalizes [[commitZOrdered]]'s
-    * 2-D Morton interleave to 3+ dimensions): bit `i` of dimension
-    * `j` lands at interleaved position `N·i + j`, rows sort by the
-    * interleave into `nFiles` z-contiguous files, and EVERY file
-    * records per-dimension [min, max] bounds (`#rangen=` lines) in
-    * the manifest, so an N-dimensional box read ([[readWhereN]])
-    * opens only files whose hyper-rectangle intersects the query's.
-    * The layout trade vs single-key clustering compounds with N: one
-    * clustered dimension leaves every other dimension's per-file
-    * span ~full-width, while the interleave bounds all N at
-    * granularity 2^bits each. `keys.size × bits` must stay under 63
-    * (the interleave lives in one Long); each dimension min/max-
-    * normalizes into `bits`-wide coordinates exactly as the 2-D path
-    * does, with the same integral/timestamp/date encoding and
-    * null-key pooling. */
+    * of N (encoded) key dimensions and range-partitioned into
+    * `nFiles` z-contiguous files. Bit `i` of dimension `j` lands at
+    * interleaved position `N·i + j`, and EVERY file records
+    * per-dimension [min, max] bounds (`#rangen=` lines) in the
+    * manifest, so a box read ([[readWhereN]]) opens only files whose
+    * hyper-rectangle intersects the query's. The interleave bounds
+    * each file's span in EVERY dimension (the q_zorder tile
+    * property) at granularity 2^bits, where one clustered dimension
+    * leaves every other dimension's per-file span ~full-width. N = 1
+    * is a range sort on the one key; N = 2 is the classic 2-D
+    * Z-order. Each dimension is min/max-normalized into `bits`-wide
+    * coordinates first (one extra O(data) agg pass at write time);
+    * keys may be integral, timestamp or date, encoded exactly as in
+    * [[commitClustered]], and `keys.size × bits` must stay under 63
+    * (the interleave lives in one Long). */
   def commitZOrderedN(df: DataFrame, keys: Seq[String], nFiles: Int,
       bits: Int = 12): Long =
+    // optimizeZOrderedN skips the guard: it rewrites the table's own
+    // already-validated rows
     zOrderedNInternal(guarded(df), keys, nFiles, bits, tracked = false)
 
-  /** OPTIMIZE ZORDER BY (k1, …, kN): rewrite the current version's
-    * live rows N-dim z-ordered — DVs fold in, small files coalesce,
-    * content-identical (feed consumers skip it), like
-    * [[optimizeZOrdered]]. */
+  /** OPTIMIZE ZORDER BY (k1, …, kN): rewrite the CURRENT version's
+    * live rows z-ordered — Delta's `OPTIMIZE ... ZORDER BY`. Reads
+    * through [[read]], so deletion vectors FOLD IN and small files
+    * coalesce while the layout gains N-dim skipping stats;
+    * content-identical, so the commit tracks zero row-level changes
+    * (change-feed consumers skip it, like [[compact]]). The
+    * maintenance op a 100 TB event table runs nightly: one O(live
+    * data) rewrite buys every subsequent box read its file pruning. */
   def optimizeZOrderedN(keys: Seq[String], nFiles: Int, bits: Int = 12): Long =
     zOrderedNInternal(read(), keys, nFiles, bits, tracked = true)
 
   private def zOrderedNInternal(df: DataFrame, keys: Seq[String],
       nFiles: Int, bits: Int, tracked: Boolean): Long = {
     val n = keys.size
-    require(n >= 2, s"z-order needs >= 2 dimensions, got $keys")
+    require(n >= 1, s"z-order needs >= 1 dimension, got $keys")
     require(keys.distinct.size == n, s"z-order keys must be distinct: $keys")
     require(n * bits < 64,
       s"$n dims x $bits bits exceeds the 63-bit interleave budget")
@@ -2817,15 +2683,18 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     val encs = keys.map(k => statLongExpr(df.schema(k).dataType, k))
     val aggExprs = encs.flatMap(e => Seq(min(e), max(e)))
     val statHead = df.agg(aggExprs.head, aggExprs.tail: _*).head()
-    // empty/all-null dims degenerate to trivial bounds, like the 2-D
-    // path: null keys get a null z, pool into the first partition,
-    // and their file records no stats (conservatively kept)
+    // empty (or all-null-key) dims degenerate to trivial bounds: null
+    // keys get a null z, pool into the first range partition, and
+    // their file records no stats — pruning conservatively keeps
+    // stat-less files, mirroring commitClustered's null treatment
     val loHis: Seq[(Long, Long)] = keys.indices.map { j =>
       if (statHead.isNullAt(2 * j) || statHead.isNullAt(2 * j + 1)) (0L, 0L)
       else (statHead.getLong(2 * j), statHead.getLong(2 * j + 1))
     }
     val side = (1L << bits) - 1
-    // divide-first scaling — see zOrderedInternal's overflow note
+    // divide-first scaling: step = range/side keeps every intermediate
+    // within Long even for epoch-micros keys (multiply-first would
+    // overflow at ~Long.Max/side range width)
     def scaled(enc: org.apache.spark.sql.Column, lo: Long, hi: Long) = {
       val step = math.max(1L, (hi - lo) / side)
       least((enc - lit(lo)) / lit(step), lit(side)).cast("long")
@@ -2875,18 +2744,8 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * committed key order); stat-less files conservatively kept. */
   def prunedFilesN(version: Long, box: Seq[(Long, Long)]): Seq[String] = {
     val lines = manifestLines(version)
-    val rects: Map[String, Seq[Long]] = lines.drop(2).collect {
-      case SnapshotTable.RangeNMeta(rel, b) => rel -> b.split('|').toSeq.map(_.toLong)
-    }.toMap
-    manifestFiles(lines).filter { rel =>
-      rects.get(rel) match {
-        case Some(b) if b.length == 2 * box.length =>
-          box.zipWithIndex.forall { case ((lo, hi), j) =>
-            b(2 * j) <= hi && b(2 * j + 1) >= lo
-          }
-        case _ => true
-      }
-    }
+    SnapshotTable.boxPrunedFiles(lines, manifestFiles(lines),
+      box.map { case (lo, hi) => (Some(lo), Some(hi)) })
   }
 
   /** N-dim box read over an N-z-ordered version: manifest
@@ -3024,13 +2883,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       // fresh files minted exact ones — keep it only while DVs (and
       // therefore the claim) still exist
       case l if l == SnapshotTable.DvMinMax => dvLines.nonEmpty
-      case RowsMeta(rel, _) => bigSet(rel)
-      case SnapshotTable.SumMeta(rel, _, _) => bigSet(rel)
-      case RangeMeta(rel, _, _) => bigSet(rel)
-      case Range2Meta(rel, _, _, _, _) => bigSet(rel)
-      case RangeSMeta(rel, _, _, _) => bigSet(rel)
-      case SnapshotTable.RangeNMeta(rel, _) => bigSet(rel)
-      case BloomFMeta(rel, _) => bigSet(rel)
+      case SnapshotTable.FileStat(rel) => bigSet(rel)
       case _ => true
     }
     val newRowsLines = newStats.map(_._3).getOrElse(footerRowsLines(newFiles))
@@ -3051,7 +2904,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * sidecar set per commit, and every read pays one sidecar-set load
     * per stacked delete; this maintenance verb folds them at
     * O(tombstones) cost — NO data file is read or rewritten (compare
-    * [[compact]]/[[optimizeZOrdered]], which fold DVs by rewriting
+    * [[compact]]/[[optimizeZOrderedN]], which fold DVs by rewriting
     * data). Inert entries addressing files no longer in the manifest
     * are dropped on the way through. Entries are disjoint across
     * stacked sidecars by construction (every delete tombstones LIVE
@@ -3351,14 +3204,12 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
         l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
         l.startsWith("#op=") || l == SnapshotTable.CdcTracked => None
       case DvMeta(rel) => Some(s"#dv=${abs(rel)}")
-      case RowsMeta(rel, n) => Some(s"#rows=${abs(rel)}|$n")
-      case RangeMeta(rel, a, b) => Some(s"#range=${abs(rel)}|$a|$b")
-      case Range2Meta(rel, a, b, c, d) => Some(s"#range2=${abs(rel)}|$a|$b|$c|$d")
-      case RangeSMeta(rel, lo64, hi64, unb) =>
-        Some(s"#ranges=${abs(rel)}|$lo64|$hi64|$unb")
       case BloomFMeta(rel, bloomRel) =>
         Some(s"#bloomf=${abs(rel)}|${abs(bloomRel)}")
-      case l if l.startsWith("#") => Some(l) // cluster/zcluster/buckets/bloomk
+      // the path sits right after the kind's '='
+      case l @ SnapshotTable.FileStat(rel) =>
+        Some(l.patch(l.indexOf('=') + 1, abs(rel), rel.length))
+      case l if l.startsWith("#") => Some(l) // layout claims, #dvrows (address-keyed)
       case rel => Some(abs(rel))
     }
     val clone = SnapshotTable(spark, destRoot)
@@ -3617,15 +3468,49 @@ object SnapshotTable {
   // per-file key SUM + non-null count (integral cluster keys only):
   // powers metadata-only SUM/AVG the same way #range powers MIN/MAX
   private[tables] val SumMeta = """#sum=([^|]+)\|(-?\d+)\|(\d+)""".r
-  private[tables] val ZClusterMeta = """#zcluster=([^|]+)\|(.+)""".r
   // N-dim z-order: keys joined by '|'; per-file bounds as lo|hi pairs
   // in key order
   private[tables] val ZClusterNMeta = """#zclustern=(.+)""".r
   private[tables] val RangeNMeta = """#rangen=([^|]+)\|(-?\d+(?:\|-?\d+)+)""".r
-  private[tables] val Range2Meta = """#range2=([^|]+)\|(-?\d+)\|(-?\d+)\|(-?\d+)\|(-?\d+)""".r
   private[tables] val RangeSMeta = """#ranges=([^|]+)\|([^|]*)\|([^|]*)\|([01])""".r
   private[tables] val BloomKMeta = """#bloomk=([^ ]+) fpp=(.+)""".r
   private[tables] val BloomFMeta = """#bloomf=([^|]+)\|(.+)""".r
+
+  /** PER-FILE stat lines, `<kind><data-file path>|<stats>`: the one
+    * list of the kinds that describe a single data file. Writers keep
+    * or drop them with their file, [[SnapshotTable#shallowCloneTo]]
+    * re-roots their path, and manifest segmentation spills them with
+    * the file list ([[isSegmentable]]). Matching yields the path. */
+  private[tables] object FileStat {
+    private val Kinds =
+      Seq("#rows=", "#range=", "#ranges=", "#rangen=", "#sum=", "#bloomf=")
+    def unapply(l: String): Option[String] =
+      Kinds.find(l.startsWith).flatMap { k =>
+        val bar = l.indexOf('|', k.length)
+        if (bar < 0) None else Some(l.substring(k.length, bar))
+      }
+  }
+
+  /** Files among `files` whose `#rangen=` hyper-rectangle meets `box`
+    * (per-dimension closed [lo, hi] in committed key order, None =
+    * unbounded); stat-less or arity-drifted files are conservatively
+    * kept. Shared by [[SnapshotTable#prunedFilesN]] and the DSv2
+    * scan's pushdown. */
+  private[tables] def boxPrunedFiles(lines: Vector[String], files: Vector[String],
+      box: Seq[(Option[Long], Option[Long])]): Vector[String] = {
+    val rects: Map[String, Seq[Long]] = lines.drop(2).collect {
+      case RangeNMeta(rel, b) => rel -> b.split('|').toSeq.map(_.toLong)
+    }.toMap
+    files.filter { rel =>
+      rects.get(rel) match {
+        case Some(b) if b.length == 2 * box.length =>
+          box.zipWithIndex.forall { case ((lo, hi), j) =>
+            hi.forall(b(2 * j) <= _) && lo.forall(b(2 * j + 1) >= _)
+          }
+        case _ => true
+      }
+    }
+  }
   private[tables] val OpMeta = """#op=([^ ]+) ts=(\d+)""".r
   private[tables] val ConstraintMeta = """#constraint=([^|]+)\|(.+)""".r
 
@@ -3813,14 +3698,12 @@ object SnapshotTable {
   private[tables] val SegMaxChunk = 512
   private[tables] val SegMeta = """#seg=(.+)""".r
 
-  /** Per-FILE manifest content — eligible to live in segment files.
-    * Table-level and per-commit metadata stays inline in the stub. */
+  /** Per-FILE manifest content — data paths, their [[FileStat]]
+    * lines and the address-keyed `#dvrows=` tombstone counts — is
+    * eligible to live in segment files. Table-level and per-commit
+    * metadata stays inline in the stub. */
   private[tables] def isSegmentable(l: String): Boolean =
-    !l.startsWith("#") ||
-      l.startsWith("#rows=") || l.startsWith("#range=") ||
-      l.startsWith("#range2=") || l.startsWith("#ranges=") ||
-      l.startsWith("#bloomf=") || l.startsWith("#dvrows=") ||
-      l.startsWith("#sum=")
+    !l.startsWith("#") || FileStat.unapply(l).isDefined || l.startsWith("#dvrows=")
 
   /** Content-defined chunking: a boundary lands after any line whose
     * hash has its low bits clear, so insertions and removals only

@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Optimization-r17 kernels: the native fused L2SqDistance and
   * ArgMinL2 expressions must be BIT-equal to the HOF/min_by
@@ -101,6 +102,30 @@ class L2KernelsSpec extends SparkSpec {
       .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
     assert(fused.join(reference, Seq("id"))
       .filter(fused("cid") =!= reference("cid")).count() === 0)
+  }
+
+  test("ArgMinL2: a candidate with a null cvec element is skipped, unlike min_by") {
+    // cid 0 would be nearest but has no distance; cid 1 is the nearest
+    // candidate that has one
+    val candType = "array<struct<cid: bigint, cvec: array<double>>>"
+    val df = Seq((Seq(0.0, 0.0),
+      Seq((0L, Seq[java.lang.Double](null, 0.0)), (1L, Seq[java.lang.Double](5.0, 5.0)),
+        (2L, Seq[java.lang.Double](6.0, 6.0)))))
+      .toDF("sv", "cands")
+      .select(col("sv"), col("cands").cast(candType).as("cands"))
+    val fused = df.select(ArgMinL2.argmin_l2(col("sv"), col("cands"))).head()
+    assert(fused.getLong(0) == 1L)
+    // the interpreted path agrees with the generated code
+    val in = df.head()
+    val interp = ArgMinL2(
+      Literal.create(in.getSeq[Double](0), df.schema("sv").dataType),
+      Literal.create(in.getSeq[Row](1), df.schema("cands").dataType)).eval()
+    assert(interp == 1L)
+    // the min_by-over-struct twin orders the null d2 first and picks cid 0
+    val reference = df.select(col("sv"), explode(col("cands")).as("c"))
+      .select(col("c.cid").as("cid"), hofL2(col("sv"), col("c.cvec")).as("d2"))
+      .agg(min_by(col("cid"), struct(col("d2"), col("cid")))).head()
+    assert(reference.getLong(0) == 0L)
   }
 
   test("ArgMinL2: empty candidate array yields null") {

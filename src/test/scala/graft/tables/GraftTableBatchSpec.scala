@@ -147,10 +147,10 @@ class GraftTableBatchSpec extends SparkSpec {
     try {
       val df = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y, x * 64 + y))
         .toDF("x", "y", "v")
-      val v = t.commitZOrdered(df, "x", "y", 16)
+      val v = t.commitZOrderedN(df, Seq("x", "y"), 16)
       val q = load(t).filter(col("x") >= 8L && col("x") <= 23L &&
         col("y") >= 8L && col("y") <= 23L)
-      val expected = t.prunedFiles2(v, 8L, 23L, 8L, 23L).size
+      val expected = t.prunedFilesN(v, Seq((8L, 23L), (8L, 23L))).size
       assert(q.rdd.getNumPartitions == expected)
       assert(expected <= 4, s"16x16 rectangle should open <=4 of 16 files, got $expected")
       assert(q.count() == 256)

@@ -573,22 +573,23 @@ class SnapshotTableSpec extends SparkSpec {
       val rows = spark.range(0, 4096).select(
         (col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"),
         col("id").cast("double").as("v"))
-      val v = t.commitZOrdered(rows, "x", "y", 16)
-      val all = t.prunedFiles2(v, Long.MinValue, Long.MaxValue, Long.MinValue, Long.MaxValue)
+      val v = t.commitZOrderedN(rows, Seq("x", "y"), 16)
+      val full = (Long.MinValue, Long.MaxValue)
+      val all = t.prunedFilesN(v, Seq(full, full))
       assert(all.size == 16, all.toString)
       // a small rectangle: far fewer than all files (z-locality in BOTH dims)
-      val few = t.prunedFiles2(v, 0L, 15L, 0L, 15L)
+      val few = t.prunedFilesN(v, Seq((0L, 15L), (0L, 15L)))
       assert(few.size <= 4, s"expected <=4 of 16 files, got ${few.size}")
       // row-exactness vs the brute-force filter
-      val got = t.readWhere2(v, 10L, 20L, 30L, 40L)
+      val got = t.readWhereN(v, Seq(("x", 10L, 20L), ("y", 30L, 40L)))
         .agg(count(lit(1)), sum("v")).head()
       val want = t.read(v)
         .filter(col("x").between(10, 20) && col("y").between(30, 40))
         .agg(count(lit(1)), sum("v")).head()
       assert(got == want, s"$got != $want")
       // pruning on EACH dimension alone also bites
-      assert(t.prunedFiles2(v, 0L, 7L, Long.MinValue, Long.MaxValue).size < 16)
-      assert(t.prunedFiles2(v, Long.MinValue, Long.MaxValue, 0L, 7L).size < 16)
+      assert(t.prunedFilesN(v, Seq((0L, 7L), full)).size < 16)
+      assert(t.prunedFilesN(v, Seq(full, (0L, 7L))).size < 16)
     } finally SnapshotTable.drop(t)
   }
 
@@ -1073,6 +1074,8 @@ class SnapshotTableSpec extends SparkSpec {
         assert(cl.prunedFiles(1L, 2L, 3L).size < filesOf(t, v1).size)
         assert(cl.readWhere(1L, "k", 2L, 3L).as[(Long, Double)].collect()
           .map(_._1).sorted.toSeq == Seq(2L, 3L))
+        // per-file key sums are re-rooted too: the zero-IO SUM answers
+        assert(cl.metaSum(1L) == t.metaSum(t.currentVersion))
         // divergence: writes to the clone never touch the source
         cl.appendOnce(kv(100L -> 100.0), 0L)
         cl.delete(col("k") === 1L)
@@ -1082,6 +1085,40 @@ class SnapshotTableSpec extends SparkSpec {
         assert(filesOf(t, t.currentVersion) == filesOf(t, 2L))
       } finally SnapshotTable.drop(cl)
     } finally SnapshotTable.drop(t)
+    // a z-ordered clone keeps its #rangen= box pruning
+    val z = freshTable("clone_z_src")
+    try {
+      val grid = for { x <- 0L until 64L; y <- 0L until 64L } yield (x, y)
+      val zv = z.commitZOrderedN(grid.toDF("x", "y"), Seq("x", "y"), 16)
+      val zcl = z.shallowCloneTo(Files.createTempDirectory("graft_spec_clone_z_").toString)
+      try {
+        val box = Seq((0L, 15L), (0L, 15L))
+        val srcKept = z.prunedFilesN(zv, box).size
+        assert(srcKept <= 4, s"source kept $srcKept of 16 files")
+        assert(zcl.prunedFilesN(1L, box).size == srcKept)
+        assert(zcl.readWhereN(1L, Seq(("x", 0L, 15L), ("y", 0L, 15L))).count() == 256L)
+      } finally SnapshotTable.drop(zcl)
+    } finally SnapshotTable.drop(z)
+  }
+
+  test("isSegmentable: every per-file stat line kind spills, head lines stay inline") {
+    val rel = "data/v1-0/part-00000.parquet"
+    val perFile = Seq(
+      s"#rows=$rel|10", s"#range=$rel|1|5", s"#ranges=$rel|YQ==|Yg==|0",
+      s"#rangen=$rel|1|5|-2|7", s"#sum=$rel|15|5", s"#bloomf=$rel|data/bloom-0/b.bin")
+    perFile.foreach { l =>
+      assert(SnapshotTable.FileStat.unapply(l).contains(rel), l)
+      assert(SnapshotTable.isSegmentable(l), l)
+    }
+    assert(SnapshotTable.isSegmentable(rel))
+    assert(SnapshotTable.isSegmentable("#dvrows=v1-0/part-00000.parquet|3"))
+    Seq("#zclustern=x|y", "#cluster=k", "#clusters=s", "#clusterpart=k",
+      "#op=WRITE ts=1", "#buckets=4 key=k", "#bloomk=k fpp=0.01",
+      "#constraint=pos|k > 0", "#dv=data/v2-dv/part-0.parquet", "#dvminmax",
+      SnapshotTable.CdcTracked).foreach { l =>
+      assert(SnapshotTable.FileStat.unapply(l).isEmpty, l)
+      assert(!SnapshotTable.isSegmentable(l), l)
+    }
   }
 
   test("commitExpect quarantines violators atomically with the commit, tagged by first failed constraint") {
@@ -1134,14 +1171,15 @@ class SnapshotTableSpec extends SparkSpec {
       t.commit(df.filter(col("x") % 2 === 0))
       t.appendOnce(df.filter(col("x") % 2 === 1), 0L)
       t.delete(col("x") === 10L)
-      val v = t.optimizeZOrdered("x", "y", 16)
+      val v = t.optimizeZOrderedN(Seq("x", "y"), 16)
       // DVs folded into the rewrite; manifest sheds its #dv lines
       assert(dvLinesOf(t, v).isEmpty)
       assert(t.read(v).count() == 64L * 64L - 64L)
       // the optimized layout prunes rectangles like a fresh z-commit
-      val pruned = t.prunedFiles2(v, 0L, 15L, 0L, 15L)
+      val pruned = t.prunedFilesN(v, Seq((0L, 15L), (0L, 15L)))
       assert(pruned.size <= 4, s"16x16 rectangle over 64x64 opened ${pruned.size} of 16 files")
-      assert(t.readWhere2(v, 0L, 15L, 0L, 15L).count() == 15L * 16L) // x==10 deleted
+      assert(t.readWhereN(v, Seq(("x", 0L, 15L), ("y", 0L, 15L))).count() ==
+        15L * 16L) // x==10 deleted
       // content-identical maintenance: the change feed skips it
       assert(t.rowChangesBetween(v - 1, v).count() == 0)
     } finally SnapshotTable.drop(t)
