@@ -124,17 +124,20 @@ object ScaleProbe {
       dir
     }
 
-    // JIT/classload warmup at the smallest scale so scale=1 timings
-    // aren't inflated relative to the later points
     def dropAllBlocks(): Unit = {
       // clearCache misses localCheckpoint blocks; see Bench
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    names.foreach { name =>
-      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-      dropAllBlocks()
+    // JIT/classload warmup at the smallest scale (the sf0.001 sibling
+    // of the source dir, skipped when absent) so scale=1 timings
+    // aren't inflated relative to the later points
+    ProfileQuery.warmDir(src).foreach { warm =>
+      names.foreach { name =>
+        SparkEntry.queries(name)(spark, warm).count()
+        dropAllBlocks()
+      }
     }
 
     val ks = sys.env.get("SPARK_GRAFT_SCALE_KS")

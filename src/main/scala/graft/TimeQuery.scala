@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time individual queries at a given scale factor with
-  * a warmup pass (same session config as Bench). Usage:
+  * a warmup pass on the sf dir's `sf0.001` sibling, skipped when that
+  * is absent (same session config as Bench). Usage:
   *   runMain graft.TimeQuery q_topk q_dedup_near [...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
@@ -14,7 +15,7 @@ object TimeQuery {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { q =>
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
+      ProfileQuery.warmDir(sfDir).foreach(SparkEntry.queries(q)(spark, _).count())
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(q)(spark, sfDir).count()
       println(f"$q rows=$n time=${(System.nanoTime() - t0) / 1e9}%.3f")

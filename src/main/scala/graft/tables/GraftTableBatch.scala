@@ -27,7 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * WHERE clause here, the scan plans only intersecting files, and
   * Spark re-applies the predicates row-exactly above the scan (file
   * stats prune at file granularity, so every filter stays residual —
-  * the same contract parquet row-group stats have).
+  * the same contract parquet row-group stats have). The table's own
+  * prune and read verbs ([[SnapshotTable.prunedFiles]],
+  * [[SnapshotTable.readWhere]] and their string/bloom/N-dim twins)
+  * prune through here too, so each stats family's file test is
+  * written once.
   *
   * Everything here is O(manifest) driver metadata: stat lines are
   * already bounded per file, bloom probes read fixed-size sidecars,
@@ -203,7 +207,11 @@ private[tables] object ManifestPruning {
     }
   }
 
-  private def bloomKeyBytes(value: Any): Option[Array[Byte]] = value match {
+  /** A lookup value's bloom probe bytes — the driver-side twin of the
+    * build's [[SnapshotTable]] `keyBytesExpr`: integral keys as 8-byte
+    * big-endian two's complement, strings as UTF-8. None = a value no
+    * bloom filter was built over. */
+  def bloomKeyBytes(value: Any): Option[Array[Byte]] = value match {
     case l: Long => Some(java.nio.ByteBuffer.allocate(8).putLong(l).array())
     case i: Int => bloomKeyBytes(i.toLong)
     case s: Short => bloomKeyBytes(s.toLong)
@@ -221,19 +229,16 @@ private[tables] object ManifestPruning {
     // stat lines carry commit-era (physical) key names; the pushed
     // filters reference the current LOGICAL ones — translate first
     def lg(k: String): String = SnapshotTable.logicalNameFor(lines, k)
-    meta.collectFirst {
-      case SnapshotTable.ClusterMeta(k) => k
-      case SnapshotTable.ClusterPartMeta(k) => k // post-append partial claim
-    }.foreach { k =>
+    meta.collectFirst(SnapshotTable.RangeClaim).foreach { k =>
       used ++= longBounds(lg(k), filters)._2
     }
-    meta.collectFirst { case SnapshotTable.ClusterSMeta(k) => k }.foreach { k =>
+    meta.collectFirst(SnapshotTable.StringClaim).foreach { k =>
       used ++= strBounds(lg(k), filters)._2
     }
     meta.collectFirst { case SnapshotTable.ZClusterNMeta(ks) => ks }.foreach { ks =>
       ks.split('|').foreach(k => used ++= longBounds(lg(k), filters)._2)
     }
-    meta.collectFirst { case SnapshotTable.BloomKMeta(k, _) => k }.foreach { k =>
+    meta.collectFirst(SnapshotTable.BloomClaim).foreach { k =>
       used ++= filters.filter(f => bloomValues(lg(k), f).isDefined)
     }
     meta.collectFirst { case SnapshotTable.BucketMeta(_, k) => k }.foreach { k =>
@@ -253,10 +258,8 @@ private[tables] object ManifestPruning {
     // physical stat keys → current logical names (see usableFilters)
     def lg(k: String): String = SnapshotTable.logicalNameFor(lines, k)
 
-    meta.collectFirst {
-      case SnapshotTable.ClusterMeta(k) => k
-      case SnapshotTable.ClusterPartMeta(k) => k // partial: stat-less files kept below
-    }.foreach { k =>
+    // the claim may be the partial post-append one: stat-less files are kept below
+    meta.collectFirst(SnapshotTable.RangeClaim).foreach { k =>
       val (b, _) = longBounds(lg(k), filters)
       if (b.isBounded) {
         val ranges: Map[String, (Long, Long)] = meta.collect {
@@ -270,7 +273,7 @@ private[tables] object ManifestPruning {
       }
     }
 
-    meta.collectFirst { case SnapshotTable.ClusterSMeta(k) => k }.foreach { k =>
+    meta.collectFirst(SnapshotTable.StringClaim).foreach { k =>
       val (b, _) = strBounds(lg(k), filters)
       if (b.isBounded) {
         val dec = java.util.Base64.getDecoder
@@ -324,7 +327,7 @@ private[tables] object ManifestPruning {
         }
     }
 
-    meta.collectFirst { case SnapshotTable.BloomKMeta(k, _) => k }.foreach { k =>
+    meta.collectFirst(SnapshotTable.BloomClaim).foreach { k =>
       val vals = filters.flatMap(bloomValues(lg(k), _))
       if (vals.nonEmpty) {
         val blooms: Map[String, String] = meta.collect {
@@ -615,12 +618,9 @@ class GraftTableScan(root: String, version: Long, tableSchema: StructType,
     if (changeFeed || version == 0L) return Array.empty
     val lines = SnapshotTable.manifestLinesAt(rootPath, version)
     val meta = lines.drop(2)
-    (meta.collectFirst {
-      case SnapshotTable.ClusterMeta(k) => k
-      case SnapshotTable.ClusterPartMeta(k) => k
-    } ++
-      meta.collectFirst { case SnapshotTable.ClusterSMeta(k) => k } ++
-      meta.collectFirst { case SnapshotTable.BloomKMeta(k, _) => k } ++
+    (meta.collectFirst(SnapshotTable.RangeClaim) ++
+      meta.collectFirst(SnapshotTable.StringClaim) ++
+      meta.collectFirst(SnapshotTable.BloomClaim) ++
       meta.collectFirst { case SnapshotTable.BucketMeta(_, k) => k } ++
       meta.collectFirst { case SnapshotTable.ZClusterNMeta(ks) => ks }
         .toSeq.flatMap(_.split('|').toSeq))

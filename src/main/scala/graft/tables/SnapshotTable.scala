@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Thrown when a concurrent writer committed the version this writer
@@ -99,7 +100,6 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   // with the instance read paths — aliased here for pattern matching
   private val RangeMeta = SnapshotTable.RangeMeta
   private val RowsMeta = SnapshotTable.RowsMeta
-  private val RangeSMeta = SnapshotTable.RangeSMeta
   private val BloomFMeta = SnapshotTable.BloomFMeta
   private val ClusterMeta = SnapshotTable.ClusterMeta
   private val BloomKMeta = SnapshotTable.BloomKMeta
@@ -726,10 +726,11 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   /** Write-time per-file stats for FRESHLY STAGED files under an
     * existing cluster claim: `#range=` bounds (+ `#sum=` key sums for
     * integral keys) and exact `#rows=` counts, collected in ONE
-    * distributed pass over only the staged rels — the same O(new
-    * data) stats collection [[commitClustered]] runs at creation
-    * time, now riding the LATER write paths too (append, SQL INSERT,
-    * MERGE inserts/post-images, partial OPTIMIZE output). Per-file
+    * distributed pass over only the staged rels ([[perFileStats]]) —
+    * the one O(new data) stats collection every clustered write
+    * mints through: [[commitClustered]] at creation, [[compact]], and
+    * the LATER write paths (append, SQL INSERT, MERGE inserts/post-
+    * images, partial OPTIMIZE output). Per-file
     * stat COVERAGE — not range disjointness — is what [[metaAgg]]/
     * [[metaSum]] and the DSv2 aggregate pushdown need for
     * correctness, so a manifest whose every file keeps a stat line
@@ -756,47 +757,53 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
+    // SUM stats only for integral keys — an epoch-micros sum both
+    // means nothing and overflows under ANSI; try_sum keeps an
+    // integral-key overflow from failing the commit
     val sumAgg = if (integralKey) try_sum(keyStat) else lit(null).cast("long")
-    val statRows = spark.read
-      .parquet(rels.map(rel => rootPath.resolve(rel).toString): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(keyStat).as("lo"), max(keyStat).as("hi"),
-        count(lit(1)).as("n"), sumAgg.as("s"), count(col(keyPhys)).as("nn"))
-      .collect() // ≤ |rels| rows — bounded driver metadata
-    // key stat rows by the dvAddressOf 2-segment suffix, NOT the bare
-    // basename: a commitDelta's rels span insert and update-post-image
-    // directories, and a basename collision across them would
-    // silently cross-assign one file's stats to both (UUID part names
-    // make that improbable; the parent segment makes it impossible —
-    // the same disambiguation the DV ledger uses)
-    def addr(p: String) = p.split('/').takeRight(2).mkString("/")
-    val byName = statRows.filterNot(r => r.isNullAt(1) || r.isNullAt(2)).map { r =>
-      addr(r.getString(0)) -> (r.getLong(1), r.getLong(2))
-    }.toMap
-    val rowsByName = statRows.map { r =>
-      addr(r.getString(0)) -> r.getLong(3)
-    }.toMap
-    val sumByName: Map[String, Option[(Long, Long)]] = statRows.map { r =>
-      val nn = r.getLong(5)
-      addr(r.getString(0)) ->
-        (if (r.isNullAt(4)) { if (nn == 0L) Some((0L, 0L)) else None }
-         else Some((r.getLong(4), nn)))
-    }.toMap
+    val stats = perFileStats(rels, Seq(min(keyStat), max(keyStat),
+      count(lit(1)), sumAgg, count(col(keyPhys))))
+    // an all-null-key file (nulls pool into the first range partition)
+    // has null min/max — it mints no #range and is kept by every read
     val rangeLines = rels.flatMap { rel =>
-      byName.get(dvAddressOf(rel)).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
+      stats.get(dvAddressOf(rel)).filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+        .map(r => s"#range=$rel|${r.getLong(1)}|${r.getLong(2)}")
     }
+    // Σ key + non-null count; an all-null-key file records 0|0 (the
+    // count keeps the all-null answer NULL, not 0), and a file whose
+    // try_sum overflowed (null sum, non-null keys) mints no line
     val sumLines =
       if (!integralKey) Seq.empty[String]
       else rels.flatMap { rel =>
-        sumByName.getOrElse(dvAddressOf(rel), Some((0L, 0L)))
-          .map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
+        stats.get(dvAddressOf(rel)) match {
+          case Some(r) if r.isNullAt(4) =>
+            if (r.getLong(5) == 0L) Some(s"#sum=$rel|0|0") else None
+          case Some(r) => Some(s"#sum=$rel|${r.getLong(4)}|${r.getLong(5)}")
+          case None => Some(s"#sum=$rel|0|0")
+        }
       }
     // a file the stats scan attributed no rows to is empty — record 0
     val rowLines = rels.map { rel =>
-      s"#rows=$rel|${rowsByName.getOrElse(dvAddressOf(rel), 0L)}"
+      s"#rows=$rel|${stats.get(dvAddressOf(rel)).fold(0L)(_.getLong(3))}"
     }
     (rangeLines, sumLines, rowLines)
   }
+
+  /** The one per-file stats pass over freshly staged files: `aggs`
+    * evaluated per file in a single distributed job, each result row
+    * (aggregates from index 1) keyed by its file's [[dvAddressOf]]
+    * address. Not by the bare basename: a commitDelta's rels span
+    * insert and update-post-image directories, and the parent segment
+    * keeps a basename collision from cross-assigning one file's stats
+    * to both. Returns ≤ |rels| rows — bounded driver metadata. */
+  private def perFileStats(rels: Seq[String],
+      aggs: Seq[org.apache.spark.sql.Column]): Map[String, Row] =
+    spark.read
+      .parquet(rels.map(rel => rootPath.resolve(rel).toString): _*)
+      .groupBy(input_file_name().as("f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map(r => dvAddressOf(r.getString(0)) -> r).toMap
 
   /** The PER-FILE stat lines an APPEND carries forward for the files
     * it keeps: counts/ranges/sums/bloom sidecars stay valid per file
@@ -2197,71 +2204,15 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * which is exactly the layout trade: bucketing buys co-located
     * merges, clustering buys range pruning. */
   def commitClustered(df: DataFrame, keyCol: String, nFiles: Int): Long = {
-    val keyStat = statLongExpr(df.schema(keyCol).dataType, keyCol) // validates type
-    val integralKey = df.schema(keyCol).dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
+    val dt = df.schema(keyCol).dataType
+    statLongExpr(dt, keyCol) // validates the key type before any write
     val version = currentVersion + 1
-    val snap = dataDir.resolve(s"v$version-${UUID.randomUUID()}")
-    guarded(df).repartitionByRange(nFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.parquet(snap.toString)
-    // SUM stats only for integral keys — an epoch-micros sum both
-    // means nothing and overflows under ANSI; try_sum keeps an
-    // integral-key overflow from failing the COMMIT (the file just
-    // mints no #sum line and metaSum refuses loudly on coverage)
-    val sumAgg = if (integralKey) try_sum(keyStat) else lit(null).cast("long")
-    val statRows = spark.read.parquet(snap.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(keyStat).as("lo"), max(keyStat).as("hi"),
-        count(lit(1)).as("n"),
-        sumAgg.as("s"), count(col(keyCol)).as("nn"))
-      .collect() // nFiles rows — bounded driver metadata
-    // a file whose key values are ALL null (nulls sort first under
-    // repartitionByRange, so they pool in the first file) has null
-    // min/max — record no stats for it; prunedFiles conservatively
-    // keeps stat-less files, so null-key rows are never lost
-    val byName = statRows.filterNot(r => r.isNullAt(1) || r.isNullAt(2)).map { r =>
-      val name = r.getString(0).split('/').last
-      name -> (r.getLong(1), r.getLong(2))
-    }.toMap
-    // per-file row counts (never null — counted over ALL rows, null
-    // keys included) power the metadata-only aggregate [[metaAgg]]
-    val rowsByName = statRows.map { r =>
-      r.getString(0).split('/').last -> r.getLong(3)
-    }.toMap
-    val files = listParquetRec(snap).map(p => rootPath.relativize(p).toString).sorted
-    val statLines = files.flatMap { rel =>
-      byName.get(rel.split('/').last).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
-    }
-    // a file the stats scan attributed NO rows to is by construction
-    // empty (the scan covers every file in the snapshot) — record 0,
-    // so metaAgg stays answerable on empty/degenerate commits
-    val rowLines = files.map { rel =>
-      s"#rows=$rel|${rowsByName.getOrElse(rel.split('/').last, 0L)}"
-    }
-    // per-file key SUM + non-null count, INTEGRAL keys only (the
-    // encoded Long domain IS the value there, so Σ is the true SUM).
-    // An all-null-key file records 0|0 — SUM ignores nulls, and the
-    // count keeps the all-null-table answer NULL, not 0. A file whose
-    // try_sum overflowed (null sum, nn > 0) mints NO line: metaSum
-    // then refuses on coverage instead of answering wrong.
-    val sumByName: Map[String, Option[(Long, Long)]] = statRows.map { r =>
-      val nn = r.getLong(5)
-      r.getString(0).split('/').last ->
-        (if (r.isNullAt(4)) { if (nn == 0L) Some((0L, 0L)) else None }
-         else Some((r.getLong(4), nn)))
-    }.toMap
-    val sumLines =
-      if (!integralKey) Vector.empty[String]
-      else files.flatMap { rel =>
-        sumByName.getOrElse(rel.split('/').last, Some((0L, 0L)))
-          .map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
-      }
+    val (snap, files, _) = writeData(
+      guarded(df).repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol),
+      version)
+    val (ranges, sums, rows) = mintStagedStats(files, keyCol, dt)
     val tmp = writeTmpManifest(version, df.schema,
-      (s"#cluster=$keyCol" +: (statLines ++ rowLines ++ sumLines)) ++ files)
+      (s"#cluster=$keyCol" +: (ranges ++ rows ++ sums)) ++ files)
     try publish(version, tmp)
     catch { case e: CommitConflictException =>
       deleteRecursively(snap); throw e
@@ -2270,42 +2221,61 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   }
 
   /** Files of `version` whose manifest key range intersects [lo, hi];
-    * files without stats are conservatively kept. Exposed so specs
+    * files without stats are conservatively kept, and so is every
+    * file of a version with no range-cluster claim. Exposed so specs
     * and ops can assert the pruning itself, not just the result. */
-  def prunedFiles(version: Long, lo: Long, hi: Long): Seq[String] = {
-    val lines = manifestLines(version)
-    val ranges: Map[String, (Long, Long)] = lines.drop(2).collect {
-      case RangeMeta(rel, a, b) => rel -> (a.toLong, b.toLong)
-    }.toMap
-    manifestFiles(lines).filter { rel =>
-      ranges.get(rel) match {
-        case Some((a, b)) => a <= hi && b >= lo
-        case None => true
-      }
-    }
-  }
+  def prunedFiles(version: Long, lo: Long, hi: Long): Seq[String] =
+    prunedOnClaim(version, SnapshotTable.RangeClaim)(between(_, lo, hi))
 
   /** Key-range read with manifest-stats file skipping: scans only the
     * files [[prunedFiles]] keeps, then applies the residual row
-    * filter (stats prune at file granularity; the predicate still
-    * holds row-exactly). `lo`/`hi` live in the key's ENCODED Long
-    * domain — the key's own value for integral keys, epoch micros for
-    * timestamps, epoch days for dates. */
-  def readWhere(version: Long, keyCol: String, lo: Long, hi: Long): DataFrame = {
+    * filter. `lo`/`hi` live in the key's ENCODED Long domain — the
+    * key's own value for integral keys, epoch micros for timestamps,
+    * epoch days for dates. The weakened post-append claim
+    * (#clusterpart) is enough for a range READ: carried ranges prune
+    * and stat-less files are kept. */
+  def readWhere(version: Long, keyCol: String, lo: Long, hi: Long): DataFrame =
+    prunedRead(version, between(keyCol, lo, hi),
+      lines => require(claimedKey(lines, SnapshotTable.RangeClaim).contains(keyCol),
+        s"version $version is not clustered on $keyCol")) { schema =>
+      val enc = statLongExpr(schema(keyCol).dataType, keyCol)
+      enc >= lo && enc <= hi
+    }
+
+  /** Closed range [lo, hi] on `key` as the source filters
+    * [[ManifestPruning]] reads. */
+  private def between(key: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(key, lo), LessThanOrEqual(key, hi))
+
+  /** The logical name of the key the layout claim `claim` matches in
+    * `lines` (claims carry commit-era physical names). */
+  private def claimedKey(lines: Vector[String],
+      claim: PartialFunction[String, String]): Option[String] =
+    lines.drop(2).collectFirst(claim).map(SnapshotTable.logicalNameFor(lines, _))
+
+  /** Files of `version` that [[ManifestPruning]] keeps under the
+    * filters `onKey` builds on the key `claim` names. A version without
+    * the claim keeps every file, as the DSv2 scan does: leftover stat
+    * lines do not say which column they describe. */
+  private def prunedOnClaim(version: Long, claim: PartialFunction[String, String])
+      (onKey: String => Seq[Filter]): Vector[String] = {
     val lines = manifestLines(version)
-    // stat lines carry commit-era (physical) names — compare
-    // logically. The weakened post-append claim (#clusterpart) is
-    // enough for a range READ: carried ranges prune, stat-less files
-    // are conservatively kept, and the row filter stays exact.
-    require(lines.drop(2).collectFirst {
-      case ClusterMeta(k) => k
-      case SnapshotTable.ClusterPartMeta(k) => k
-    }.map(k => SnapshotTable.logicalNameFor(lines, k))
-      .contains(keyCol), s"version $version is not clustered on $keyCol")
-    val schema = schemaOf(lines)
-    val base = scanWithDv(lines, prunedFiles(version, lo, hi))
-    val enc = statLongExpr(schema(keyCol).dataType, keyCol)
-    base.filter(enc >= lo && enc <= hi)
+    claimedKey(lines, claim).fold(manifestFiles(lines))(k =>
+      ManifestPruning.prunedFiles(rootPath, lines, onKey(k)))
+  }
+
+  /** The skipping reads' one body: read the manifest once, let `check`
+    * refuse a layout that cannot serve the read, scan (DVs applied)
+    * only the files [[ManifestPruning]] keeps under `filters`, then
+    * apply the exact row filter `residual` — stats prune at file
+    * granularity, the predicate still holds row-exactly. */
+  private def prunedRead(version: Long, filters: Seq[Filter],
+      check: Vector[String] => Unit)
+      (residual: StructType => org.apache.spark.sql.Column): DataFrame = {
+    val lines = manifestLines(version)
+    check(lines)
+    scanWithDv(lines, ManifestPruning.prunedFiles(rootPath, lines, filters))
+      .filter(residual(schemaOf(lines)))
   }
 
   /** METADATA-ONLY aggregate: COUNT(*) plus the clustered key's
@@ -2418,9 +2388,10 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
 
   // ---- per-file Bloom filters: point-lookup file skipping ---------------
 
-  /** Canonical key bytes shared by the bloom BUILD (executor SQL
-    * expression) and the PROBE (driver JVM): integral keys as 8-byte
-    * big-endian two's complement, strings as UTF-8. */
+  /** Canonical key bytes of the bloom BUILD (executor SQL
+    * expression): integral keys as 8-byte big-endian two's complement,
+    * strings as UTF-8 — the encoding the driver-side PROBE
+    * ([[ManifestPruning.bloomKeyBytes]]) reproduces. */
   private def keyBytesExpr(dt: org.apache.spark.sql.types.DataType, keyCol: String) = {
     import org.apache.spark.sql.types._
     dt match {
@@ -2432,15 +2403,9 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     }
   }
 
-  private def keyBytesOf(value: Any): Array[Byte] = value match {
-    case l: Long => java.nio.ByteBuffer.allocate(8).putLong(l).array()
-    case i: Int => keyBytesOf(i.toLong)
-    case s: Short => keyBytesOf(s.toLong)
-    case b: Byte => keyBytesOf(b.toLong)
-    case s: String => s.getBytes("UTF-8")
-    case other => throw new IllegalArgumentException(
-      s"bloom lookup value must be integral or string, got $other")
-  }
+  private def requireBloomValue(value: Any): Unit =
+    if (ManifestPruning.bloomKeyBytes(value).isEmpty) throw new IllegalArgumentException(
+      s"bloom lookup value must be integral or string, got $value")
 
   /** BLOOM-SKIPPING commit: rows hash-partitioned on the key into
     * `nFiles` files (each key lives in exactly ONE file), with a
@@ -2460,8 +2425,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       fpp: Double = 0.01): Long = {
     val kb = keyBytesExpr(df.schema(keyCol).dataType, keyCol) // validates type
     val version = currentVersion + 1
-    val snap = dataDir.resolve(s"v$version-${UUID.randomUUID()}")
-    guarded(df).repartition(nFiles, col(keyCol)).write.parquet(snap.toString)
+    val (snap, files, _) = writeData(guarded(df).repartition(nFiles, col(keyCol)), version)
     val segs = split(col("_metadata.file_path"), "/")
     val addrCol = concat_ws("/", element_at(segs, -2), element_at(segs, -1))
     val keyed = spark.read.parquet(snap.toString)
@@ -2495,7 +2459,6 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       }
     val bloomDir = dataDir.resolve(s"v$version-bloom-${UUID.randomUUID()}")
     Files.createDirectories(bloomDir)
-    val files = listParquetRec(snap).map(p => rootPath.relativize(p).toString).sorted
     val bloomLines = files.flatMap { rel =>
       merged.get(dvAddressOf(rel)).map { bf =>
         val side = bloomDir.resolve(rel.split('/').last + ".bloom")
@@ -2518,37 +2481,22 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     lines.drop(2).collect { case BloomFMeta(_, bloomRel) => bloomRel }
 
   /** Files of `version` whose Bloom filter may contain the key bytes;
-    * files without a sidecar are conservatively kept. Driver-side
-    * probes over metadata-sized sidecars — no data file is opened. */
+    * files without a sidecar are conservatively kept, and so is every
+    * file of a version with no bloom index. Driver-side probes over
+    * metadata-sized sidecars — no data file is opened. */
   def prunedFilesBloom(version: Long, value: Any): Seq[String] = {
-    val kb = keyBytesOf(value)
-    val lines = manifestLines(version)
-    val blooms: Map[String, String] = lines.drop(2).collect {
-      case BloomFMeta(rel, bloomRel) => rel -> bloomRel
-    }.toMap
-    manifestFiles(lines).filter { rel =>
-      blooms.get(rel) match {
-        case Some(bloomRel) =>
-          val is = Files.newInputStream(rootPath.resolve(bloomRel))
-          try org.apache.spark.util.sketch.BloomFilter.readFrom(is)
-            .mightContainBinary(kb)
-          finally is.close()
-        case None => true
-      }
-    }
+    requireBloomValue(value)
+    prunedOnClaim(version, SnapshotTable.BloomClaim)(k => Seq(EqualTo(k, value)))
   }
 
   /** Point lookup with Bloom file skipping, then the exact residual
     * equality filter (and DVs, like every read path). */
   def readWhereEq(version: Long, keyCol: String, value: Any): DataFrame = {
     require(value != null, "readWhereEq: use an IS NULL filter for null lookups")
-    val lines = manifestLines(version)
-    require(lines.drop(2).collectFirst {
-      case BloomKMeta(k, _) => k
-    }.map(k => SnapshotTable.logicalNameFor(lines, k))
-      .contains(keyCol), s"version $version has no bloom index on $keyCol")
-    scanWithDv(lines, prunedFilesBloom(version, value))
-      .filter(col(keyCol) === lit(value))
+    requireBloomValue(value)
+    prunedRead(version, Seq(EqualTo(keyCol, value)),
+      lines => require(claimedKey(lines, SnapshotTable.BloomClaim).contains(keyCol),
+        s"version $version has no bloom index on $keyCol"))(_ => col(keyCol) === lit(value))
   }
 
   // ---- string-key clustered stats --------------------------------------
@@ -2571,28 +2519,20 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     require(df.schema(keyCol).dataType == org.apache.spark.sql.types.StringType,
       s"commitClusteredString requires a string key; $keyCol is ${df.schema(keyCol).dataType}")
     val version = currentVersion + 1
-    val snap = dataDir.resolve(s"v$version-${UUID.randomUUID()}")
-    guarded(df).repartitionByRange(nFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.parquet(snap.toString)
-    val statRows = spark.read.parquet(snap.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"))
-      .collect() // nFiles rows — bounded driver metadata
-    val byName = statRows.filterNot(r => r.isNullAt(1) || r.isNullAt(2)).map { r =>
-      val name = r.getString(0).split('/').last
-      val lo = SnapshotTable.truncatedLower(
-        r.getString(1).getBytes("UTF-8"), SnapshotTable.StringStatMaxBytes)
-      val hi = SnapshotTable.truncatedUpper(
-        r.getString(2).getBytes("UTF-8"), SnapshotTable.StringStatMaxBytes)
-      val enc = java.util.Base64.getEncoder
-      name -> (enc.encodeToString(lo),
-        hi.fold(("", "1")) (b => (enc.encodeToString(b), "0")))
-    }.toMap
-    val files = listParquetRec(snap).map(p => rootPath.relativize(p).toString).sorted
+    val (snap, files, _) = writeData(
+      guarded(df).repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol),
+      version)
+    val stats = perFileStats(files, Seq(min(col(keyCol)), max(col(keyCol))))
+    val enc = java.util.Base64.getEncoder
     val statLines = files.flatMap { rel =>
-      byName.get(rel.split('/').last).map { case (lo64, (hi64, unb)) =>
-        s"#ranges=$rel|$lo64|$hi64|$unb" }
+      stats.get(dvAddressOf(rel)).filterNot(r => r.isNullAt(1) || r.isNullAt(2)).map { r =>
+        val lo = SnapshotTable.truncatedLower(
+          r.getString(1).getBytes("UTF-8"), SnapshotTable.StringStatMaxBytes)
+        val hi = SnapshotTable.truncatedUpper(
+          r.getString(2).getBytes("UTF-8"), SnapshotTable.StringStatMaxBytes)
+        val (hi64, unb) = hi.fold(("", "1"))(b => (enc.encodeToString(b), "0"))
+        s"#ranges=$rel|${enc.encodeToString(lo)}|$hi64|$unb"
+      }
     }
     val tmp = writeTmpManifest(version, df.schema,
       (s"#clusters=$keyCol" +: statLines) ++ files)
@@ -2606,38 +2546,19 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
   /** Files of `version` whose truncated string-bound interval
     * intersects [lo, hi] under unsigned byte order; stat-less files
     * (all-null keys) and unbounded-above files are conservatively
-    * kept. */
-  def prunedFilesString(version: Long, lo: String, hi: String): Seq[String] = {
-    val dec = java.util.Base64.getDecoder
-    val loB = lo.getBytes("UTF-8"); val hiB = hi.getBytes("UTF-8")
-    val lines = manifestLines(version)
-    val bounds: Map[String, (Array[Byte], Option[Array[Byte]])] =
-      lines.drop(2).collect {
-        case RangeSMeta(rel, lo64, hi64, unb) =>
-          rel -> (dec.decode(lo64),
-            if (unb == "1") None else Some(dec.decode(hi64)))
-      }.toMap
-    import java.util.Arrays.{compareUnsigned => cmp}
-    manifestFiles(lines).filter { rel =>
-      bounds.get(rel) match {
-        case Some((fLo, fHi)) =>
-          cmp(fLo, hiB) <= 0 && fHi.forall(h => cmp(h, loB) >= 0)
-        case None => true
-      }
-    }
-  }
+    * kept, and so is every file of a version with no string-cluster
+    * claim. */
+  def prunedFilesString(version: Long, lo: String, hi: String): Seq[String] =
+    prunedOnClaim(version, SnapshotTable.StringClaim)(between(_, lo, hi))
 
   /** String-key range read with manifest-stats file skipping, then
     * the exact residual filter (and DVs, like every read path). */
-  def readWhereString(version: Long, keyCol: String, lo: String, hi: String): DataFrame = {
-    val lines = manifestLines(version)
-    require(lines.drop(2).collectFirst {
-      case l if l.startsWith("#clusters=") => l.stripPrefix("#clusters=")
-    }.map(k => SnapshotTable.logicalNameFor(lines, k))
-      .contains(keyCol), s"version $version is not string-clustered on $keyCol")
-    scanWithDv(lines, prunedFilesString(version, lo, hi))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
+  def readWhereString(version: Long, keyCol: String, lo: String, hi: String): DataFrame =
+    prunedRead(version, between(keyCol, lo, hi),
+      lines => require(claimedKey(lines, SnapshotTable.StringClaim).contains(keyCol),
+        s"version $version is not string-clustered on $keyCol")) { _ =>
+      col(keyCol) >= lo && col(keyCol) <= hi
+    }
 
   /** Z-ORDERED snapshot commit: rows sorted by the Morton interleave
     * of N (encoded) key dimensions and range-partitioned into
@@ -2706,26 +2627,14 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       }
     }.reduce(_ + _)
     val version = currentVersion + 1
-    val snap = dataDir.resolve(s"v$version-${UUID.randomUUID()}")
-    df.withColumn("__z", z)
+    val (snap, files, _) = writeData(df.withColumn("__z", z)
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.parquet(snap.toString)
-    val fileAggs = encs.zipWithIndex.flatMap { case (e, j) =>
-      Seq(min(e).as(s"lo$j"), max(e).as(s"hi$j"))
-    }
-    val statRows = spark.read.parquet(snap.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(fileAggs.head, fileAggs.tail: _*)
-      .collect() // nFiles rows — bounded driver metadata
-    val byName = statRows.filterNot(r => (1 to 2 * n).exists(r.isNullAt)).map { r =>
-      r.getString(0).split('/').last ->
-        (1 to 2 * n).map(r.getLong).mkString("|")
-    }.toMap
-    val files = listParquetRec(snap).map(p => rootPath.relativize(p).toString).sorted
+      .drop("__z"), version)
+    val stats = perFileStats(files, aggExprs)
     val statLines = files.flatMap { rel =>
-      byName.get(rel.split('/').last).map(b => s"#rangen=$rel|$b")
+      stats.get(dvAddressOf(rel)).filterNot(r => (1 to 2 * n).exists(r.isNullAt))
+        .map(r => s"#rangen=$rel|${(1 to 2 * n).map(r.getLong).mkString("|")}")
     }
     val head =
       if (tracked) Vector(SnapshotTable.CdcTracked, s"#zclustern=${keys.mkString("|")}")
@@ -2752,25 +2661,21 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * hyper-rectangle pruning, then the exact residual filter on
     * every dimension. `box` maps logical key name → encoded [lo, hi]
     * and must cover the committed dimensions in order. */
-  def readWhereN(version: Long, box: Seq[(String, Long, Long)]): DataFrame = {
-    val lines = manifestLines(version)
-    val keys = lines.drop(2).collectFirst {
-      case SnapshotTable.ZClusterNMeta(ks) => ks.split('|').toSeq
-    }.getOrElse(throw new IllegalArgumentException(
-      s"version $version is not N-dim z-ordered"))
-    val logical = keys.map(k => SnapshotTable.logicalNameFor(lines, k))
-    require(box.map(_._1) == logical,
-      s"box keys ${box.map(_._1)} != z-order dims $logical at $root v$version")
-    val schema = schemaOf(lines)
-    val base = scanWithDv(lines,
-      prunedFilesN(version, box.map(b => (b._2, b._3))))
-    box.map { case (k, lo, hi) =>
-      val e = statLongExpr(schema(k).dataType, k)
-      e >= lo && e <= hi
-    }.reduce(_ && _) match {
-      case cond => base.filter(cond)
+  def readWhereN(version: Long, box: Seq[(String, Long, Long)]): DataFrame =
+    prunedRead(version, box.flatMap { case (k, lo, hi) => between(k, lo, hi) }, { lines =>
+      val keys = lines.drop(2).collectFirst {
+        case SnapshotTable.ZClusterNMeta(ks) => ks.split('|').toSeq
+      }.getOrElse(throw new IllegalArgumentException(
+        s"version $version is not N-dim z-ordered"))
+      val logical = keys.map(k => SnapshotTable.logicalNameFor(lines, k))
+      require(box.map(_._1) == logical,
+        s"box keys ${box.map(_._1)} != z-order dims $logical at $root v$version")
+    }) { schema =>
+      box.map { case (k, lo, hi) =>
+        val e = statLongExpr(schema(k).dataType, k)
+        e >= lo && e <= hi
+      }.reduce(_ && _)
     }
-  }
 
   /** Compact the current version into `targetFiles` data files and
     * commit the rewrite as v+1 with IDENTICAL content (hash-equality
@@ -3475,6 +3380,19 @@ object SnapshotTable {
   private[tables] val RangeSMeta = """#ranges=([^|]+)\|([^|]*)\|([^|]*)\|([01])""".r
   private[tables] val BloomKMeta = """#bloomk=([^ ]+) fpp=(.+)""".r
   private[tables] val BloomFMeta = """#bloomf=([^|]+)\|(.+)""".r
+
+  // layout claims, each yielding the (physical) key it names; the
+  // weakened post-append #clusterpart still drives range pruning
+  private[tables] val RangeClaim: PartialFunction[String, String] = {
+    case ClusterMeta(k) => k
+    case ClusterPartMeta(k) => k
+  }
+  private[tables] val StringClaim: PartialFunction[String, String] = {
+    case ClusterSMeta(k) => k
+  }
+  private[tables] val BloomClaim: PartialFunction[String, String] = {
+    case BloomKMeta(k, _) => k
+  }
 
   /** PER-FILE stat lines, `<kind><data-file path>|<stats>`: the one
     * list of the kinds that describe a single data file. Writers keep

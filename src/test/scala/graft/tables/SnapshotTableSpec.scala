@@ -540,6 +540,9 @@ class SnapshotTableSpec extends SparkSpec {
       assert(t.readWhere(1L, "k", 0L, 9999L).count() == 10000)
       assert(t.prunedFiles(1L, 20000L, 30000L).isEmpty)
       assert(t.readWhere(1L, "k", 20000L, 30000L).count() == 0)
+      // a Long-clustered version serves no string-range read
+      val e = intercept[IllegalArgumentException] { t.readWhereString(1L, "k", "a", "b") }
+      assert(e.getMessage.contains("is not string-clustered on k"), e.getMessage)
     } finally SnapshotTable.drop(t)
   }
 
@@ -636,6 +639,11 @@ class SnapshotTableSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         t.readWhereN(v2, Seq(("x", 0L, 1L), ("y", 0L, 1L)))
       }
+      // so do the right keys in the wrong order
+      val rev = intercept[IllegalArgumentException] {
+        t.readWhereN(v2, Seq(("z", 0L, 1L), ("y", 0L, 1L), ("x", 0L, 1L)))
+      }
+      assert(rev.getMessage.contains("!= z-order dims"), rev.getMessage)
     } finally SnapshotTable.drop(t)
   }
 
@@ -931,6 +939,9 @@ class SnapshotTableSpec extends SparkSpec {
       val afterDel = t.readWhereString(t.currentVersion, "name", "key-100", "key-199|")
         .collect().map(_.getDouble(1)).sorted
       assert(afterDel.toSeq == (100 until 200).filterNot(_ == 150).map(_.toDouble))
+      // a version without a bloom index serves no point lookup
+      val e = intercept[IllegalArgumentException] { t.readWhereEq(v, "name", "key-100") }
+      assert(e.getMessage.contains("has no bloom index on name"), e.getMessage)
     } finally SnapshotTable.drop(t)
   }
 
@@ -950,6 +961,14 @@ class SnapshotTableSpec extends SparkSpec {
       // absent key: pruning alone usually empties the scan
       assert(t.prunedFilesBloom(v, -5L).size <= 4)
       assert(t.readWhereEq(v, "k", -5L).count() == 0)
+      // refusals: a range read on a bloom-only version, a value no
+      // filter was built over, and a null lookup
+      val notRange = intercept[IllegalArgumentException] { t.readWhere(v, "k", 1L, 2L) }
+      assert(notRange.getMessage.contains("is not clustered on k"), notRange.getMessage)
+      val dbl = intercept[IllegalArgumentException] { t.readWhereEq(v, "k", 1.5) }
+      assert(dbl.getMessage.contains("must be integral or string"), dbl.getMessage)
+      val nul = intercept[IllegalArgumentException] { t.readWhereEq(v, "k", null) }
+      assert(nul.getMessage.contains("IS NULL"), nul.getMessage)
       // null keys never enter a filter and never match an eq lookup
       assert(t.read(v).filter(col("k").isNull).count() == 1)
       // deletes compose: tombstoned row vanishes from the point lookup
