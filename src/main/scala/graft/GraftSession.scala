@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place that knows how to build a graft session. All mains
-  * (Bench / Verify / TimeQuery / PlanDump) and the shared test session
+  * (Bench / Verify / Probe / PlanDump) and the shared test session
   * use this, so session-scoped settings live here instead of being
   * scattered — in particular the TIMESTAMP(NANOS) legacy read conf the
   * events fixture needs (FIXTURES.md), which used to be set as a side

@@ -133,7 +133,7 @@ object ScaleProbe {
     // JIT/classload warmup at the smallest scale (the sf0.001 sibling
     // of the source dir, skipped when absent) so scale=1 timings
     // aren't inflated relative to the later points
-    ProfileQuery.warmDir(src).foreach { warm =>
+    Probe.warmDir(src).foreach { warm =>
       names.foreach { name =>
         SparkEntry.queries(name)(spark, warm).count()
         dropAllBlocks()

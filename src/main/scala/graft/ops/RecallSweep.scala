@@ -23,7 +23,9 @@ import graft.functions.CosineSimilarity.cosine_sim
   *    honestly rather than cherry-picking the favorable one.
   *
   * Recall is averaged over several probe ids per corpus. Run via
-  * `tools/run_main.sh graft.ops.RecallSweep [out.json]`.
+  * `SPARK_GRAFT_SF_DIR=<sf0.1 dir> tools/run_main.sh graft.ops.RecallSweep
+  * [out.json]`; the sf corpora are that dir and its sf0.01 sibling,
+  * each skipped when absent.
   */
 object RecallSweep {
 
@@ -57,65 +59,69 @@ object RecallSweep {
       .collect().map(_.getLong(0)).toSet
   }
 
+  /** The corpus as an ANN base (id, vec). */
+  private def annBase(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
+
   /** PQ tier recall@10 vs the exact-L2 baseline: codebooks trained
-    * ONCE per corpus (m=8 x 64 codes, the engine's geometry), then
-    * one ADC ranking per probe. */
+    * ONCE per corpus (m=8 x 64 codes, stride seeds — the engine's
+    * geometry), then one ADC ranking per probe. */
   private[ops] def pqRecall(emb: DataFrame, probeIds: Seq[Long]): Double = {
-    val e = emb.select(col("vec_id"), col("label"), col("embedding"))
-    val (subs, codebook, codes) = Similarity.pqTrain(e)
-    val cbC = codebook.cache(); cbC.count()
+    import Similarity._
+    val e = annBase(emb)
+    val (cb, codes) = pqIndexFor(e, "vec", strideIds(PqStride), PqM, PqDims,
+      PqK, Nil)
     val codesC = codes.cache(); codesC.count()
     val r = probeIds.map { pid =>
       val brute = bruteL2Top10(emb, pid)
-      val got = Similarity.pqAdc(subs.filter(col("vec_id") === pid), cbC,
-        codesC.filter(col("vec_id") =!= pid), topK = 10)
+      val got = probePqIndexFor(probeRowOf(e, pid), cb, codesC, Some(pid),
+        PqM, PqDims, topK = 10)
         .collect().map(_.getLong(0)).toSet
       (brute & got).size / 10.0
     }.sum / probeIds.size
-    cbC.unpersist(); codesC.unpersist()
+    codesC.unpersist()
     r
   }
 
-  /** Residual IVF+PQ recall@10 vs nprobe (coarse k=8, the engine's
-    * geometry): quantizers trained once per corpus, probes sweep the
-    * nprobe budget — the coarse-pruning/recall trade-off surface. */
+  /** Residual IVF+PQ recall@10 vs nprobe (coarse k=8, hash-stride
+    * coarse seeds as `CALL ann_build` nominates them): quantizers
+    * trained once per corpus, probes sweep the nprobe budget — the
+    * coarse-pruning/recall trade-off surface. */
   private[ops] def ivfPqRecall(emb: DataFrame, probeIds: Seq[Long],
       nprobes: Seq[Int]): Map[Int, Double] = {
-    val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val n = base.count()
-    val (assigned0, centroids0) = Similarity.ivfTrainFor(base, n, 8)
-    val assigned = assigned0.select(col("id").as("vec_id"),
-      lit(0L).as("label"), col("vec").as("embedding"), col("cluster"))
-    val centroids = centroids0.cache(); centroids.count()
-    val (_, codebook, codes) = Similarity.ivfPqTrain(assigned, centroids)
-    val cbC = codebook.cache(); cbC.count()
+    import Similarity._
+    val e = annBase(emb)
+    val (centroids, cb, codes) = ivfPqIndexFor(e, annSeedIdsFor(e, e.count(), 8),
+      8, strideIds(PqStride), PqM, PqDims, PqK, Nil)
     val codesC = codes.cache(); codesC.count()
     val perProbe = probeIds.map { pid =>
       val brute = bruteL2Top10(emb, pid)
-      val probe = emb.filter(col("vec_id") === pid)
-        .select(col("embedding").as("probe"))
       nprobes.map { np =>
-        val got = Similarity.ivfPqAdc(probe, centroids, cbC,
-          codesC.filter(col("vec_id") =!= pid), nprobe = np, topK = 10)
+        val got = probeIvfPqIndexFor(probeRowOf(e, pid), centroids, cb, codesC,
+          Some(pid), np, PqM, PqDims, topK = 10)
           .collect().map(_.getLong(0)).toSet
         np -> (brute & got).size / 10.0
       }.toMap
     }
-    centroids.unpersist(); cbC.unpersist(); codesC.unpersist()
+    codesC.unpersist()
     nprobes.map(np => np -> perProbe.map(_(np)).sum / perProbe.size).toMap
   }
 
   /** NSW graph-ANN recall@10 vs the exact-cosine baseline (the
-    * graph's metric): graph built once per corpus by [[Similarity
-    * .nswTopK]]'s own recipe per probe (the per-query key's honest
-    * shape — build rides every probe there too). */
-  private[ops] def nswRecall(emb: DataFrame, probeIds: Seq[Long]): Double =
+    * graph's metric): the q_sim_ann_nsw graph (stride-16 hubs,
+    * degree 4) built once per corpus, one beam search per probe. */
+  private[ops] def nswRecall(emb: DataFrame, probeIds: Seq[Long]): Double = {
+    import Similarity._
+    val e = annBase(emb)
+    val hubs = nswHubsOf(e, strideIds(NswHubStride))
+    val (edges, _) = nswGraphFor(e, hubs, NswM, 64)
     probeIds.map { pid =>
       val brute = bruteTop10(emb, pid)
-      val got = Similarity.nswTopK(emb, pid, 10)
+      val got = probeNswIndexFor(e, edges, hubs, probeRowOf(e, pid), Some(pid), 10)
         .collect().map(_.getLong(0)).toSet
       (brute & got).size / 10.0
     }.sum / probeIds.size
+  }
 
   private def bruteTop10(emb: DataFrame, probeId: Long): Set[Long] = {
     val probeVec = emb.filter(col("vec_id") === probeId)
@@ -149,11 +155,14 @@ object RecallSweep {
     def fmt(name: String, n: Long, m: Map[Int, Double]): String =
       s""""$name":{"n":$n,"recall_at_10":{${
         budgets.map(t => s""""T$t":${math.rint(m(t) * 1000) / 1000}""").mkString(",")}}}"""
-    val sections = Seq(
-      ("planted_locality", planted(spark)),
-      ("sf0.01", Tables.embeddings(spark, "/root/testdata/sf0.01")),
-      ("sf0.1", Tables.embeddings(spark, "/root/testdata/sf0.1")),
-    ).map { case (name, df) =>
+    // the planted fixture plus the sf0.01 sibling of SPARK_GRAFT_SF_DIR
+    // and that dir itself, each when present
+    val sfDir = graft.Probe.sfDir()
+    val corpora = ("planted_locality" -> planted(spark)) +:
+      (graft.Probe.siblingDir(sfDir, "sf0.01").toSeq :+ sfDir).distinct
+        .filter(new java.io.File(_).isDirectory)
+        .map(dir => new java.io.File(dir).getName -> Tables.embeddings(spark, dir))
+    val sections = corpora.map { case (name, df) =>
       val cached = df.cache()
       val n = cached.count()
       val s = fmt(name, n, sweep(cached, probeIds, budgets))
@@ -164,11 +173,7 @@ object RecallSweep {
     // the residual IVF+PQ nprobe sweep — the compression tiers'
     // committed quality surface, like multi-probe LSH above
     val nprobes = Seq(1, 2, 4, 8)
-    val pqSections = Seq(
-      ("planted_locality", planted(spark)),
-      ("sf0.01", Tables.embeddings(spark, "/root/testdata/sf0.01")),
-      ("sf0.1", Tables.embeddings(spark, "/root/testdata/sf0.1")),
-    ).map { case (name, df) =>
+    val pqSections = corpora.map { case (name, df) =>
       val cached = df.cache(); cached.count()
       val pq = math.rint(pqRecall(cached, probeIds) * 1000) / 1000
       val ipq = ivfPqRecall(cached, probeIds, nprobes)

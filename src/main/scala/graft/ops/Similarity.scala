@@ -144,6 +144,57 @@ object Similarity extends QueryPack {
       .limit(5)
   }
 
+  // ---- the ANN tiers: one trainer, encoder, probe (and ingest) each ----
+  //
+  // Every ANN path runs on the same per-tier code: the oracle-pinned
+  // per-query keys (train + probe in one query), their persisted twins
+  // (build commits the index through the table layer, probe reads it
+  // back) and the SQL lifecycle (`CALL ann_build / ann_probe /
+  // ann_ingest`, GraftCatalog). Relations use the canonical ANN columns
+  // (id LONG, vec ARRAY<FLOAT>); extra columns (the embeddings keys'
+  // `label`) ride through as `keep` columns. Seeds are an id predicate
+  // the caller already knows: the oracle-pinned keys pass the stride
+  // rule their SQL states ([[strideIds]]), the procedures pass the ids
+  // [[annSeedIdsFor]] nominates; a trainer seeds from the first k
+  // matching rows by id.
+
+  /** The embeddings table as an ANN base: (id, vec, label). */
+  private[graft] def embeddingsBase(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id").as("id"),
+      col("embedding").as("vec"), col("label"))
+
+  /** The 1-row (vec) probe relation of member `id`. */
+  private[graft] def probeRowOf(base: DataFrame, id: Long): DataFrame =
+    base.filter(col("id") === id).select(col("vec"))
+
+  /** An embeddings key's result columns: (vec_id, label, cos|adist). */
+  private def embResult(df: DataFrame): DataFrame =
+    df.withColumnRenamed("id", "vec_id").withColumnRenamed("score", "cos")
+
+  /** id ≡ 0 (mod stride) — the seed rule the oracle-pinned keys
+    * state in their SQL (`vec_id % n = 0`). */
+  private[graft] def strideIds(stride: Int): Column =
+    pmod(col("id"), lit(stride)) === 0
+
+  private val IvfK = 8 // q_sim_ann_ivf's coarse cluster count
+  private val IvfStride = 250 // seed stride: works for 500..2000-row tables
+
+  /** A pid-scoped index directory: two JVMs running the same (query,
+    * dir) — bench alongside verify — never overwrite each other's
+    * index mid-scan. */
+  private def indexDir(name: String, d: String): String =
+    s"${sys.props("java.io.tmpdir")}/${name}_" +
+      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
+
+  /** A committed index table, read through the graft-table source
+    * (runtime V2 filtering on clustered layouts). */
+  private[graft] def annTable(s: SparkSession, path: String): DataFrame =
+    s.read.format("graft-table").option("path", path).load()
+
+  /** Element-wise x − c in doubles (exact float−float residuals). */
+  private def residual(x: Column, c: Column): Column =
+    zip_with(x, c, (a, b) => a.cast("double") - b.cast("double"))
+
   /** IVF-style ANN: a coarse quantizer (deterministic seeds + one
     * k-means assignment/update round, all DataFrame ops) partitions
     * the vectors; the probe searches only its 2 nearest partitions.
@@ -151,16 +202,14 @@ object Similarity extends QueryPack {
     * The 100 TB shape: centroids are tiny (k×dims) and broadcast;
     * vector→cluster assignment is one broadcast-join pass; the
     * search scan prunes to the probed clusters (predicate on the
-    * cluster column — with the index written out, a partition column
-    * → partition pruning at the source). */
+    * cluster column — with the index written out, a clustered
+    * graft table → file pruning at the source). */
   private def annIvf(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val (cand, probe) = ivfCandidates(s, d)
-    cand.crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        graft.Det.r4(cosine_sim(col("embedding"), col("probe"))).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(5)
+    val e = embeddingsBase(s, d)
+    val (assigned, centroids) = ivfTrainFor(e, strideIds(IvfStride), IvfK,
+      Seq("label"))
+    embResult(probeIvfIndexFor(assigned, centroids, probeRowOf(e, ProbeId),
+      Some(ProbeId), nprobe = 2, topK = 5, Seq("label")))
   }
 
   /** IVF + INT8 composition — the production ANN recipe at 100 TB:
@@ -172,14 +221,18 @@ object Similarity extends QueryPack {
     * arithmetic), so the DuckDB oracle gates the composed pipeline
     * bit-exactly. */
   private def annIvfSq8(s: SparkSession, d: String): DataFrame = {
-    val (cand, probe) = ivfCandidates(s, d)
-    val qc = sq8Quantized(cand, "embedding")
-    val qp = sq8Quantized(probe, "probe")
+    val e = embeddingsBase(s, d)
+    val (assigned, centroids) = ivfTrainFor(e, strideIds(IvfStride), IvfK,
+      Seq("label"))
+    val probe = probeRowOf(e, ProbeId)
+    val qc = sq8Quantized(
+      ivfCandidatesFor(assigned, centroids, probe, Some(ProbeId), 2), "vec")
+    val qp = sq8Quantized(probe, "vec")
       .select(col("q").as("pq"), col("qnorm").as("pqnorm"))
     val qdot = aggregate(zip_with(col("q"), col("pq"), (a, b) => a * b),
       lit(0L), (acc, x) => acc + x)
     qc.crossJoin(broadcast(qp))
-      .select(col("vec_id"), col("label"),
+      .select(col("id").as("vec_id"), col("label"),
         graft.Det.r4(when(col("qnorm") === 0L || col("pqnorm") === 0L, lit(0.0d))
           .otherwise(qdot.cast("double") /
             sqrt((col("qnorm") * col("pqnorm")).cast("double")))).as("qcos"))
@@ -199,10 +252,11 @@ object Similarity extends QueryPack {
   private def l2sq(a: Column, b: Column): Column =
     graft.functions.L2SqDistance.l2sq_dist(a, b)
 
-  private val PqM = 8 // subspaces (64 dims -> 8 × 8)
+  private[ops] val PqM = 8 // subspaces (64 dims -> 8 × 8)
   private val PqSub = 8
-  private val PqK = 64 // codes per subspace
-  private val PqStride = 7 // seed stride: >=64 seeds from 500-row tables up
+  private[ops] val PqDims = PqM * PqSub
+  private[ops] val PqK = 64 // codes per subspace
+  private[ops] val PqStride = 7 // seed stride: >=64 seeds from 500-row tables up
 
   /** PRODUCT QUANTIZATION ANN (Jégou et al., PAMI'11) — the
     * compression tier past int8: each 64-dim vector splits into m=8
@@ -222,96 +276,11 @@ object Similarity extends QueryPack {
     * the DuckDB oracle gates codebook learning, encoding AND scoring
     * bit-exactly, not approximately. */
   private def annPq(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val (subs, codebook, codes) = pqTrain(e)
-    pqAdc(subs.filter(col("vec_id") === ProbeId), codebook,
-      codes.filter(col("vec_id") =!= ProbeId))
-  }
-
-  /** The m subvectors of every vector: (vec_id, label, s, sv) — the
-    * [[annSubsFor]] geometry at the oracle-pinned PQ constants (ONE
-    * slice/explode implementation; both paths share one oracle). */
-  private def pqSubvectors(e: DataFrame): DataFrame =
-    annSubsFor(e, "embedding", PqM, PqSub, Seq("vec_id", "label"))
-
-  /** The TRAINING half of [[annPq]], shared verbatim with the
-    * persisted twin ([[buildPqIndex]]): per-subspace stride seeds, one
-    * decimal-exact Lloyd round, then every subvector encoded to its
-    * nearest codebook entry. Returns (subs(vec_id, label, s, sv),
-    * codebook(s, cid, cvec ARRAY<FLOAT>), codes(vec_id, label, s,
-    * cid)). */
-  private[ops] def pqTrain(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // par(): the assignment and encode below each do k=64 l2sq folds
-    // per subvector behind broadcast joins — without the spread they
-    // run inside the single-split scan stage (one task).
-    // Lazy localCheckpoint (r17): subs has FOUR consumers (seeds,
-    // assignment, encode, and the caller's probe filter), and stage
-    // probing showed each consumer job not only re-running the slice
-    // pipeline but RE-JANINO-COMPILING its fused stage — the thread
-    // dump had all 31 workers blocked in CodeGenerator.compile, ~1 s
-    // per hot stage, the actual cost of this family at bench scale.
-    // The checkpoint is one n·m-row pass over the (small) vector side
-    // — the §5 persist criterion, not a fact-table cache; at 100 TB
-    // the train path necessarily materializes this much anyway (it is
-    // what the persisted tier commits as the index).
-    val subs = pqSubvectors(par(e)).localCheckpoint(eager = false)
-    // deterministic per-subspace seeds: stride vec_ids, pinned order
-    val seeds = subs.filter(pmod(col("vec_id"), lit(PqStride)) === 0)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("s").orderBy("vec_id")))
-      .filter(col("rn") <= PqK)
-      .select(col("s").as("s0"), col("vec_id").as("cid0"), col("sv").as("cvec0"))
-    // one Lloyd round per subspace: nearest-seed assignment. The
-    // argmin is the FUSED candidate scan (ArgMinL2) over the k seeds
-    // collapsed into one broadcast array row per subspace — same (d2,
-    // cid) total order as the former min_by-over-exploded-rows (the
-    // tie-break matches the oracle's ROW_NUMBER exactly), but no
-    // n·m×k join-row materialization and no hash aggregate at all
-    // (optimization r17: the exploded shape carried 27 s + 22 s of
-    // task time in q_sim_ann_ivf_pq's twin kernels at sf0.1)
-    val assigned = subs
-      .join(broadcast(argminCands(seeds, "s0", "cid0", "cvec0")),
-        col("s") === col("s0"))
-      .select(col("vec_id"), col("s"), col("sv"),
-        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("cid"))
-    // ...then the decimal-exact centroid update — the CODEBOOK.
-    // Lazy localCheckpoint (r17): two consumers (the encode join and
-    // the caller's ADC distance table) each re-ran — and re-compiled —
-    // the whole train chain; m×k ≤ 512 rows, the §5 criterion.
-    val codebook = assigned
-      .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy("s", "cid", "pos")
-      .agg(graft.Det.davg(col("v").cast("double")).as("mv"))
-      .groupBy("s", "cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-        x => x.getField("mv").cast("float")).as("cvec"))
-      .localCheckpoint(eager = false)
-    // ENCODE: every subvector to its nearest codebook entry (m small
-    // ids per vector — the compressed index); same fused argmin
-    val codes = subs
-      .join(broadcast(argminCands(codebook, "s", "cid", "cvec")),
-        col("s") === col("s0"))
-      .select(col("vec_id"), col("label"), col("s"),
-        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("cid"))
-    (subs, codebook, codes)
-  }
-
-  /** The SEARCH half of [[annPq]]: asymmetric distance computation.
-    * The probe's m×k exact distance table broadcasts; candidates rank
-    * by the decimal-exact sum of their m looked-up cells — table
-    * lookups over code ids, never a float op per candidate vector. */
-  private[ops] def pqAdc(probeSubs0: DataFrame, codebook: DataFrame,
-      candCodes: DataFrame, topK: Int = 5): DataFrame = {
-    val probeSubs = probeSubs0.select(col("s").as("ps"), col("sv").as("psv"))
-    val dtab = codebook.join(broadcast(probeSubs), col("s") === col("ps"))
-      .select(col("s"), col("cid"), l2sq(col("psv"), col("cvec")).as("dist"))
-    candCodes
-      .join(broadcast(dtab), Seq("s", "cid"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(graft.Det.r4(graft.Det.dsum(col("dist"), 9)).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-      .limit(topK)
+    val e = embeddingsBase(s, d)
+    val (cb, codes) = pqIndexFor(e, "vec", strideIds(PqStride),
+      PqM, PqDims, PqK, Seq("label"))
+    embResult(probePqIndexFor(probeRowOf(e, ProbeId), cb, codes,
+      Some(ProbeId), PqM, PqDims, 5, Seq("label")))
   }
 
   /** RESIDUAL IVF+PQ — FAISS's IndexIVFPQ, the standard
@@ -329,257 +298,20 @@ object Similarity extends QueryPack {
     * DuckDB oracle gates the COMPOSED pipeline — coarse quantizer,
     * residual codebooks, encoding, per-cluster tables — bit-exactly. */
   private def annIvfPq(s: SparkSession, d: String): DataFrame = {
-    val (assigned, centroids0) = ivfBuild(s, d)
-    // lazy checkpoint (r17): the k-row centroid table has two broadcast
-    // consumers (the residual join and the probe's coarse ranking),
-    // each otherwise re-running — and re-Janino-compiling — the whole
-    // coarse-quantizer chain (see pqTrain's subs note)
-    val centroids = centroids0.localCheckpoint(eager = false)
-    val (_, codebook, codes) = ivfPqTrain(assigned, centroids)
-    val probe = Tables.embeddings(s, d).filter(col("vec_id") === ProbeId)
-      .select(col("embedding").as("probe"))
-    ivfPqAdc(probe, centroids, codebook,
-      codes.filter(col("vec_id") =!= ProbeId))
+    val e = embeddingsBase(s, d)
+    val (centroids, cb, codes) = ivfPqIndexFor(e, strideIds(IvfStride), IvfK,
+      strideIds(PqStride), PqM, PqDims, PqK, Seq("label"))
+    embResult(probeIvfPqIndexFor(probeRowOf(e, ProbeId), centroids, cb, codes,
+      Some(ProbeId), nprobe = 2, PqM, PqDims, 5, Seq("label")))
   }
 
-  /** The TRAINING half of [[annIvfPq]], shared verbatim with the
-    * persisted twin ([[buildIvfPqIndex]]): residuals against the
-    * coarse centroids, per-subspace residual codebooks (doubles), and
-    * every residual subvector encoded. Returns (subs, codebook(s,
-    * cid, cvec ARRAY<DOUBLE>), codes(vec_id, label, cluster, s,
-    * cid)). */
-  private[ops] def ivfPqTrain(assigned: DataFrame,
-      centroids: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // residual space: x − centroid(cluster), float−float in doubles.
-    // par(): same single-task hazard as pqTrain — the coarse window's
-    // exchange upstream is AQE-coalesced to one partition (tiny
-    // bytes), and both the seed assignment and the encode below are
-    // k=64-fold compute over these rows
-    val resid = par(assigned).join(broadcast(centroids), "cluster")
-      .select(col("vec_id"), col("label"), col("cluster"),
-        zip_with(col("embedding"), col("cvec"),
-          (x, c) => x.cast("double") - c.cast("double")).as("rvec"))
-    // Lazy localCheckpoint (r17): three consumers (seeds, assignment,
-    // encode) each re-ran the residual pipeline INCLUDING the coarse
-    // quantizer upstream, and re-Janino-compiled its fused stages —
-    // the pqTrain subs note has the thread-dump evidence. n·m rows of
-    // the small vector side, the §5 criterion.
-    val subs = resid.select(col("vec_id"), col("label"), col("cluster"),
-      explode(array((0 until PqM).map(i =>
-        struct(lit(i).as("s"),
-          slice(col("rvec"), i * PqSub + 1, PqSub).as("sv"))): _*)).as("x"))
-      .select(col("vec_id"), col("label"), col("cluster"),
-        col("x.s").as("s"), col("x.sv").as("sv"))
-      .localCheckpoint(eager = false)
-    val seeds = subs.filter(pmod(col("vec_id"), lit(PqStride)) === 0)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("s").orderBy("vec_id")))
-      .filter(col("rn") <= PqK)
-      .select(col("s").as("s0"), col("vec_id").as("cid0"), col("sv").as("cvec0"))
-    // fused argmin over the broadcast candidate array — the pqTrain
-    // kernel note applies verbatim (r17: was min_by over k=64
-    // exploded join rows)
-    val assignedPq = subs
-      .join(broadcast(argminCands(seeds, "s0", "cid0", "cvec0")),
-        col("s") === col("s0"))
-      .select(col("vec_id"), col("s"), col("sv"),
-        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("cid"))
-    // residual codebooks (kept in doubles — no narrowing this time:
-    // residual magnitudes are small and the extra bits are free)
-    // lazy checkpoint: two consumers (encode + the caller's per-cluster
-    // ADC tables), m×k ≤ 512 rows — the pqTrain codebook note
-    val codebook = assignedPq
-      .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy("s", "cid", "pos").agg(graft.Det.davg(col("v")).as("mv"))
-      .groupBy("s", "cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-        x => x.getField("mv")).as("cvec"))
-      .localCheckpoint(eager = false)
-    val codes = subs
-      .join(broadcast(argminCands(codebook, "s", "cid", "cvec")),
-        col("s") === col("s0"))
-      .select(col("vec_id"), col("label"), col("cluster"), col("s"),
-        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("cid"))
-    (subs, codebook, codes)
-  }
-
-  /** The SEARCH half of [[annIvfPq]]: coarse ranking (same as
-    * q_sim_ann_ivf), then a PER-PROBED-CLUSTER probe residual and its
-    * m×k ADC table; the inner join on (cluster, s, cid) both looks up
-    * the table cells AND prunes to the probed clusters in one step. */
-  private[ops] def ivfPqAdc(probe: DataFrame, centroids: DataFrame,
-      codebook: DataFrame, candCodes: DataFrame, nprobe: Int = 2,
-      topK: Int = 5): DataFrame = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val probedClusters = probe.crossJoin(broadcast(centroids))
-      .select(col("cluster"), col("cvec"),
-        cosine_sim(col("probe"), col("cvec")).as("csim"))
-      .orderBy(col("csim").desc, col("cluster").asc)
-      .limit(nprobe)
-    val prSubs = probedClusters.crossJoin(broadcast(probe))
-      .select(col("cluster").as("pc"),
-        zip_with(col("probe"), col("cvec"),
-          (x, c) => x.cast("double") - c.cast("double")).as("prv"))
-      .select(col("pc"),
-        explode(array((0 until PqM).map(i =>
-          struct(lit(i).as("s"),
-            slice(col("prv"), i * PqSub + 1, PqSub).as("psv"))): _*)).as("x"))
-      .select(col("pc"), col("x.s").as("ps"), col("x.psv").as("psv"))
-    val dtab = codebook.join(broadcast(prSubs), col("s") === col("ps"))
-      .select(col("pc").as("cluster"), col("s"), col("cid"),
-        l2sq(col("psv"), col("cvec")).as("dist"))
-    candCodes
-      .join(broadcast(dtab), Seq("cluster", "s", "cid"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(graft.Det.r4(graft.Det.dsum(col("dist"), 9)).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-      .limit(topK)
-  }
-
-  /** The IVF index content: coarse-quantizer clusters built with one
-    * deterministic k-means round — (assignments(vec_id, label,
-    * embedding, cluster), centroids(cluster, cvec)). The build half
-    * of IVF, shared by the per-query path ([[ivfCandidates]]) and the
-    * persisted index ([[buildIvfIndex]]). */
-  private[ops] def ivfBuild(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val k = 8
-    val e = Tables.embeddings(s, d)
-    // deterministic seed centroids: evenly spaced vec_ids. The
-    // orderBy pins WHICH k stride-hits are kept when there are more
-    // than k (r7 — a bare limit takes scan-order rows, which is
-    // plan-dependent and not oracle-stable)
-    val n = 250 // seed stride: works for 500..2000-row test tables
-    val seeds = e.filter(pmod(col("vec_id"), lit(n)) === 0)
-      .orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cid0"), col("embedding").as("cvec0"))
-    def nearest(vecs: DataFrame, cents: DataFrame, cidCol: String,
-        cvecCol: String): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("sim").desc, col(cidCol).asc)
-      vecs.crossJoin(broadcast(cents))
-        .withColumn("sim", cosine_sim(col("embedding"), col(cvecCol)))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-    }
-    // one assignment + centroid-update round (k-means step). The
-    // cluster id is cast to int so the PERSISTED index's inferred
-    // partition-column type matches the in-memory one — a long/int
-    // mismatch would wrap the partition column in a cast and break
-    // dynamic partition pruning on the probe join.
-    // (r16 note: both par() and a lazy localCheckpoint here were
-    // tried and REJECTED — the k=8 assignment kernel is too cheap to
-    // amortize an extra exchange/materialization: q_sim_ann_ivf
-    // 0.72 → 1.2 s either way. The k=64 PQ kernels downstream spread
-    // instead — see pqTrain/ivfPqTrain.)
-    val assigned = nearest(e, seeds, "cid0", "cvec0")
-      .select(col("vec_id"), col("label"), col("embedding"),
-        col("cid0").cast("int").as("cluster"))
-    val centroids = assigned
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      // decimal-exact mean (r7 — plain avg's double partial sums are
-      // partition-order-dependent, not oracle-stable)
-      .groupBy("cluster", "pos").agg(graft.Det.davg(col("v").cast("double")).as("m"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m").cast("float")).as("cvec"))
-    (assigned, centroids)
-  }
-
-  /** The IVF candidate set: coarse-quantizer clusters built with one
-    * deterministic k-means round, the probe's 2 nearest partitions
-    * joined back — (candidates(vec_id, label, embedding), probe). */
-  private def ivfCandidates(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val (assigned, centroids) = ivfBuild(s, d)
-    // probe: its 2 nearest centroids -> search only those clusters
-    val probe = Tables.embeddings(s, d).filter(col("vec_id") === ProbeId)
-      .select(col("embedding").as("probe"))
-    val probedClusters = probe.crossJoin(broadcast(centroids))
-      .select(col("cluster"),
-        cosine_sim(col("probe"), col("cvec")).as("csim"))
-      .orderBy(col("csim").desc, col("cluster").asc)
-      .limit(2)
-    (assigned
-      .join(broadcast(probedClusters.select("cluster")), "cluster")
-      .filter(col("vec_id") =!= ProbeId)
-      .select(col("vec_id"), col("label"), col("embedding")),
-      probe)
-  }
-
-  /** PERSIST the IVF index ON THE TABLE LAYER: cluster assignments
-    * land as a graft table CLUSTERED on the cluster id (range-
-    * partitioned into one file per inverted list, per-file `#range`
-    * stats in the manifest), centroids as a k-row graft sidecar
-    * table. Lloyd runs HERE, at build time — never again per query.
-    * Riding [[graft.tables.SnapshotTable]] means build and ingest get
-    * what every other persisted artifact in this repo has: ATOMIC
-    * manifest commits (a torn build/ingest leaves an orphaned staged
-    * directory readers can never see — vacuum garbage, not a half
-    * index), versioning/time travel, and zero-IO stats. Each build is
-    * a fresh commit — idempotent-overwrite semantics with history.
-    * The empty-corpus contract comes free: the manifest carries the
-    * schema, so an empty index probes as zero candidates instead of
-    * throwing UNABLE_TO_INFER_SCHEMA. */
-  private[graft] def buildIvfIndex(s: SparkSession, d: String, dir: String): Unit = {
-    val (assigned, centroids) = ivfBuild(s, d)
-    new graft.tables.SnapshotTable(s, s"$dir/vectors")
-      .commitClustered(assigned, "cluster", IvfK)
-    new graft.tables.SnapshotTable(s, s"$dir/centroids").commit(centroids)
-  }
-
-  private val IvfK = 8 // must match ivfBuild's k
-
-  /** INCREMENTAL maintenance of the persisted IVF index: assign NEW
-    * vectors to their nearest PERSISTED centroid — no Lloyd, the
-    * quantizer is fixed at build time, which is the standard IVF
-    * ingest contract (recall drifts only as the corpus distribution
-    * does; rebuild is the explicit, separate operation) — and APPEND
-    * them into their clusters' files via the table layer's
-    * exactly-once [[graft.tables.SnapshotTable.appendOnce]]: the
-    * ingest is ATOMIC (visible entirely or not at all — never the
-    * torn half-append a bare `mode("append")` parquet write risks)
-    * and idempotent under `batchId` retry. The staged batch is
-    * range-repartitioned on the cluster id so each new file covers a
-    * narrow cluster range, and the append MINTS per-file `#range`
-    * stats ([[graft.tables.SnapshotTable]] write-time stats), so the
-    * full cluster claim — and the probe's file pruning — survives
-    * every ingest. Existing inverted lists are untouched. */
-  private[graft] def appendToIvfIndex(s: SparkSession, dir: String,
-      fresh: DataFrame, batchId: Long): Unit = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val centroids = s.read.format("graft-table")
-      .option("path", s"$dir/centroids").load()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("sim").desc, col("cluster").asc)
-    val assignedFresh = fresh.crossJoin(broadcast(centroids))
-      .withColumn("sim", cosine_sim(col("embedding"), col("cvec")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("label"), col("embedding"), col("cluster"))
-      .repartitionByRange(IvfK, col("cluster"))
-    new graft.tables.SnapshotTable(s, s"$dir/vectors")
-      .appendOnce(assignedFresh, batchId)
-  }
-
-  /** GENERALIZED persisted-IVF build for ANY (id, float-vector)
-    * relation — the SQL `CALL ann_build` backend. Same recipe as the
-    * oracle-pinned [[buildIvfIndex]] (deterministic seeds, one Lloyd
-    * round with decimal-exact means, cluster-clustered vectors table
-    * + centroid sidecar committed through the table layer), with the
-    * seed selection generalized to arbitrary id spaces: a
-    * deterministic hash-stride filter nominates ~2k candidate rows
-    * (no global sort — the only ordering is over the nominated
-    * handful), pinned by (id) order. Ids must be integral and the
-    * vector column ARRAY<FLOAT> (refused loudly otherwise — a silent
-    * double→float cast would corrupt scores). */
   /** Validate + project an arbitrary relation to the canonical
-    * (id LONG, vec ARRAY<FLOAT>) ANN base. Ids must be integral and
-    * the vector column ARRAY<FLOAT> — refused loudly otherwise (a
+    * (id LONG, vec ARRAY<FLOAT>, keep...) ANN base. Ids must be
+    * integral and the vector column ARRAY<FLOAT> — refused loudly
+    * otherwise (a non-integral id would cast to null silently, and a
     * silent double→float cast would corrupt scores). */
-  private def annBaseFor(df: DataFrame, idCol: String, vecCol: String,
-      verb: String): DataFrame = {
+  private[graft] def annBaseFor(df: DataFrame, idCol: String, vecCol: String,
+      verb: String, keep: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types._
     df.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => ()
@@ -593,39 +325,73 @@ object Similarity extends QueryPack {
           s"got ${other.simpleString} (cast explicitly — a silent " +
           "narrowing would corrupt scores)")
     }
-    df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+    df.select((Seq(col(idCol).cast("long").as("id"), col(vecCol).as("vec")) ++
+      keep.map(col)): _*)
+  }
+
+  /** The `CALL ann_build` input: the validated base, its row count
+    * and its vector dimensionality (checked uniform and divisible by
+    * `m` — two tiny aggregates, build-time only). */
+  private[graft] def annInputFor(df: DataFrame, idCol: String, vecCol: String,
+      m: Int): (DataFrame, Long, Int) = {
+    val base = annBaseFor(df, idCol, vecCol, "ann_build")
+    val n = base.count()
+    require(n > 0, "ann_build: empty input relation")
+    val r = base.agg(min(size(col("vec"))).as("lo"),
+      max(size(col("vec"))).as("hi")).head()
+    require(r.getInt(0) == r.getInt(1),
+      s"ann_build: ragged vector lengths (${r.getInt(0)}..${r.getInt(1)})")
+    val dims = r.getInt(0)
+    require(dims % m == 0, s"ann_build: dims=$dims not divisible by m=$m")
+    (base, n, dims)
   }
 
   /** Deterministic seed nomination WITHOUT a global sort: a hash
     * stride admits ~2·want candidates, the tiny candidate set sorts
-    * by id; degenerate strides fall back to the smallest ids. */
-  private def annSeedRowsFor(base: DataFrame, n: Long, want: Int): DataFrame = {
+    * by id; degenerate strides fall back to the smallest ids. Returns
+    * the ≤ want nominated ids as a predicate. */
+  private[graft] def annSeedIdsFor(base: DataFrame, n: Long, want: Int): Column = {
     val stride = math.max(1L, n / math.max(1, 2 * want))
-    val seeds = base.filter(pmod(xxhash64(col("id")), lit(stride)) === 0)
-      .orderBy("id").limit(want)
-    if (seeds.count() == 0) base.orderBy("id").limit(want) else seeds
+    def ids(df: DataFrame) = df.orderBy("id").limit(want).select("id")
+      .collect().map(_.getLong(0)).toSeq
+    val hits = ids(base.filter(pmod(xxhash64(col("id")), lit(stride)) === 0))
+    col("id").isin((if (hits.nonEmpty) hits else ids(base)): _*)
   }
 
-  /** The coarse-quantizer training round shared by every persisted
-    * SQL tier: one cosine Lloyd round over hash-stride seeds. Returns
-    * (assigned(id, vec, cluster LONG), centroids(cluster, cvec)). */
-  private[ops] def ivfTrainFor(base: DataFrame, n: Long, k: Int): (DataFrame, DataFrame) = {
+  /** Nearest-centroid assignment by cosine: min_by over (−sim,
+    * cluster) — map-side combinable, ties to the smaller cluster id.
+    * rows (id, vec, …) × cents (cluster, cvec) → (id, carry…,
+    * cluster), where `carry` names columns of either side. */
+  private def ivfAssignFor(rows: DataFrame, cents: DataFrame,
+      carry: Seq[String]): DataFrame = {
     import graft.functions.CosineSimilarity.cosine_sim
-    val seeds = annSeedRowsFor(base, n, k)
-      .select(col("id").as("cid0"), col("vec").as("cvec0"))
-    // one Lloyd round: cosine argmax assignment (min_by over
-    // (-sim, cid) — map-side combinable), then decimal-exact means
-    val assigned = base.crossJoin(broadcast(seeds))
-      .withColumn("sim", cosine_sim(col("vec"), col("cvec0")))
+    rows.crossJoin(broadcast(cents))
+      .withColumn("sim", cosine_sim(col("vec"), col("cvec")))
       .groupBy("id")
-      .agg(min_by(struct(col("vec"), col("cid0")),
-        struct((-col("sim")).as("o1"), col("cid0").as("o2"))).as("m"))
-      // cluster ids ARE seed row ids — kept LONG end-to-end (an int
-      // cast would silently truncate ids past Int.MaxValue and could
-      // collide two seeds into one cluster); the graft-table layer
-      // clusters/prunes on longs identically
-      .select(col("id"), col("m.vec").as("vec"),
-        col("m.cid0").as("cluster"))
+      .agg(min_by(struct((carry :+ "cluster").map(col): _*),
+        struct((-col("sim")).as("o1"), col("cluster").as("o2"))).as("m"))
+      .select((col("id") +: (carry :+ "cluster").map(c => col(s"m.$c").as(c))): _*)
+  }
+
+  /** The IVF trainer — one cosine Lloyd round seeded by the first k
+    * rows (by id) matching `seeds`, shared by every IVF and IVF+PQ
+    * path. The orderBy pins WHICH k when the seed rule over-generates
+    * (r7 — a bare limit takes scan-order rows, which is plan-dependent
+    * and not oracle-stable). Cluster ids ARE seed row ids, kept LONG
+    * end-to-end (an int cast would truncate ids past Int.MaxValue and
+    * could collide two seeds into one cluster).
+    * Returns (assigned(id, vec, keep…, cluster), centroids(cluster,
+    * cvec ARRAY<FLOAT>) — decimal-exact means (r7: plain avg's double
+    * partial sums are partition-order-dependent, not oracle-stable)).
+    * (r16 note: both par() and a lazy localCheckpoint on the
+    * assignment were tried and REJECTED — the k=8 kernel is too cheap
+    * to amortize an extra exchange/materialization: q_sim_ann_ivf
+    * 0.72 → 1.2 s either way. The k=64 PQ kernels spread instead —
+    * see [[pqIndexFor]].) */
+  private[graft] def ivfTrainFor(base: DataFrame, seeds: Column, k: Int,
+      keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val assigned = ivfAssignFor(base, base.filter(seeds).orderBy("id").limit(k)
+      .select(col("id").as("cluster"), col("vec").as("cvec")), "vec" +: keep)
     val centroids = assigned
       .select(col("cluster"), posexplode(col("vec")).as(Seq("pos", "v")))
       .groupBy("cluster", "pos")
@@ -636,129 +402,105 @@ object Similarity extends QueryPack {
     (assigned, centroids)
   }
 
-  private[graft] def buildIvfIndexFor(s: SparkSession, df: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      vectorsPath: String, centroidsPath: String): Int = {
-    require(k >= 1, s"ann_build needs k >= 1, got $k")
-    val base = annBaseFor(df, idCol, vecCol, "ann_build")
-    val n = base.count()
-    require(n > 0, "ann_build: empty input relation")
-    val dims = annDimsFor(base, "vec", 1) // uniform-length check + meta dims
-    val (assigned, centroids) = ivfTrainFor(base, n, k)
+  /** PERSIST the IVF index ON THE TABLE LAYER — the `CALL ann_build`
+    * backend and q_sim_ann_ivf_persisted's build: cluster assignments
+    * land as a graft table CLUSTERED on the cluster id (range-
+    * partitioned into one file per inverted list, per-file `#range`
+    * stats in the manifest), centroids as a k-row sidecar table.
+    * Lloyd runs HERE, at build time — never again per query. Riding
+    * [[graft.tables.SnapshotTable]] means build and ingest get ATOMIC
+    * manifest commits (a torn build/ingest leaves an orphaned staged
+    * directory readers can never see — vacuum garbage, not a half
+    * index), versioning/time travel, and zero-IO stats. Each build is
+    * a fresh commit — idempotent-overwrite semantics with history.
+    * The empty-corpus contract comes free: the manifest carries the
+    * schema, so an empty index probes as zero candidates. */
+  private[graft] def buildIvfIndexFor(s: SparkSession, base: DataFrame,
+      seeds: Column, k: Int, vectorsPath: String, centroidsPath: String,
+      keep: Seq[String] = Nil): Unit = {
+    val (assigned, centroids) = ivfTrainFor(base, seeds, k, keep)
     new graft.tables.SnapshotTable(s, vectorsPath)
       .commitClustered(assigned, "cluster", k)
     new graft.tables.SnapshotTable(s, centroidsPath).commit(centroids)
-    dims
   }
 
-  /** Incremental ingest for a [[buildIvfIndexFor]] index — the SQL
-    * `CALL ann_ingest` backend: assign fresh rows against the
-    * PERSISTED centroids (no Lloyd — the standard IVF ingest
-    * contract) and append them into their clusters' files through the
-    * exactly-once table commit. Returns None when `batchId` already
-    * landed (idempotent replay). */
+  /** INCREMENTAL maintenance of a persisted IVF index — the `CALL
+    * ann_ingest` backend: assign fresh rows to their nearest
+    * PERSISTED centroid (no Lloyd — the quantizer is fixed at build
+    * time, the standard IVF ingest contract: recall drifts only as the
+    * corpus distribution does; rebuild is the explicit, separate
+    * operation) and append them into their clusters' files through
+    * the table layer's exactly-once
+    * [[graft.tables.SnapshotTable.appendOnce]]: atomic (never the torn
+    * half-append a bare parquet append risks) and idempotent under
+    * `batchId` retry. The batch is range-repartitioned on the cluster
+    * id so each new file covers a narrow cluster range, and the append
+    * mints per-file `#range` stats, so the cluster claim — and the
+    * probe's file pruning — survives every ingest. Returns None when
+    * `batchId` already landed (idempotent replay). */
   private[graft] def appendToIvfIndexFor(s: SparkSession,
       vectorsPath: String, centroidsPath: String, fresh: DataFrame,
-      idCol: String, vecCol: String, batchId: Long): Option[Long] = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    import org.apache.spark.sql.types._
-    // same id validation as ann_build: a non-integral id would cast
-    // to null silently and corrupt the index
-    fresh.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"ann_ingest id column $idCol must be integral, got ${other.simpleString}")
-    }
-    fresh.schema(vecCol).dataType match {
-      case ArrayType(FloatType, _) => ()
-      case other => throw new IllegalArgumentException(
-        s"ann_ingest vector column $vecCol must be ARRAY<FLOAT>, " +
-          s"got ${other.simpleString}")
-    }
-    val centroids = s.read.format("graft-table")
-      .option("path", centroidsPath).load()
+      idCol: String, vecCol: String, batchId: Long,
+      keep: Seq[String] = Nil): Option[Long] = {
+    val base = annBaseFor(fresh, idCol, vecCol, "ann_ingest", keep)
+    val centroids = annTable(s, centroidsPath)
     val k = centroids.count().toInt max 1
-    val assigned = fresh
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("sim", cosine_sim(col("vec"), col("cvec")))
-      .groupBy("id")
-      .agg(min_by(struct(col("vec"), col("cluster")),
-        struct((-col("sim")).as("o1"), col("cluster").as("o2"))).as("m"))
-      .select(col("id"), col("m.vec").as("vec"),
-        col("m.cluster").as("cluster"))
+    val assigned = ivfAssignFor(base, centroids, "vec" +: keep)
       .repartitionByRange(k, col("cluster"))
     new graft.tables.SnapshotTable(s, vectorsPath)
       .appendOnce(assigned, batchId)
   }
 
-  /** Probe a [[buildIvfIndexFor]] index by a member id: rank the
-    * probe's `nprobe` nearest clusters from the broadcast centroid
-    * table, read only those clusters' files (runtime V2 filtering on
-    * the graft-table scan), exact-cosine rank the candidates. Returns
-    * (id, score) top-k. */
-  private[graft] def probeIvfIndexFor(s: SparkSession,
-      vectorsPath: String, centroidsPath: String,
-      probeId: Long, nprobe: Int, topK: Int): DataFrame = {
-    val vectors = s.read.format("graft-table")
-      .option("path", vectorsPath).load()
-    probeIvfIndexCoreFor(s, vectorsPath, centroidsPath,
-      vectors.filter(col("id") === probeId).select(col("vec").as("probe")),
-      Some(probeId), nprobe, topK)
-  }
-
-  /** Probe a [[buildIvfIndexFor]] index by an ARBITRARY query vector
-    * (the `CALL ann_probe_vec` backend — real query vectors are
-    * usually NOT corpus members): same pruned plan, no member
-    * exclusion. `probeVec` is a 1-row (vec) relation. */
-  private[graft] def probeIvfIndexVecFor(s: SparkSession,
-      vectorsPath: String, centroidsPath: String,
-      probeVec: DataFrame, nprobe: Int, topK: Int): DataFrame =
-    probeIvfIndexCoreFor(s, vectorsPath, centroidsPath,
-      probeVec.select(col("vec").as("probe")), None, nprobe, topK)
-
-  private def probeIvfIndexCoreFor(s: SparkSession,
-      vectorsPath: String, centroidsPath: String,
-      probe: DataFrame, excludeId: Option[Long],
-      nprobe: Int, topK: Int): DataFrame = {
+  /** The probe's `nprobe` nearest clusters (cluster, cvec) by cosine.
+    * Zero-norm vectors make cosine 0/0 = NaN, and a descending sort
+    * ranks NaN ABOVE every real score — NaN is filtered here and in
+    * every top-k below so degenerate vectors never crowd out genuine
+    * neighbors. */
+  private def ivfNearestFor(centroids: DataFrame, probeVec: DataFrame,
+      nprobe: Int): DataFrame = {
     import graft.functions.CosineSimilarity.cosine_sim
-    val centroids = s.read.format("graft-table")
-      .option("path", centroidsPath).load()
-    val vectors = s.read.format("graft-table")
-      .option("path", vectorsPath).load()
-    // zero-norm vectors make cosine 0/0 = NaN, and a descending sort
-    // ranks NaN ABOVE every real score — filter NaN in both the
-    // cluster ranking and the top-k so degenerate vectors can never
-    // crowd out genuine neighbors
-    val probedClusters = probe.crossJoin(broadcast(centroids))
-      .select(col("cluster"),
-        cosine_sim(col("probe"), col("cvec")).as("csim"))
+    probeVec.crossJoin(broadcast(centroids))
+      .select(col("cluster"), col("cvec"),
+        cosine_sim(col("vec"), col("cvec")).as("csim"))
       .filter(!isnan(col("csim")))
       .orderBy(col("csim").desc, col("cluster").asc)
       .limit(nprobe)
-    excludeId.foldLeft(vectors
-      .join(broadcast(probedClusters.select("cluster")), "cluster")) {
-        (df, ex) => df.filter(col("id") =!= ex)
-      }
-      .crossJoin(broadcast(probe))
-      .select(col("id"),
-        graft.Det.r4(cosine_sim(col("vec"), col("probe"))).as("score"))
+  }
+
+  /** The IVF candidate set: the members of the probe's `nprobe`
+    * nearest clusters, minus the excluded member. On a persisted
+    * index the graft-table scan advertises the cluster key for
+    * RUNTIME V2 filtering, so the broadcast join ships the probed
+    * cluster set into the scan and whole files drop at the manifest
+    * (`#range` intersection) before any data IO — the DSv2 analog of
+    * dynamic partition pruning, with no driver lookup (the same plan
+    * serves a probe TABLE). */
+  private def ivfCandidatesFor(vectors: DataFrame, centroids: DataFrame,
+      probeVec: DataFrame, excludeId: Option[Long], nprobe: Int): DataFrame =
+    excludeId.foldLeft(vectors.join(
+      broadcast(ivfNearestFor(centroids, probeVec, nprobe).select("cluster")),
+      "cluster"))((df, ex) => df.filter(col("id") =!= ex))
+
+  /** The IVF probe — per-query key, persisted twin and `CALL
+    * ann_probe` alike: rank the probed clusters' candidates by exact
+    * r4 cosine. vectors (id, vec, cluster, keep…), centroids (cluster,
+    * cvec), probeVec a 1-row (vec) relation. Returns (id, keep…,
+    * score) top-k. */
+  private[graft] def probeIvfIndexFor(vectors: DataFrame, centroids: DataFrame,
+      probeVec: DataFrame, excludeId: Option[Long], nprobe: Int, topK: Int,
+      keep: Seq[String] = Nil): DataFrame = {
+    import graft.functions.CosineSimilarity.cosine_sim
+    ivfCandidatesFor(vectors, centroids, probeVec, excludeId, nprobe)
+      .crossJoin(broadcast(probeVec.select(col("vec").as("probe"))))
+      .select(((col("id") +: keep.map(col)) :+
+        graft.Det.r4(cosine_sim(col("vec"), col("probe"))).as("score")): _*)
       .filter(!isnan(col("score")))
       .orderBy(col("score").desc, col("id").asc)
       .limit(topK)
   }
 
-  // ---- generalized PQ tiers for the SQL ANN lifecycle -------------------
-  //
-  // CALL ann_build(tier => 'pq' | 'ivf_pq') persists the compression
-  // tiers the same way the IVF tier persists its inverted lists:
-  // codebooks and 8-byte-per-vector code tables as ordinary catalog
-  // tables, trained ONCE at build time. Probe is broadcast-codebook
-  // ADC over codes only; ingest encodes against the PERSISTED
-  // codebooks (no Lloyd) — the standard quantizer-is-fixed contract.
-
   /** One row per (id, subspace): the m subvectors of every vector of
-    * an (id[, cluster], <vecCol>) relation. `sub` = dims / m. */
+    * a relation, `keep` columns riding along. `sub` = dims / m. */
   private def annSubsFor(base: DataFrame, vecCol: String, m: Int, sub: Int,
       keep: Seq[String]): DataFrame =
     base.select((keep.map(col) :+
@@ -767,346 +509,193 @@ object Similarity extends QueryPack {
           slice(col(vecCol), i * sub + 1, sub).as("sv"))): _*)).as("x")): _*)
       .select((keep.map(col) ++ Seq(col("x.s").as("s"), col("x.sv").as("sv"))): _*)
 
-  /** Vector dimensionality of the base relation, validated uniform
-    * and divisible by m. One tiny aggregate — build-time only. */
-  private def annDimsFor(base: DataFrame, vecCol: String, m: Int): Int = {
-    val r = base.agg(min(size(col(vecCol))).as("lo"),
-      max(size(col(vecCol))).as("hi")).head()
-    require(!r.isNullAt(0), "ann_build: empty input relation")
-    require(r.getInt(0) == r.getInt(1),
-      s"ann_build: ragged vector lengths (${r.getInt(0)}..${r.getInt(1)})")
-    val dims = r.getInt(0)
-    require(dims % m == 0, s"ann_build: dims=$dims not divisible by m=$m")
-    dims
-  }
-
-  /** Train per-subspace codebooks over (id, s, sv) subvectors: the
-    * nominated candidate ids seed every subspace, one decimal-exact
-    * Lloyd round refines, and code ids DENSE-REMAP to bytes
-    * (row_number over each ≤kCodes-row codebook — order-preserving,
-    * so min_by tie-breaks are unchanged). Returns (s, code TINYINT,
-    * cvec) — floats for raw-vector PQ, doubles for residual PQ. */
-  private def annTrainCodebooksFor(subs: DataFrame, candIds: DataFrame,
-      kCodes: Int, toFloat: Boolean): DataFrame = {
+  /** The PQ trainer: per-subspace codebooks over (id, s, sv)
+    * subvectors. The subvectors of the first `kCodes` ids matching
+    * `seeds` seed every subspace and one decimal-exact Lloyd round refines.
+    * A code is its seed's rank by id within the subspace (0..kCodes−1,
+    * a byte): order-preserving, so argmin tie-breaks match the
+    * oracle's seed-id order. Entries keep the subvectors' element type: floats
+    * for raw-vector PQ, doubles for residual PQ (residual magnitudes
+    * are small and the extra bits are free). The assignment is the
+    * FUSED candidate scan ([[graft.functions.ArgMinL2]]) over the k
+    * seeds collapsed into one broadcast array row per subspace — the
+    * same (d2, cid) total order as the oracle's ROW_NUMBER, with no
+    * n·m×k join-row materialization (r17: the exploded shape carried
+    * 27 s + 22 s of task time in q_sim_ann_ivf_pq at sf0.1). Lazy
+    * localCheckpoint (r17): the codebook has two consumers (the
+    * encode join and the probe's ADC table), each of which re-ran —
+    * and re-compiled — the train chain; m×k ≤ 512 rows, the §5
+    * criterion. Returns (s, code TINYINT, cvec). */
+  private def annTrainCodebooksFor(subs: DataFrame, seeds: Column,
+      kCodes: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val seeds = subs.join(broadcast(candIds), "id")
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val floats = subs.schema("sv").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val seedSubs = subs.filter(seeds)
       .withColumn("rn", row_number().over(
         Window.partitionBy("s").orderBy("id")))
       .filter(col("rn") <= kCodes)
-      .select(col("s").as("s0"), col("id").as("cid0"), col("sv").as("cvec0"))
-    // fused argmin over the broadcast candidate array (r17 — see
-    // pqTrain); the subvector rides the row, no k-fold join blowup
-    val assigned = subs
-      .join(broadcast(argminCands(seeds, "s0", "cid0", "cvec0")),
+      .select(col("s").as("s0"), (col("rn") - 1).as("cid0"), col("sv").as("cvec0"))
+    subs
+      .join(broadcast(argminCands(seedSubs, "s0", "cid0", "cvec0")),
         col("s") === col("s0"))
       .select(col("s"), col("sv"),
         graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("cid"))
-    val mv = assigned
       .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("pos", "v")))
       .groupBy("s", "cid", "pos")
       .agg(graft.Det.davg(col("v").cast("double")).as("mv"))
       .groupBy("s", "cid")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-        x => if (toFloat) x.getField("mv").cast("float") else x.getField("mv"))
+        x => if (floats) x.getField("mv").cast("float") else x.getField("mv"))
         .as("cvec"))
-    mv.withColumn("code",
-      (row_number().over(Window.partitionBy("s").orderBy("cid")) - 1)
-        .cast("tinyint"))
-      .select(col("s"), col("code"), col("cvec"))
+      .select(col("s"), col("cid").cast("tinyint").as("code"), col("cvec"))
+      .localCheckpoint(eager = false)
   }
 
-  /** Encode every vector against a trained/persisted codebook: m
-    * nearest-entry argmins (fused ArgMinL2 candidate scan — r17, was
-    * min_by over k exploded join rows), packed to ONE ARRAY<TINYINT>
-    * row per vector in subspace order. The tinyint codes pass through
-    * the argmin's long lane and cast back — 0..126 is loss-free and
-    * order-preserving, so tie-breaks are unchanged. */
+  /** The PQ encoder: every subvector to its nearest codebook entry
+    * (the same fused argmin). Returns the LONG form (id, keep…, s,
+    * code) that ADC joins on, codes in the argmin's long lane; only a
+    * commit packs them to bytes ([[annPackFor]]). */
   private def annEncodeFor(subs: DataFrame, cb: DataFrame,
-      keep: Seq[String]): DataFrame = {
-    val idKeep = Seq("id") ++ keep
+      keep: Seq[String]): DataFrame =
     subs
       .join(broadcast(argminCands(cb, "s", "code", "cvec")),
         col("s") === col("s0"))
-      .select((idKeep.map(col) :+ col("s") :+
-        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands"))
-          .cast("tinyint").as("code")): _*)
-      .groupBy(idKeep.map(col): _*)
+      .select(((col("id") +: keep.map(col)) :+ col("s") :+
+        graft.functions.ArgMinL2.argmin_l2(col("sv"), col("cands")).as("code")): _*)
+
+  /** Pack long-form codes to ONE ARRAY<TINYINT> row per vector in
+    * subspace order — the committed 8-byte-per-vector layout (256
+    * float bytes against 8: the real 32× compression, not longs
+    * posing as codes). */
+  private def annPackFor(codes: DataFrame): DataFrame =
+    codes.groupBy(codes.columns.filterNot(Set("s", "code")).map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("codes"))
+        x => x.getField("code").cast("tinyint")).as("codes"))
+
+  /** A committed code table back to the long form: posexplode
+    * recovers (s, code) — the array position IS the subspace. */
+  private[graft] def annUnpackFor(packed: DataFrame): DataFrame =
+    packed.select((packed.columns.filter(_ != "codes").map(col) :+
+      posexplode(col("codes")).as(Seq("s", "code"))): _*)
+
+  /** The PQ index content — the one train + encode path behind every
+    * PQ tier (per-query key, persisted twin, `CALL ann_build`,
+    * residual IVF+PQ, RecallSweep). par(): codebook train and encode
+    * are k-fold kernels — see [[par]]. Lazy localCheckpoint (r17) on
+    * the subvectors: FOUR consumers (seeds, assignment, encode, and a
+    * probe that reads the codes), and stage probing showed each
+    * consumer job not only re-running the slice pipeline but
+    * RE-JANINO-COMPILING its fused stage — the thread dump had all 31
+    * workers blocked in CodeGenerator.compile, ~1 s per hot stage.
+    * The checkpoint is one n·m-row pass over the (small) vector side —
+    * the §5 persist criterion, not a fact-table cache; at 100 TB the
+    * train path necessarily materializes this much anyway (it is what
+    * the persisted tier commits as the index). Returns (codebook(s,
+    * code, cvec), codes(id, keep…, s, code)). */
+  private[ops] def pqIndexFor(rel: DataFrame, vecCol: String, seeds: Column,
+      m: Int, dims: Int, kCodes: Int, keep: Seq[String]): (DataFrame, DataFrame) = {
+    val subs = annSubsFor(par(rel), vecCol, m, dims / m, "id" +: keep)
+      .localCheckpoint(eager = false)
+    val cb = annTrainCodebooksFor(subs, seeds, kCodes)
+    (cb, annEncodeFor(subs, cb, keep))
   }
 
-  /** `CALL ann_build(tier => 'pq')`: codebooks + 8-byte codes as
-    * catalog tables. Returns dims (persisted in the meta table so
-    * probe/ingest can split vectors identically). */
-  private[graft] def buildPqIndexFor(s: SparkSession, df: DataFrame,
-      idCol: String, vecCol: String, m: Int, kCodes: Int,
-      codesPath: String, codebooksPath: String): Int = {
-    require(m >= 1 && kCodes >= 1 && kCodes <= 127,
-      s"ann_build pq needs 1 <= m and 1 <= codes <= 127, got m=$m codes=$kCodes")
-    val base = annBaseFor(df, idCol, vecCol, "ann_build")
-    val n = base.count()
-    require(n > 0, "ann_build: empty input relation")
-    val dims = annDimsFor(base, "vec", m)
-    // par(): codebook train + encode are k-fold kernels — see [[par]]
-    val subs = annSubsFor(par(base), "vec", m, dims / m, Seq("id"))
-    val cb = annTrainCodebooksFor(subs,
-      annSeedRowsFor(base, n, kCodes).select("id"), kCodes, toFloat = true)
-    new graft.tables.SnapshotTable(s, codebooksPath).commit(cb)
-    new graft.tables.SnapshotTable(s, codesPath)
-      .commit(annEncodeFor(subs, cb, Seq.empty))
-    dims
+  /** The residual IVF+PQ index content: the IVF trainer's coarse
+    * quantizer, then [[pqIndexFor]] over every vector's residual
+    * against its centroid (float−float in doubles). Lazy checkpoint
+    * (r17) on the k-row centroid table: two broadcast consumers (the
+    * residual join and the probe's coarse ranking), each otherwise
+    * re-running — and re-compiling — the coarse-quantizer chain.
+    * Returns (centroids, codebook, codes(id, cluster, keep…, s,
+    * code)). */
+  private[ops] def ivfPqIndexFor(base: DataFrame, coarseSeeds: Column, k: Int,
+      codeSeeds: Column, m: Int, dims: Int, kCodes: Int,
+      keep: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+    val (assigned, centroids0) = ivfTrainFor(base, coarseSeeds, k, keep)
+    val centroids = centroids0.localCheckpoint(eager = false)
+    val resid = assigned.join(broadcast(centroids), "cluster")
+      .select(((Seq(col("id"), col("cluster")) ++ keep.map(col)) :+
+        residual(col("vec"), col("cvec")).as("rvec")): _*)
+    val (cb, codes) = pqIndexFor(resid, "rvec", codeSeeds, m, dims, kCodes,
+      "cluster" +: keep)
+    (centroids, cb, codes)
   }
 
-  /** `CALL ann_build(tier => 'ivf_pq')`: coarse centroids + residual
-    * codebooks + cluster-clustered 8-byte codes (one file per
-    * inverted list — a probe reads only the probed clusters' code
-    * files). Returns dims. */
-  private[graft] def buildIvfPqIndexFor(s: SparkSession, df: DataFrame,
-      idCol: String, vecCol: String, k: Int, m: Int, kCodes: Int,
-      codesPath: String, codebooksPath: String, centroidsPath: String): Int = {
-    require(k >= 1, s"ann_build needs k >= 1, got $k")
-    require(m >= 1 && kCodes >= 1 && kCodes <= 127,
-      s"ann_build ivf_pq needs 1 <= m and 1 <= codes <= 127, got m=$m codes=$kCodes")
-    val base = annBaseFor(df, idCol, vecCol, "ann_build")
-    val n = base.count()
-    require(n > 0, "ann_build: empty input relation")
-    val dims = annDimsFor(base, "vec", m)
-    val (assigned, centroids) = ivfTrainFor(base, n, k)
-    new graft.tables.SnapshotTable(s, centroidsPath).commit(centroids)
-    // par(): same k-fold train/encode hazard — see [[par]]
-    val resid = par(assigned).join(broadcast(centroids), "cluster")
-      .select(col("id"), col("cluster"),
-        zip_with(col("vec"), col("cvec"),
-          (x, c) => x.cast("double") - c.cast("double")).as("rvec"))
-    val subs = annSubsFor(resid, "rvec", m, dims / m, Seq("id", "cluster"))
-    val cb = annTrainCodebooksFor(subs.select("id", "s", "sv"),
-      annSeedRowsFor(base, n, kCodes).select("id"), kCodes, toFloat = false)
-    new graft.tables.SnapshotTable(s, codebooksPath).commit(cb)
-    new graft.tables.SnapshotTable(s, codesPath)
-      .commitClustered(annEncodeFor(subs, cb, Seq("cluster")), "cluster", k)
-    dims
-  }
-
-  /** `CALL ann_build(tier => 'nsw')`: the navigable-small-world graph
-    * as three catalog tables — `__ann_edges` (u, v) CLUSTERED on u
-    * (a probe round's frontier join prunes to the frontier's edge
-    * files via `#range`), `__ann_hubs` (h, hvec — the entry layer, a
-    * hash-stride sample of `k` rows), and `__ann_buckets` (id,
-    * bucket — the LSH assignment future ingests generate candidates
-    * from). Base-layer links: top-`m` same-bucket neighbors,
-    * UNDIRECTED (directed top-M graphs concentrate into sinks — see
-    * [[nswTopK]]), plus 2 directed hub links per node. Vectors stay
-    * in the source table: the graph is a pure index. Returns dims. */
-  private[graft] def buildNswIndexFor(s: SparkSession, df: DataFrame,
-      idCol: String, vecCol: String, hubCount: Int, m: Int,
-      edgesPath: String, hubsPath: String, bucketsPath: String): Int = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    import org.apache.spark.sql.expressions.Window
-    require(hubCount >= 1 && m >= 1,
-      s"ann_build nsw needs k (hubs) >= 1 and m (degree) >= 1, got k=$hubCount m=$m")
-    val base = annBaseFor(df, idCol, vecCol, "ann_build")
-    val n = base.count()
-    require(n > 0, "ann_build: empty input relation")
-    val dims = annDimsFor(base, "vec", 1)
-    // spread + co-partition on the link-join key — see [[nswTopK]]
-    val buckets = base.withColumn("bucket",
-      hyperplaneBucket(col("vec"), 4, dims))
-      .repartition(s.sparkContext.defaultParallelism, col("bucket"))
-    val wU = Window.partitionBy("u").orderBy(col("cos").desc, col("v").asc)
-    val bEdges = buckets.select(col("id").as("u"), col("vec").as("uvec"),
-        col("bucket"))
-      .join(buckets.select(col("id").as("v"), col("vec").as("vvec"),
-        col("bucket")), "bucket")
-      .filter(col("u") =!= col("v"))
-      .select(col("u"), col("v"), cosine_sim(col("uvec"), col("vvec")).as("cos"))
-      .filter(!isnan(col("cos"))) // zero-norm guard — see nswTopK
-      .withColumn("rn", row_number().over(wU)).filter(col("rn") <= m)
-      .select("u", "v")
-    val hubs = annSeedRowsFor(base, n, hubCount)
-      .select(col("id").as("h"), col("vec").as("hvec"))
-    val hEdges = par(base).select(col("id").as("u"), col("vec").as("uvec"))
-      .crossJoin(broadcast(hubs)).filter(col("u") =!= col("h"))
-      .select(col("u"), col("h").as("v"),
-        cosine_sim(col("uvec"), col("hvec")).as("cos"))
-      .filter(!isnan(col("cos")))
-      .withColumn("rn", row_number().over(wU)).filter(col("rn") <= 2)
-      .select("u", "v")
-    val edges = bEdges
-      .unionAll(bEdges.select(col("v").as("u"), col("u").as("v")))
-      .unionAll(hEdges).dropDuplicates("u", "v")
-    new graft.tables.SnapshotTable(s, edgesPath)
-      .commitClustered(edges, "u", 16)
-    new graft.tables.SnapshotTable(s, hubsPath).commit(hubs)
-    new graft.tables.SnapshotTable(s, bucketsPath)
-      .commit(buckets.select("id", "bucket"))
-    dims
-  }
-
-  private val NswForBeam = 10  // generalized-tier beam width
-  private val NswForRounds = 4 // generalized-tier expansion rounds
-
-  /** `CALL ann_probe` on the NSW tier: batch beam search over the
-    * PERSISTED graph — score the hub table, then R rounds of
-    * frontier-edge expansion (each a small-side join pruned to the
-    * frontier's edge files) + candidate-vector fetches from the
-    * id-keyed SOURCE table. Probe cost is |hubs| + R·B·(m+2) vector
-    * reads — independent of n at fixed parameters. */
-  private[graft] def probeNswIndexFor(s: SparkSession, baseDf: DataFrame,
-      idCol: String, vecCol: String, probeVec: DataFrame,
-      excludeId: Option[Long], edgesPath: String, hubsPath: String,
-      topK: Int): DataFrame = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val base = baseDf.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("bvec"))
-    val edges = s.read.format("graft-table").option("path", edgesPath).load()
-    val hubs = s.read.format("graft-table").option("path", hubsPath).load()
-    val probe = probeVec.select(col("vec").as("probe"))
-    def score(ids: DataFrame): DataFrame =
-      base.join(ids, "id").crossJoin(broadcast(probe))
-        .select(col("id"), cosine_sim(col("bvec"), col("probe")).as("cos"))
-        .filter(!isnan(col("cos")))
-    var visited = hubs.select(col("h").as("id"))
-    var frontier = score(visited)
-      .orderBy(col("cos").desc, col("id").asc)
-      .limit(NswForBeam).select("id")
-    for (_ <- 1 to NswForRounds) {
-      val neigh = edges.join(frontier.select(col("id").as("u")), "u")
-        .select(col("v").as("id"))
-      visited = visited.unionAll(neigh).distinct()
-      frontier = score(visited)
-        .orderBy(col("cos").desc, col("id").asc)
-        .limit(NswForBeam).select("id")
-    }
-    excludeId.foldLeft(score(visited))((df, ex) => df.filter(col("id") =!= ex))
-      .select(col("id"), graft.Det.r4(col("cos")).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
+  /** ADC top-k: candidates joined to their looked-up distance cells
+    * score as the decimal-exact sum of their m cells. */
+  private def adcTopFor(cells: DataFrame, keep: Seq[String], topK: Int): DataFrame =
+    cells.groupBy((col("id") +: keep.map(col)): _*)
+      .agg(graft.Det.r4(graft.Det.dsum(col("dist"), 9)).as("adist"))
+      .orderBy(col("adist").asc, col("id").asc)
       .limit(topK)
+
+  /** `CALL ann_build(tier => 'pq')` and q_sim_ann_pq_persisted's
+    * build: codebooks (m×k rows, constant-size) and the packed code
+    * table as graft tables. Training runs HERE, never per query. */
+  private[graft] def buildPqIndexFor(s: SparkSession, base: DataFrame,
+      seeds: Column, m: Int, dims: Int, kCodes: Int, codesPath: String,
+      codebooksPath: String, keep: Seq[String] = Nil): Unit = {
+    val (cb, codes) = pqIndexFor(base, "vec", seeds, m, dims, kCodes, keep)
+    new graft.tables.SnapshotTable(s, codebooksPath).commit(cb)
+    new graft.tables.SnapshotTable(s, codesPath).commit(annPackFor(codes))
   }
 
-  /** `CALL ann_ingest` on the NSW tier — HNSW-style insertion,
-    * append-only: each staged row buckets by the pure LSH arithmetic,
-    * generates candidates from the PERSISTED bucket assignment plus
-    * the hub layer, links to its top-`m` by cosine, and both
-    * directions of every new link land as APPENDED edge rows (an
-    * edge table never rewrites old files — bidirectional insertion
-    * without read-modify-write; popular nodes' degree can grow past
-    * m until the next rebuild, the documented trade). The bucket
-    * append makes the new rows candidates for FUTURE ingests. Both
-    * appends share the batch id; a torn retry self-heals (each
-    * table's ledger skips its own landed half). Rows WITHIN one
-    * batch don't link to each other (candidates come from the
-    * PERSISTED bucket table) — the standard sequential-insertion
-    * simplification; they interconnect through shared pre-existing
-    * neighbors and the next rebuild. */
-  private[graft] def appendToNswIndexFor(s: SparkSession, baseDf: DataFrame,
-      fresh: DataFrame, idCol: String, vecCol: String, m: Int, dims: Int,
-      edgesPath: String, hubsPath: String, bucketsPath: String,
-      batchId: Long): Option[Long] = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    import org.apache.spark.sql.expressions.Window
-    val freshBase = annBaseFor(fresh, idCol, vecCol, "ann_ingest")
-      .withColumn("bucket", hyperplaneBucket(col("vec"), 4, dims))
-    val base = baseDf.select(col(idCol).cast("long").as("cid"),
-      col(vecCol).as("cvec"))
-    val buckets = s.read.format("graft-table").option("path", bucketsPath).load()
-    val hubs = s.read.format("graft-table").option("path", hubsPath).load()
-    val bucketCands = freshBase
-      .join(buckets.select(col("id").as("cid"), col("bucket")), "bucket")
-      .select(col("id").as("u"), col("vec").as("uvec"), col("cid"))
-      .join(base, "cid")
-    val hubCands = freshBase
-      .select(col("id").as("u"), col("vec").as("uvec"))
-      .crossJoin(broadcast(hubs.select(col("h").as("cid"), col("hvec").as("cvec"))))
-    val wU = Window.partitionBy("u").orderBy(col("cos").desc, col("v").asc)
-    // mirror the BUILD's link budget exactly: top-m bucket links PLUS
-    // 2 guaranteed hub links per ingested node (one combined window
-    // would let a dense bucket crowd out the long-range links that
-    // keep fresh rows reachable from distant beam entries)
-    def topLinks(cands: DataFrame, n: Int): DataFrame = cands
-      .filter(col("u") =!= col("cid"))
-      .select(col("u"), col("cid").as("v"),
-        cosine_sim(col("uvec"), col("cvec")).as("cos"))
-      .filter(!isnan(col("cos")))
-      .withColumn("rn", row_number().over(wU)).filter(col("rn") <= n)
-      .select("u", "v")
-    val links = topLinks(bucketCands, m)
-      .unionAll(topLinks(hubCands, 2))
-      .dropDuplicates("u", "v")
-    val edges2 = links
-      .unionAll(links.select(col("v").as("u"), col("u").as("v")))
-      .dropDuplicates("u", "v")
-    val v = new graft.tables.SnapshotTable(s, edgesPath)
-      .appendOnce(edges2.repartitionByRange(4, col("u")), batchId)
-    new graft.tables.SnapshotTable(s, bucketsPath)
-      .appendOnce(freshBase.select("id", "bucket"), batchId)
-    v
+  /** `CALL ann_build(tier => 'ivf_pq')` and
+    * q_sim_ann_ivf_pq_persisted's build: coarse centroids + residual
+    * codebooks + codes CLUSTERED on the coarse cluster id (one file
+    * per inverted list, `#range` manifest stats — a probe reads only
+    * the probed clusters' code files). */
+  private[graft] def buildIvfPqIndexFor(s: SparkSession, base: DataFrame,
+      coarseSeeds: Column, codeSeeds: Column, k: Int, m: Int, dims: Int,
+      kCodes: Int, codesPath: String, codebooksPath: String,
+      centroidsPath: String, keep: Seq[String] = Nil): Unit = {
+    val (centroids, cb, codes) =
+      ivfPqIndexFor(base, coarseSeeds, k, codeSeeds, m, dims, kCodes, keep)
+    new graft.tables.SnapshotTable(s, centroidsPath).commit(centroids)
+    new graft.tables.SnapshotTable(s, codebooksPath).commit(cb)
+    new graft.tables.SnapshotTable(s, codesPath)
+      .commitClustered(annPackFor(codes), "cluster", k)
   }
 
-  /** `CALL ann_probe` on the PQ tier: the probe vector (one
-    * id-filtered row of the source table) builds its m×k ADC table
-    * against the broadcast codebook; candidates are the CODE TABLE
-    * ONLY — posexplode recovers (s, code), the array position IS the
-    * subspace. Returns (id, adist) ascending. */
-  private[graft] def probePqIndexFor(s: SparkSession, probeVec: DataFrame,
-      excludeId: Option[Long], m: Int, dims: Int,
-      codesPath: String, codebooksPath: String, topK: Int): DataFrame = {
-    val cb = s.read.format("graft-table")
-      .option("path", codebooksPath).load()
+  /** The PQ probe — asymmetric distance computation: the probe's
+    * m×k exact distance table broadcasts; candidates are the long-form
+    * CODES ONLY (never a raw candidate vector — at 100 TB the scan
+    * cost is |codes|, 32× smaller than the corpus) and rank by the
+    * decimal-exact sum of their m looked-up cells. Returns (id, keep…,
+    * adist) ascending. */
+  private[graft] def probePqIndexFor(probeVec: DataFrame, cb: DataFrame,
+      codes: DataFrame, excludeId: Option[Long], m: Int, dims: Int,
+      topK: Int, keep: Seq[String] = Nil): DataFrame = {
     val probeSubs = annSubsFor(probeVec, "vec", m, dims / m, Seq.empty)
       .select(col("s").as("ps"), col("sv").as("psv"))
     val dtab = cb.join(broadcast(probeSubs), col("s") === col("ps"))
       .select(col("s"), col("code"), l2sq(col("psv"), col("cvec")).as("dist"))
-    excludeId.foldLeft(
-      s.read.format("graft-table").option("path", codesPath).load()) {
-        (df, ex) => df.filter(col("id") =!= ex)
-      }
-      .select(col("id"), posexplode(col("codes")).as(Seq("s", "code")))
-      .join(broadcast(dtab), Seq("s", "code"))
-      .groupBy("id")
-      .agg(graft.Det.r4(graft.Det.dsum(col("dist"), 9)).as("adist"))
-      .orderBy(col("adist").asc, col("id").asc)
-      .limit(topK)
+    adcTopFor(excludeId.foldLeft(codes)((df, ex) => df.filter(col("id") =!= ex))
+      .join(broadcast(dtab), Seq("s", "code")), keep, topK)
   }
 
-  /** `CALL ann_probe` on the IVF+PQ tier: coarse ranking over the
-    * broadcast centroid table, per-probed-cluster residual ADC
-    * tables, and the (cluster, s, code) join that looks up cells AND
-    * prunes to the probed clusters' code FILES in one step. */
-  private[graft] def probeIvfPqIndexFor(s: SparkSession, probeVec: DataFrame,
-      excludeId: Option[Long], nprobe: Int, m: Int, dims: Int, codesPath: String,
-      codebooksPath: String, centroidsPath: String, topK: Int): DataFrame = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val centroids = s.read.format("graft-table")
-      .option("path", centroidsPath).load()
-    val probedClusters = probeVec.crossJoin(broadcast(centroids))
-      .select(col("cluster"), col("cvec"),
-        cosine_sim(col("vec"), col("cvec")).as("csim"))
-      .filter(!isnan(col("csim")))
-      .orderBy(col("csim").desc, col("cluster").asc)
-      .limit(nprobe)
+  /** The IVF+PQ probe: coarse ranking over the broadcast centroid
+    * table, a PER-PROBED-CLUSTER probe residual and its m×k ADC
+    * table, and the (cluster, s, code) join that looks up the cells
+    * AND prunes to the probed clusters (their code FILES, on a
+    * clustered committed index) in one step. */
+  private[graft] def probeIvfPqIndexFor(probeVec: DataFrame, centroids: DataFrame,
+      cb: DataFrame, codes: DataFrame, excludeId: Option[Long], nprobe: Int,
+      m: Int, dims: Int, topK: Int, keep: Seq[String] = Nil): DataFrame = {
     val prSubs = annSubsFor(
-      probedClusters.crossJoin(broadcast(probeVec))
-        .select(col("cluster").as("pc"),
-          zip_with(col("vec"), col("cvec"),
-            (x, c) => x.cast("double") - c.cast("double")).as("prv")),
+      ivfNearestFor(centroids, probeVec, nprobe).crossJoin(broadcast(probeVec))
+        .select(col("cluster").as("pc"), residual(col("vec"), col("cvec")).as("prv")),
       "prv", m, dims / m, Seq("pc"))
       .select(col("pc"), col("s").as("ps"), col("sv").as("psv"))
-    val cb = s.read.format("graft-table")
-      .option("path", codebooksPath).load()
     val dtab = cb.join(broadcast(prSubs), col("s") === col("ps"))
       .select(col("pc").as("cluster"), col("s"), col("code"),
         l2sq(col("psv"), col("cvec")).as("dist"))
-    excludeId.foldLeft(
-      s.read.format("graft-table").option("path", codesPath).load()) {
-        (df, ex) => df.filter(col("id") =!= ex)
-      }
-      .select(col("id"), col("cluster"),
-        posexplode(col("codes")).as(Seq("s", "code")))
-      .join(broadcast(dtab), Seq("cluster", "s", "code"))
-      .groupBy("id")
-      .agg(graft.Det.r4(graft.Det.dsum(col("dist"), 9)).as("adist"))
-      .orderBy(col("adist").asc, col("id").asc)
-      .limit(topK)
+    adcTopFor(excludeId.foldLeft(codes)((df, ex) => df.filter(col("id") =!= ex))
+      .join(broadcast(dtab), Seq("cluster", "s", "code")), keep, topK)
   }
 
   /** `CALL ann_ingest` on the PQ tier: encode the staging rows
@@ -1117,10 +706,9 @@ object Similarity extends QueryPack {
       codebooksPath: String, fresh: DataFrame, idCol: String, vecCol: String,
       m: Int, dims: Int, batchId: Long): Option[Long] = {
     val base = annBaseFor(fresh, idCol, vecCol, "ann_ingest")
-    val cb = s.read.format("graft-table")
-      .option("path", codebooksPath).load()
-    val packed = annEncodeFor(
-      annSubsFor(base, "vec", m, dims / m, Seq("id")), cb, Seq.empty)
+    val packed = annPackFor(annEncodeFor(
+      annSubsFor(base, "vec", m, dims / m, Seq("id")),
+      annTable(s, codebooksPath), Seq.empty))
     new graft.tables.SnapshotTable(s, codesPath).appendOnce(packed, batchId)
   }
 
@@ -1132,139 +720,55 @@ object Similarity extends QueryPack {
       codebooksPath: String, centroidsPath: String, fresh: DataFrame,
       idCol: String, vecCol: String, m: Int, dims: Int,
       batchId: Long): Option[Long] = {
-    import graft.functions.CosineSimilarity.cosine_sim
     val base = annBaseFor(fresh, idCol, vecCol, "ann_ingest")
-    val centroids = s.read.format("graft-table")
-      .option("path", centroidsPath).load()
+    val centroids = annTable(s, centroidsPath)
     val k = centroids.count().toInt max 1
-    val assigned = base.crossJoin(broadcast(centroids))
-      .withColumn("sim", cosine_sim(col("vec"), col("cvec")))
-      .groupBy("id")
-      .agg(min_by(struct(col("vec"), col("cluster"), col("cvec")),
-        struct((-col("sim")).as("o1"), col("cluster").as("o2"))).as("m"))
-      .select(col("id"), col("m.cluster").as("cluster"),
-        zip_with(col("m.vec"), col("m.cvec"),
-          (x, c) => x.cast("double") - c.cast("double")).as("rvec"))
-    val cb = s.read.format("graft-table")
-      .option("path", codebooksPath).load()
-    val packed = annEncodeFor(
-      annSubsFor(assigned, "rvec", m, dims / m, Seq("id", "cluster")),
-      cb, Seq("cluster"))
+    val resid = ivfAssignFor(base, centroids, Seq("vec", "cvec"))
+      .select(col("id"), col("cluster"),
+        residual(col("vec"), col("cvec")).as("rvec"))
+    val packed = annPackFor(annEncodeFor(
+      annSubsFor(resid, "rvec", m, dims / m, Seq("id", "cluster")),
+      annTable(s, codebooksPath), Seq("cluster")))
       .repartitionByRange(k, col("cluster"))
     new graft.tables.SnapshotTable(s, codesPath).appendOnce(packed, batchId)
   }
 
-  /** Probe the PERSISTED IVF index: the k-row centroid table ranks
-    * the probe's `nprobe` nearest clusters (broadcast — O(k) work),
-    * and the candidate scan reads only the probed clusters' FILES:
-    * the graft-table DSv2 scan advertises the cluster key for
-    * RUNTIME V2 filtering, so the broadcast join ships the probed
-    * cluster set into the scan and whole files drop at the manifest
-    * (`#range` intersection) before any data IO — the DSv2 analog of
-    * dynamic partition pruning, with no driver lookup (the same plan
-    * serves a probe TABLE). Exact cosine ranks the candidates. */
-  private[graft] def probeIvfIndex(s: SparkSession, dir: String,
-      probe: DataFrame, probeId: Long, nprobe: Int, k: Int): DataFrame = {
-    import graft.functions.CosineSimilarity.cosine_sim
-    val centroids = s.read.format("graft-table")
-      .option("path", s"$dir/centroids").load()
-    val vectors = s.read.format("graft-table")
-      .option("path", s"$dir/vectors").load()
-    val probedClusters = probe.crossJoin(broadcast(centroids))
-      .select(col("cluster"),
-        cosine_sim(col("probe"), col("cvec")).as("csim"))
-      .orderBy(col("csim").desc, col("cluster").asc)
-      .limit(nprobe)
-    vectors
-      .join(broadcast(probedClusters.select("cluster")), "cluster")
-      .filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        graft.Det.r4(cosine_sim(col("embedding"), col("probe"))).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** PERSISTED IVF — the missing durability half of q_sim_ann_ivf:
-    * at 100 TB the coarse quantizer (Lloyd over the corpus) must be a
-    * committed artifact, not a per-query computation. The index build
+  /** PERSISTED IVF — the durability half of q_sim_ann_ivf: at 100 TB
+    * the coarse quantizer (Lloyd over the corpus) must be a committed
+    * artifact, not a per-query computation. The index build
     * (idempotent overwrite, honest amortized-cost accounting — same
-    * convention as q_sim_ann_indexed) writes centroids + partitioned
+    * convention as q_sim_ann_indexed) commits centroids + clustered
     * inverted lists; the PROBE phase touches only persisted data and
-    * reads exactly the probed clusters' directories (partition
-    * pruning asserted in SimilaritySpec, which also proves
-    * probe-phase row-equality with the per-query q_sim_ann_ivf).
-    * Same quantizer and scoring as q_sim_ann_ivf, so the same DuckDB
-    * oracle gates the persisted path bit-exactly. */
+    * reads exactly the probed clusters' files (runtime pruning
+    * asserted in SimilaritySpec, which also proves probe-phase
+    * row-equality with the per-query q_sim_ann_ivf). Same trainer,
+    * seeds and probe as q_sim_ann_ivf, so the same DuckDB oracle
+    * gates the persisted path bit-exactly. */
   private def annIvfPersisted(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ann_ivf_idx_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
-    buildIvfIndex(s, d, dir)
-    val probe = Tables.embeddings(s, d).filter(col("vec_id") === ProbeId)
-      .select(col("embedding").as("probe"))
-    probeIvfIndex(s, dir, probe, ProbeId, nprobe = 2, k = 5)
-  }
-
-  /** PERSIST the PQ index: codebooks (m×k rows, constant-size) and
-    * the 8-BYTE-PER-VECTOR code table — the billion-vector RAM
-    * budget — land as graft tables. Code ids dense-remap to bytes
-    * (row_number over each 64-entry codebook, a window over k rows),
-    * so a committed index row is (vec_id, label, ARRAY<TINYINT> of m
-    * entries): 8 bytes against 256 float bytes, the real 32×
-    * compression, not longs posing as codes. Training (the Lloyd
-    * round) runs HERE, never per query — the q_sim_ann_pq fix the
-    * r15 verdict asked for. */
-  private[ops] def buildPqIndex(s: SparkSession, d: String, dir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val (_, codebook, codes) = pqTrain(Tables.embeddings(s, d))
-    val cb = codebook.withColumn("code",
-      (row_number().over(Window.partitionBy("s").orderBy("cid")) - 1)
-        .cast("tinyint"))
-    new graft.tables.SnapshotTable(s, s"$dir/codebooks")
-      .commit(cb.select(col("s"), col("code"), col("cvec")))
-    val packed = codes
-      .join(broadcast(cb.select(col("s"), col("cid"), col("code"))), Seq("s", "cid"))
-      .groupBy("vec_id", "label")
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("codes"))
-    new graft.tables.SnapshotTable(s, s"$dir/codes").commit(packed)
-  }
-
-  /** Probe the PERSISTED PQ index: the candidate side reads ONLY the
-    * 8-byte code table (posexplode recovers (s, code) pairs — the
-    * subspace IS the array position), the broadcast codebook builds
-    * the probe's m×k ADC table, and not one raw candidate vector is
-    * touched — the scan cost at 100 TB is |codes|, 32× smaller than
-    * the vector corpus. The probe vector itself is the single
-    * id-filtered row of the source table. */
-  private[ops] def probePqIndex(s: SparkSession, d: String, dir: String): DataFrame = {
-    val cb = s.read.format("graft-table")
-      .option("path", s"$dir/codebooks").load()
-      .select(col("s"), col("code").as("cid"), col("cvec"))
-    val candCodes = s.read.format("graft-table")
-      .option("path", s"$dir/codes").load()
-      .filter(col("vec_id") =!= ProbeId)
-      .select(col("vec_id"), col("label"),
-        posexplode(col("codes")).as(Seq("s", "cid")))
-    val probeSubs = pqSubvectors(
-      Tables.embeddings(s, d).filter(col("vec_id") === ProbeId))
-    pqAdc(probeSubs, cb, candCodes)
+    val dir = indexDir("graft_ann_ivf_idx", d)
+    val e = embeddingsBase(s, d)
+    buildIvfIndexFor(s, e, strideIds(IvfStride), IvfK, s"$dir/vectors",
+      s"$dir/centroids", Seq("label"))
+    embResult(probeIvfIndexFor(annTable(s, s"$dir/vectors"),
+      annTable(s, s"$dir/centroids"), probeRowOf(e, ProbeId), Some(ProbeId),
+      nprobe = 2, topK = 5, Seq("label")))
   }
 
   /** PERSISTED PQ — [[annPq]] through the index lifecycle: build
     * commits codebooks + 8-byte codes, probe is ADC over codes only.
-    * Identical training and scoring math to q_sim_ann_pq (the dense
-    * byte remap is order-preserving, so every ADC pairing — and the
-    * decimal sums — are unchanged), so the SAME DuckDB oracle gates
-    * the persisted path bit-exactly. Build rides the query (honest
-    * amortized accounting, the q_sim_ann_ivf_persisted convention);
-    * the SQL lifecycle (CALL ann_build tier => 'pq') is where build
-    * cost amortizes across queries. */
+    * The same trainer, encoder and probe as q_sim_ann_pq (the commit
+    * only packs the codes; the probe unpacks them), so the SAME
+    * DuckDB oracle gates the persisted path bit-exactly. The SQL
+    * lifecycle (CALL ann_build tier => 'pq') is where build cost
+    * amortizes across queries. */
   private def annPqPersisted(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ann_pq_idx_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
-    buildPqOnce(s, d, dir)
-    probePqIndex(s, d, dir)
+    val dir = indexDir("graft_ann_pq_idx", d)
+    val e = embeddingsBase(s, d)
+    buildOnce(s"pq:$dir")(buildPqIndexFor(s, e, strideIds(PqStride),
+      PqM, PqDims, PqK, s"$dir/codes", s"$dir/codebooks", Seq("label")))
+    embResult(probePqIndexFor(probeRowOf(e, ProbeId),
+      annTable(s, s"$dir/codebooks"), annUnpackFor(annTable(s, s"$dir/codes")),
+      Some(ProbeId), PqM, PqDims, 5, Seq("label")))
   }
 
   /** Build-once-per-process memo for the persisted PQ twins: a
@@ -1278,69 +782,22 @@ object Similarity extends QueryPack {
     * pid-scoped index dir, so cross-JVM runs (verify, parity, each
     * bench process) always build fresh. */
   private val builtOnce = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def buildPqOnce(s: SparkSession, d: String, dir: String): Unit =
-    if (!builtOnce.contains(s"pq:$dir")) {
-      buildPqIndex(s, d, dir); builtOnce.add(s"pq:$dir")
-    }
-  private def buildIvfPqOnce(s: SparkSession, d: String, dir: String): Unit =
-    if (!builtOnce.contains(s"ivfpq:$dir")) {
-      buildIvfPqIndex(s, d, dir); builtOnce.add(s"ivfpq:$dir")
-    }
-
-  /** PERSIST the residual IVF+PQ index: coarse centroids, residual
-    * codebooks (doubles) and the per-vector (cluster, 8-byte codes)
-    * rows — codes CLUSTERED on the coarse cluster id (one file per
-    * inverted list, `#range` manifest stats), so a probe's candidate
-    * scan reads only the probed clusters' code files. */
-  private[ops] def buildIvfPqIndex(s: SparkSession, d: String, dir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val (assigned, centroids) = ivfBuild(s, d)
-    new graft.tables.SnapshotTable(s, s"$dir/centroids").commit(centroids)
-    val (_, codebook, codes) = ivfPqTrain(assigned, centroids)
-    val cb = codebook.withColumn("code",
-      (row_number().over(Window.partitionBy("s").orderBy("cid")) - 1)
-        .cast("tinyint"))
-    new graft.tables.SnapshotTable(s, s"$dir/codebooks")
-      .commit(cb.select(col("s"), col("code"), col("cvec")))
-    val packed = codes
-      .join(broadcast(cb.select(col("s"), col("cid"), col("code"))), Seq("s", "cid"))
-      .groupBy("vec_id", "label", "cluster")
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("codes"))
-    new graft.tables.SnapshotTable(s, s"$dir/codes")
-      .commitClustered(packed, "cluster", IvfK)
-  }
-
-  /** Probe the PERSISTED IVF+PQ index: coarse ranking over the k-row
-    * centroid table, per-probed-cluster residual ADC tables from the
-    * persisted codebooks, candidates from the code table only — with
-    * the (cluster, s, code) join pruning to the probed clusters'
-    * FILES through the clustered layout. */
-  private[ops] def probeIvfPqIndex(s: SparkSession, d: String, dir: String): DataFrame = {
-    val centroids = s.read.format("graft-table")
-      .option("path", s"$dir/centroids").load()
-    val cb = s.read.format("graft-table")
-      .option("path", s"$dir/codebooks").load()
-      .select(col("s"), col("code").as("cid"), col("cvec"))
-    val candCodes = s.read.format("graft-table")
-      .option("path", s"$dir/codes").load()
-      .filter(col("vec_id") =!= ProbeId)
-      .select(col("vec_id"), col("label"), col("cluster"),
-        posexplode(col("codes")).as(Seq("s", "cid")))
-    val probe = Tables.embeddings(s, d).filter(col("vec_id") === ProbeId)
-      .select(col("embedding").as("probe"))
-    ivfPqAdc(probe, centroids, cb, candCodes)
-  }
+  private def buildOnce(key: String)(build: => Unit): Unit =
+    if (!builtOnce.contains(key)) { build; builtOnce.add(key) }
 
   /** PERSISTED residual IVF+PQ — [[annIvfPq]] through the index
-    * lifecycle, oracle-gated by the same composed SQL (order-
-    * preserving byte remap + exact double round-trips keep every
-    * distance bit-identical). */
+    * lifecycle, oracle-gated by the same composed SQL (exact double
+    * round-trips keep every distance bit-identical). */
   private def annIvfPqPersisted(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ann_ivfpq_idx_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
-    buildIvfPqOnce(s, d, dir)
-    probeIvfPqIndex(s, d, dir)
+    val dir = indexDir("graft_ann_ivfpq_idx", d)
+    val e = embeddingsBase(s, d)
+    buildOnce(s"ivfpq:$dir")(buildIvfPqIndexFor(s, e, strideIds(IvfStride),
+      strideIds(PqStride), IvfK, PqM, PqDims, PqK, s"$dir/codes",
+      s"$dir/codebooks", s"$dir/centroids", Seq("label")))
+    embResult(probeIvfPqIndexFor(probeRowOf(e, ProbeId),
+      annTable(s, s"$dir/centroids"), annTable(s, s"$dir/codebooks"),
+      annUnpackFor(annTable(s, s"$dir/codes")), Some(ProbeId), nprobe = 2,
+      PqM, PqDims, 5, Seq("label")))
   }
 
   /** Persisted-index ANN: the LSH bucket is a PARTITION COLUMN of a
@@ -1356,11 +813,7 @@ object Similarity extends QueryPack {
     * of the query — honest accounting for the amortized cost. */
   private def annIndexed(s: SparkSession, d: String): DataFrame = {
     import graft.functions.CosineSimilarity.cosine_sim
-    // pid-suffixed: two JVMs running the same (query, dir) — bench
-    // alongside verify — must never overwrite each other's index
-    // mid-scan
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ann_index_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
+    val dir = indexDir("graft_ann_index", d)
     val bucketed = Tables.embeddings(s, d)
       .withColumn("bucket", hyperplaneBucket(col("embedding"), 4, 64))
     bucketed.write.partitionBy("bucket").mode("overwrite").parquet(dir)
@@ -1388,8 +841,8 @@ object Similarity extends QueryPack {
   // no entry point and beam recall collapsed to 0.15 — measured, kept
   // as the design note: a graph ANN is only as navigable as its entry
   // layer's coverage)
-  private val NswHubStride = 16
-  private val NswM = 4          // same-bucket graph degree
+  private[ops] val NswHubStride = 16
+  private[ops] val NswM = 4     // same-bucket graph degree
   private val NswHubM = 2       // hub links per node (long-range connectivity)
   private val NswBeam = 10      // beam width B
   private val NswRounds = 4     // fixed expansion rounds R (the first
@@ -1420,90 +873,163 @@ object Similarity extends QueryPack {
     * beam trajectory, answer — is deterministic and the DuckDB
     * oracle gates it end-to-end (unrolled beam rounds, the Lloyd/
     * PageRank CTE technique). */
-  private def annNsw(s: SparkSession, d: String): DataFrame =
-    nswTopK(Tables.embeddings(s, d), ProbeId, 5)
+  private def annNsw(s: SparkSession, d: String): DataFrame = {
+    val e = embeddingsBase(s, d)
+    val hubs = nswHubsOf(e, strideIds(NswHubStride))
+    val (edges, _) = nswGraphFor(e, hubs, NswM, 64)
+    embResult(probeNswIndexFor(e, edges, hubs, probeRowOf(e, ProbeId),
+      Some(ProbeId), 5, Seq("label")))
+  }
 
-  /** The NSW mechanism over any (vec_id, label, embedding) table —
-    * parameterized so SimilaritySpec can drive it against the
-    * planted-locality fixture. */
-  private[ops] def nswTopK(e: DataFrame, probeId: Long, k: Int): DataFrame = {
+  /** The hub (entry) layer (h, hvec): every base row matching `seeds`. */
+  private[graft] def nswHubsOf(base: DataFrame, seeds: Column): DataFrame =
+    base.filter(seeds).select(col("id").as("h"), col("vec").as("hvec"))
+
+  /** Each u's top-n links by cosine over candidate pairs (u, uvec,
+    * v, vvec), ties to the smaller v. Zero-norm vectors cosine to NaN,
+    * and NaN outranks every real score in a descending window —
+    * without the guard a single degenerate vector would win a link
+    * slot in EVERY bucket-mate. */
+  private def nswLinksFor(pairs: DataFrame, n: Int): DataFrame = {
     import graft.functions.CosineSimilarity.cosine_sim
     import org.apache.spark.sql.expressions.Window
-    // par(): both link builders run pairwise cosine kernels (bucket²
-    // and n×hubs) that would otherwise execute inside the single-split
-    // scan stage — see [[par]]; the bucket spread doubles as the
-    // bucket join's exchange (both sides co-partition on it)
-    val p = e.sparkSession.sparkContext.defaultParallelism
-    val bucketed = e
-      .withColumn("bucket", hyperplaneBucket(col("embedding"), 4, 64))
-      .repartition(p, col("bucket"))
-    val wU = Window.partitionBy("u").orderBy(col("cos").desc, col("v").asc)
-    val bEdges = bucketed
-      .select(col("vec_id").as("u"), col("embedding").as("uvec"), col("bucket"))
-      .join(bucketed.select(col("vec_id").as("v"),
-        col("embedding").as("vvec"), col("bucket")), "bucket")
-      .filter(col("u") =!= col("v"))
+    pairs.filter(col("u") =!= col("v"))
       .select(col("u"), col("v"), cosine_sim(col("uvec"), col("vvec")).as("cos"))
-      // zero-norm vectors cosine to NaN, and NaN outranks every real
-      // score in a descending window — without this guard a single
-      // degenerate vector would win a link slot in EVERY bucket-mate
       .filter(!isnan(col("cos")))
-      .withColumn("rn", row_number().over(wU)).filter(col("rn") <= NswM)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("u").orderBy(col("cos").desc, col("v").asc)))
+      .filter(col("rn") <= n)
       .select("u", "v")
-    val hubs = e.filter(pmod(col("vec_id"), lit(NswHubStride)) === 0)
-      .select(col("vec_id").as("h"), col("embedding").as("hvec"))
-    val hEdges = par(e).select(col("vec_id").as("u"), col("embedding").as("uvec"))
-      .crossJoin(broadcast(hubs)).filter(col("u") =!= col("h"))
-      .select(col("u"), col("h").as("v"),
-        cosine_sim(col("uvec"), col("hvec")).as("cos"))
-      .filter(!isnan(col("cos")))
-      .withColumn("rn", row_number().over(wU)).filter(col("rn") <= NswHubM)
-      .select("u", "v")
-    // bucket links are UNDIRECTED (the NSW norm): a directed top-M
-    // graph concentrates into popular-sink nodes and the beam starves
-    // (measured: planted recall 0.55 directed vs 0.9+ symmetrized).
-    // Hub links stay directed node→hub — reversing those would hand
-    // hubs unbounded fan-out. Reverse bucket degree is bounded by how
-    // many bucket-mates rank u in their top-M (≤ bucket size; HNSW
-    // prunes the same way via neighbor selection).
-    // localCheckpoint (lazy): the beam loop references the edge table
-    // once per round PLUS the final scoring — without the truncation
-    // the unrolled plan re-derives the whole graph build per
-    // reference (measured: a 6300-line physical plan at R=4, the
-    // graph built 5×; the checkpoint builds it once and bounds
-    // per-round planning, the connected-components pattern)
+  }
+
+  /** The NSW graph over a base (id, vec) with hub layer (h, hvec):
+    * (edges(u, v), buckets(id, bucket)). Bucket links are UNDIRECTED
+    * (the NSW norm): a directed top-M graph concentrates into
+    * popular-sink nodes and the beam starves (measured: planted recall
+    * 0.55 directed vs 0.9+ symmetrized). Hub links stay directed
+    * node→hub — reversing those would hand hubs unbounded fan-out.
+    * Reverse bucket degree is bounded by how many bucket-mates rank u
+    * in their top-M (≤ bucket size; HNSW prunes the same way via
+    * neighbor selection). Both link builders run pairwise cosine
+    * kernels (bucket² and n×hubs) that would otherwise execute inside
+    * the single-split scan stage — see [[par]]; the bucket spread
+    * doubles as the bucket join's exchange (both sides co-partition on
+    * it). localCheckpoint (lazy): the beam loop references the edge
+    * table once per round PLUS the final scoring — without the
+    * truncation the unrolled plan re-derives the whole graph build per
+    * reference (measured: a 6300-line physical plan at R=4, the graph
+    * built 5×). */
+  private[graft] def nswGraphFor(base: DataFrame, hubs: DataFrame, m: Int,
+      dims: Int): (DataFrame, DataFrame) = {
+    val buckets = base.withColumn("bucket", hyperplaneBucket(col("vec"), 4, dims))
+      .repartition(base.sparkSession.sparkContext.defaultParallelism, col("bucket"))
+    def side(n: String) = buckets.select(col("id").as(n), col("vec").as(s"${n}vec"),
+      col("bucket"))
+    val bEdges = nswLinksFor(side("u").join(side("v"), "bucket"), m)
+    val hEdges = nswLinksFor(par(base).select(col("id").as("u"), col("vec").as("uvec"))
+      .crossJoin(broadcast(hubs.select(col("h").as("v"), col("hvec").as("vvec")))),
+      NswHubM)
     val edges = bEdges
       .unionAll(bEdges.select(col("v").as("u"), col("u").as("v")))
       .unionAll(hEdges).dropDuplicates("u", "v")
       .localCheckpoint(eager = false)
-    val probe = e.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe"))
+    (edges, buckets.select("id", "bucket"))
+  }
+
+  /** `CALL ann_build(tier => 'nsw')`: the graph as three catalog
+    * tables — edges (u, v) CLUSTERED on u (a probe round's frontier
+    * join prunes to the frontier's edge files via `#range`), hubs (h,
+    * hvec — the entry layer) and buckets (id, bucket — the LSH
+    * assignment future ingests generate candidates from). Vectors stay
+    * in the source table: the graph is a pure index. */
+  private[graft] def buildNswIndexFor(s: SparkSession, base: DataFrame,
+      hubSeeds: Column, m: Int, dims: Int, edgesPath: String,
+      hubsPath: String, bucketsPath: String): Unit = {
+    val hubs = nswHubsOf(base, hubSeeds)
+    val (edges, buckets) = nswGraphFor(base, hubs, m, dims)
+    new graft.tables.SnapshotTable(s, edgesPath).commitClustered(edges, "u", 16)
+    new graft.tables.SnapshotTable(s, hubsPath).commit(hubs)
+    new graft.tables.SnapshotTable(s, bucketsPath).commit(buckets)
+  }
+
+  /** The NSW probe — batch beam search: score the hub layer (HNSW
+    * scans its sparse top layer), the beam starts from its best B,
+    * then R rounds of frontier-edge expansion (each a small-side join,
+    * pruned to the frontier's edge files on a committed graph) +
+    * candidate-vector fetches from the id-keyed base. Visited/frontier
+    * are beam-bounded (≤ |hubs| + R·B·(M+2) rows) — lazy
+    * localCheckpoints keep the unrolled-round plan flat without
+    * forcing per-round jobs. base (id, vec, keep…); returns (id,
+    * keep…, score). */
+  private[graft] def probeNswIndexFor(base: DataFrame, edges: DataFrame,
+      hubs: DataFrame, probeVec: DataFrame, excludeId: Option[Long], topK: Int,
+      keep: Seq[String] = Nil): DataFrame = {
+    import graft.functions.CosineSimilarity.cosine_sim
+    val probe = probeVec.select(col("vec").as("probe"))
     def score(ids: DataFrame): DataFrame =
-      e.join(ids, "vec_id").crossJoin(broadcast(probe))
-        .select(col("vec_id"), col("label"),
-          cosine_sim(col("embedding"), col("probe")).as("cos"))
-    // entry: the hub layer is scored in full (HNSW scans its sparse
-    // top layer), the beam starts from its best B. Visited/frontier
-    // are beam-bounded (≤ |hubs| + R·B·(M+2) rows) — lazy
-    // localCheckpoints keep the unrolled-round plan flat without
-    // forcing per-round jobs
-    var visited = hubs.select(col("h").as("vec_id"))
-    var frontier = score(visited)
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(NswBeam).select("vec_id")
+      base.join(ids, "id").crossJoin(broadcast(probe))
+        .select(((col("id") +: keep.map(col)) :+
+          cosine_sim(col("vec"), col("probe")).as("cos")): _*)
+        .filter(!isnan(col("cos")))
+    def beam(visited: DataFrame): DataFrame = score(visited)
+      .orderBy(col("cos").desc, col("id").asc).limit(NswBeam).select("id")
+    var visited = hubs.select(col("h").as("id"))
+    var frontier = beam(visited)
     for (_ <- 1 to NswRounds) {
-      val neigh = edges.join(frontier.select(col("vec_id").as("u")), "u")
-        .select(col("v").as("vec_id"))
-      visited = visited.unionAll(neigh).distinct()
-        .localCheckpoint(eager = false)
-      frontier = score(visited)
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(NswBeam).select("vec_id")
+      val neigh = edges.join(frontier.select(col("id").as("u")), "u")
+        .select(col("v").as("id"))
+      visited = visited.unionAll(neigh).distinct().localCheckpoint(eager = false)
+      frontier = beam(visited)
     }
-    score(visited).filter(col("vec_id") =!= probeId)
-      .select(col("vec_id"), col("label"), graft.Det.r4(col("cos")).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+    excludeId.foldLeft(score(visited))((df, ex) => df.filter(col("id") =!= ex))
+      .select(((col("id") +: keep.map(col)) :+ graft.Det.r4(col("cos")).as("score")): _*)
+      .orderBy(col("score").desc, col("id").asc)
+      .limit(topK)
+  }
+
+  /** `CALL ann_ingest` on the NSW tier — HNSW-style insertion,
+    * append-only: each staged row buckets by the pure LSH arithmetic,
+    * generates candidates from the PERSISTED bucket assignment plus
+    * the hub layer, links to its top-`m` by cosine, and both
+    * directions of every new link land as APPENDED edge rows (an
+    * edge table never rewrites old files — bidirectional insertion
+    * without read-modify-write; popular nodes' degree can grow past
+    * m until the next rebuild, the documented trade). The bucket
+    * append makes the new rows candidates for FUTURE ingests. Both
+    * appends share the batch id; a torn retry self-heals (each
+    * table's ledger skips its own landed half). Rows WITHIN one
+    * batch don't link to each other (candidates come from the
+    * PERSISTED bucket table) — the standard sequential-insertion
+    * simplification; they interconnect through shared pre-existing
+    * neighbors and the next rebuild. `base` is the source table as
+    * (id, vec). */
+  private[graft] def appendToNswIndexFor(s: SparkSession, base: DataFrame,
+      fresh: DataFrame, idCol: String, vecCol: String, m: Int, dims: Int,
+      edgesPath: String, hubsPath: String, bucketsPath: String,
+      batchId: Long): Option[Long] = {
+    val freshBase = annBaseFor(fresh, idCol, vecCol, "ann_ingest")
+      .withColumn("bucket", hyperplaneBucket(col("vec"), 4, dims))
+    val us = freshBase.select(col("id").as("u"), col("vec").as("uvec"), col("bucket"))
+    val bucketCands = us
+      .join(annTable(s, bucketsPath).select(col("id").as("v"), col("bucket")), "bucket")
+      .join(base.select(col("id").as("v"), col("vec").as("vvec")), "v")
+    val hubCands = us.crossJoin(broadcast(annTable(s, hubsPath)
+      .select(col("h").as("v"), col("hvec").as("vvec"))))
+    // mirror the BUILD's link budget exactly: top-m bucket links PLUS
+    // NswHubM guaranteed hub links per ingested node (one combined
+    // window would let a dense bucket crowd out the long-range links
+    // that keep fresh rows reachable from distant beam entries)
+    val links = nswLinksFor(bucketCands, m)
+      .unionAll(nswLinksFor(hubCands, NswHubM))
+      .dropDuplicates("u", "v")
+    val edges = links
+      .unionAll(links.select(col("v").as("u"), col("u").as("v")))
+      .dropDuplicates("u", "v")
+    val v = new graft.tables.SnapshotTable(s, edgesPath)
+      .appendOnce(edges.repartitionByRange(4, col("u")), batchId)
+    new graft.tables.SnapshotTable(s, bucketsPath)
+      .appendOnce(freshBase.select("id", "bucket"), batchId)
+    v
   }
 
   /** Multi-probe LSH ANN (Lv et al., VLDB'07 query-directed probing):
@@ -1591,8 +1117,7 @@ object Similarity extends QueryPack {
     * result is identical; only the access path differs — row-equality
     * also asserted in SimilaritySpec). */
   private def annIndexedMultiprobe(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ann_index_mp_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") + "_" + ProcessHandle.current().pid()
+    val dir = indexDir("graft_ann_index_mp", d)
     val bucketed = Tables.embeddings(s, d)
       .withColumn("bucket", hyperplaneBucket(col("embedding"), 4, 64))
     bucketed.write.partitionBy("bucket").mode("overwrite").parquet(dir)

@@ -14,6 +14,8 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.ops.Similarity
+
 /** [[SnapshotTable]]s as a Spark SQL CATALOG: register once —
   * {{{
   *   spark.conf.set("spark.sql.catalog.graft", "graft.tables.GraftCatalog")
@@ -302,54 +304,35 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     val spark = SparkSession.active
     val meta = readAnnMeta(tbl)
     val tier = meta.map(_.tier).getOrElse("ivf")
-    // the single id-filtered probe row of the source table (by-id
-    // probes on the tiers whose index carries no raw vectors)
-    def probeRowOf(baseDf: org.apache.spark.sql.DataFrame,
-        md: AnnMeta): org.apache.spark.sql.DataFrame = baseDf
-      .filter(org.apache.spark.sql.functions.col(md.idCol)
-        .cast("long") === probeId.get)
-      .select(org.apache.spark.sql.functions.col(md.vecCol).as("vec"))
+    def index(part: String) = Similarity.annTable(spark, annPath(tbl, part))
+    // a by-id probe's vector: the member's row of the index (ivf) or of
+    // the source table (the tiers whose index carries no raw vectors)
+    def probeOf(rows: org.apache.spark.sql.DataFrame) =
+      probeVec.getOrElse(Similarity.probeRowOf(rows, probeId.get))
     val (scoreCol, top) = tier match {
       case "ivf" =>
-        val vPath = procTablePath(s"${tbl}__ann_vectors")
-        val cPath = procTablePath(s"${tbl}__ann_centroids")
-        require(isTableDir(vPath) && isTableDir(cPath),
-          s"no ANN index for '$tbl' — run CALL ann_build first")
-        val df = probeVec match {
-          case Some(v) => graft.ops.Similarity.probeIvfIndexVecFor(spark,
-            vPath.toString, cPath.toString, v, nprobe, topK)
-          case None => graft.ops.Similarity.probeIvfIndexFor(spark,
-            vPath.toString, cPath.toString, probeId.get, nprobe, topK)
-        }
-        ("score", df.collect())
+        requireAnnIndex(tbl, "vectors", "centroids")
+        val vectors = index("vectors")
+        ("score", Similarity.probeIvfIndexFor(vectors, index("centroids"),
+          probeOf(vectors), probeId, nprobe, topK).collect())
       case "nsw" =>
-        val md = meta.get
-        val edgesPath = procTablePath(s"${tbl}__ann_edges")
-        require(isTableDir(edgesPath),
-          s"no ANN index for '$tbl' — run CALL ann_build first")
-        val baseDf = snapshotOf(tbl).read()
-        val pv = probeVec.getOrElse(probeRowOf(baseDf, meta.get))
-        ("score", graft.ops.Similarity.probeNswIndexFor(spark, baseDf,
-          md.idCol, md.vecCol, pv, probeId, edgesPath.toString,
-          procTablePath(s"${tbl}__ann_hubs").toString, topK).collect())
+        requireAnnIndex(tbl, "edges")
+        val base = annSource(tbl, meta.get)
+        ("score", Similarity.probeNswIndexFor(base, index("edges"),
+          index("hubs"), probeOf(base), probeId, topK).collect())
       case "pq" | "ivf_pq" =>
         val md = meta.get
-        val codesPath = procTablePath(s"${tbl}__ann_codes")
-        require(isTableDir(codesPath),
-          s"no ANN index for '$tbl' — run CALL ann_build first")
-        // by-id probes fetch the single id-filtered row of the SOURCE
-        // table; candidates never touch a raw vector either way
-        val pv = probeVec.getOrElse(probeRowOf(snapshotOf(tbl).read(), md))
+        requireAnnIndex(tbl, "codes")
+        // candidates never touch a raw vector either way
+        val pv = probeOf(annSource(tbl, md))
+        val codes = Similarity.annUnpackFor(index("codes"))
         val df =
           if (tier == "pq")
-            graft.ops.Similarity.probePqIndexFor(spark, pv, probeId,
-              md.m, md.dims, codesPath.toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString, topK)
+            Similarity.probePqIndexFor(pv, index("codebooks"), codes, probeId,
+              md.m, md.dims, topK)
           else
-            graft.ops.Similarity.probeIvfPqIndexFor(spark, pv,
-              probeId, nprobe, md.m, md.dims, codesPath.toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString,
-              procTablePath(s"${tbl}__ann_centroids").toString, topK)
+            Similarity.probeIvfPqIndexFor(pv, index("centroids"),
+              index("codebooks"), codes, probeId, nprobe, md.m, md.dims, topK)
         ("adist", df.collect())
       case other => throw new IllegalArgumentException(
         s"ANN index for '$tbl' has unrecognized tier '$other' in " +
@@ -363,6 +346,21 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
       override def rows(): Array[InternalRow] = top.map(r =>
         InternalRow(r.getLong(0), r.getDouble(1)))
     }).iterator()
+  }
+
+  private def annPath(tbl: String, part: String): String =
+    procTablePath(s"${tbl}__ann_$part").toString
+
+  private def requireAnnIndex(tbl: String, parts: String*): Unit =
+    require(parts.forall(p => isTableDir(procTablePath(s"${tbl}__ann_$p"))),
+      s"no ANN index for '$tbl' — run CALL ann_build first")
+
+  /** The index's source table as (id, vec): NSW candidate vectors and
+    * by-id probe rows of the tiers whose index holds no raw vectors. */
+  private def annSource(tbl: String, md: AnnMeta): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    snapshotOf(tbl).read().select(col(md.idCol).cast("long").as("id"),
+      col(md.vecCol).as("vec"))
   }
 
   /** None for indexes that predate the meta table — treated as the
@@ -570,41 +568,52 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
         val m = in.getInt(5)
         val codes = in.getInt(6)
         val spark = SparkSession.active
-        val tables: Seq[String] = tier match {
+        def path(part: String) = annPath(tbl, part)
+        // the validated (id, vec) base, its size and dims; the
+        // procedures seed every tier by hash-stride nomination
+        def input(mm: Int) = Similarity.annInputFor(t.read(), idCol, vecCol, mm)
+        def pqArgs(): Unit = require(m >= 1 && codes >= 1 && codes <= 127,
+          s"ann_build $tier needs 1 <= m and 1 <= codes <= 127, got m=$m codes=$codes")
+        val parts: Seq[String] = tier match {
           case "ivf" =>
-            val dims = graft.ops.Similarity.buildIvfIndexFor(spark, t.read(),
-              idCol, vecCol, k, procTablePath(s"${tbl}__ann_vectors").toString,
-              procTablePath(s"${tbl}__ann_centroids").toString)
+            require(k >= 1, s"ann_build needs k >= 1, got $k")
+            val (base, n, dims) = input(1)
+            Similarity.buildIvfIndexFor(spark, base,
+              Similarity.annSeedIdsFor(base, n, k), k, path("vectors"),
+              path("centroids"))
             writeAnnMeta(tbl, "ivf", idCol, vecCol, k, 0, 0, dims)
-            Seq(s"${tbl}__ann_vectors", s"${tbl}__ann_centroids")
+            Seq("vectors", "centroids")
           case "pq" =>
-            val dims = graft.ops.Similarity.buildPqIndexFor(spark, t.read(),
-              idCol, vecCol, m, codes,
-              procTablePath(s"${tbl}__ann_codes").toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString)
+            pqArgs()
+            val (base, n, dims) = input(m)
+            Similarity.buildPqIndexFor(spark, base,
+              Similarity.annSeedIdsFor(base, n, codes), m, dims, codes,
+              path("codes"), path("codebooks"))
             writeAnnMeta(tbl, "pq", idCol, vecCol, k, m, codes, dims)
-            Seq(s"${tbl}__ann_codes", s"${tbl}__ann_codebooks")
+            Seq("codes", "codebooks")
           case "ivf_pq" =>
-            val dims = graft.ops.Similarity.buildIvfPqIndexFor(spark, t.read(),
-              idCol, vecCol, k, m, codes,
-              procTablePath(s"${tbl}__ann_codes").toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString,
-              procTablePath(s"${tbl}__ann_centroids").toString)
+            require(k >= 1, s"ann_build needs k >= 1, got $k")
+            pqArgs()
+            val (base, n, dims) = input(m)
+            Similarity.buildIvfPqIndexFor(spark, base,
+              Similarity.annSeedIdsFor(base, n, k),
+              Similarity.annSeedIdsFor(base, n, codes), k, m, dims, codes,
+              path("codes"), path("codebooks"), path("centroids"))
             writeAnnMeta(tbl, "ivf_pq", idCol, vecCol, k, m, codes, dims)
-            Seq(s"${tbl}__ann_codes", s"${tbl}__ann_codebooks",
-              s"${tbl}__ann_centroids")
+            Seq("codes", "codebooks", "centroids")
           case "nsw" =>
-            val dims = graft.ops.Similarity.buildNswIndexFor(spark, t.read(),
-              idCol, vecCol, k, m,
-              procTablePath(s"${tbl}__ann_edges").toString,
-              procTablePath(s"${tbl}__ann_hubs").toString,
-              procTablePath(s"${tbl}__ann_buckets").toString)
+            require(k >= 1 && m >= 1,
+              s"ann_build nsw needs k (hubs) >= 1 and m (degree) >= 1, got k=$k m=$m")
+            val (base, n, dims) = input(1)
+            Similarity.buildNswIndexFor(spark, base,
+              Similarity.annSeedIdsFor(base, n, k), m, dims, path("edges"),
+              path("hubs"), path("buckets"))
             writeAnnMeta(tbl, "nsw", idCol, vecCol, k, m, 0, dims)
-            Seq(s"${tbl}__ann_edges", s"${tbl}__ann_hubs",
-              s"${tbl}__ann_buckets")
+            Seq("edges", "hubs", "buckets")
           case other => throw new IllegalArgumentException(
             s"ann_build tier must be 'ivf', 'pq', 'ivf_pq' or 'nsw', got '$other'")
         }
+        val tables = parts.map(p => s"${tbl}__ann_$p")
         def utf(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
         oneRow(StructType(Seq(
           org.apache.spark.sql.types.StructField("tables", StringType, nullable = false),
@@ -631,50 +640,36 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
         val batchId = in.getLong(4)
         val spark = SparkSession.active
         val meta = readAnnMeta(tbl)
-        val (v, mainPath) = meta.map(_.tier).getOrElse("ivf") match {
+        def path(part: String) = annPath(tbl, part)
+        val (v, mainPart) = meta.map(_.tier).getOrElse("ivf") match {
           case "ivf" =>
-            val vPath = procTablePath(s"${tbl}__ann_vectors")
-            val cPath = procTablePath(s"${tbl}__ann_centroids")
-            require(isTableDir(vPath) && isTableDir(cPath),
-              s"no ANN index for '$tbl' — run CALL ann_build first")
-            (graft.ops.Similarity.appendToIvfIndexFor(spark, vPath.toString,
-              cPath.toString, src.read(), idCol, vecCol, batchId), vPath)
+            requireAnnIndex(tbl, "vectors", "centroids")
+            (Similarity.appendToIvfIndexFor(spark, path("vectors"),
+              path("centroids"), src.read(), idCol, vecCol, batchId), "vectors")
           case "pq" =>
             val md = meta.get
-            val codesPath = procTablePath(s"${tbl}__ann_codes")
-            require(isTableDir(codesPath),
-              s"no ANN index for '$tbl' — run CALL ann_build first")
-            (graft.ops.Similarity.appendToPqIndexFor(spark,
-              codesPath.toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString,
-              src.read(), idCol, vecCol, md.m, md.dims, batchId), codesPath)
+            requireAnnIndex(tbl, "codes")
+            (Similarity.appendToPqIndexFor(spark, path("codes"),
+              path("codebooks"), src.read(), idCol, vecCol, md.m, md.dims,
+              batchId), "codes")
           case "ivf_pq" =>
             val md = meta.get
-            val codesPath = procTablePath(s"${tbl}__ann_codes")
-            require(isTableDir(codesPath),
-              s"no ANN index for '$tbl' — run CALL ann_build first")
-            (graft.ops.Similarity.appendToIvfPqIndexFor(spark,
-              codesPath.toString,
-              procTablePath(s"${tbl}__ann_codebooks").toString,
-              procTablePath(s"${tbl}__ann_centroids").toString,
-              src.read(), idCol, vecCol, md.m, md.dims, batchId), codesPath)
+            requireAnnIndex(tbl, "codes")
+            (Similarity.appendToIvfPqIndexFor(spark, path("codes"),
+              path("codebooks"), path("centroids"), src.read(), idCol, vecCol,
+              md.m, md.dims, batchId), "codes")
           case "nsw" =>
             val md = meta.get
-            val edgesPath = procTablePath(s"${tbl}__ann_edges")
-            require(isTableDir(edgesPath),
-              s"no ANN index for '$tbl' — run CALL ann_build first")
-            (graft.ops.Similarity.appendToNswIndexFor(spark,
-              snapshotOf(tbl).read(), src.read(), idCol, vecCol,
-              md.m, md.dims, edgesPath.toString,
-              procTablePath(s"${tbl}__ann_hubs").toString,
-              procTablePath(s"${tbl}__ann_buckets").toString, batchId),
-              edgesPath)
+            requireAnnIndex(tbl, "edges")
+            (Similarity.appendToNswIndexFor(spark, annSource(tbl, md),
+              src.read(), idCol, vecCol, md.m, md.dims, path("edges"),
+              path("hubs"), path("buckets"), batchId), "edges")
           case other => throw new IllegalArgumentException(
             s"ANN index for '$tbl' has unrecognized tier '$other' in " +
               "__ann_meta — rebuild with CALL ann_build")
         }
         oneRow(VersionOut, v.getOrElse(
-          new SnapshotTable(SparkSession.active, mainPath.toString).currentVersion))
+          new SnapshotTable(spark, path(mainPart)).currentVersion))
       }),
     "ann_probe" -> proc("ann_probe",
       // CALL cat.ann_probe('docs', 42, 2, 5) — top-k cosine

@@ -25,12 +25,16 @@ class SimilaritySpec extends SparkSpec {
   test("persisted IVF: probe phase runtime-prunes the graft index, equals the per-query path, no Lloyd") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx_spec_").toString
-    // build ONCE; every probe below touches only the persisted index
-    Similarity.buildIvfIndex(spark, sf, dir)
-    val probe = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
-      .select(col("embedding").as("probe"))
-    val probed = Similarity.probeIvfIndex(spark, dir, probe, 0L,
-      nprobe = 2, k = 5)
+    // build ONCE with q_sim_ann_ivf's seeds; every probe below touches
+    // only the persisted index
+    val e = Similarity.embeddingsBase(spark, sf)
+    Similarity.buildIvfIndexFor(spark, e, Similarity.strideIds(250), 8,
+      s"$dir/vectors", s"$dir/centroids", Seq("label"))
+    def probeIndex() = Similarity.probeIvfIndexFor(
+      Similarity.annTable(spark, s"$dir/vectors"),
+      Similarity.annTable(spark, s"$dir/centroids"), Similarity.probeRowOf(e, 0L),
+      Some(0L), nprobe = 2, topK = 5, Seq("label"))
+    val probed = probeIndex()
     // the candidate scan is pruned to the probed clusters' files at
     // RUNTIME — the broadcast join ships the probed cluster set into
     // the graft-table scan (SupportsRuntimeV2Filtering) as a
@@ -63,16 +67,16 @@ class SimilaritySpec extends SparkSpec {
     // through the same pruned plan
     val fresh = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
       .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
-    Similarity.appendToIvfIndex(spark, dir, fresh, batchId = 1L)
-    val after = Similarity.probeIvfIndex(spark, dir, probe, 0L,
-      nprobe = 2, k = 5).collect()
+    def ingest() = Similarity.appendToIvfIndexFor(spark, s"$dir/vectors",
+      s"$dir/centroids", fresh, "vec_id", "embedding", batchId = 1L, Seq("label"))
+    ingest()
+    val after = probeIndex().collect()
     assert(after.head.getLong(0) == 999999L, after.map(_.toSeq).mkString("; "))
     assert(after.head.getDouble(2) == 1.0, after.head.toString)
     // replaying the SAME ingest batch is a no-op (exactly-once), not
     // a duplicate row in the inverted list
-    Similarity.appendToIvfIndex(spark, dir, fresh, batchId = 1L)
-    val replay = Similarity.probeIvfIndex(spark, dir, probe, 0L,
-      nprobe = 2, k = 5).collect()
+    ingest()
+    val replay = probeIndex().collect()
     assert(replay.count(_.getLong(0) == 999999L) == 1, replay.mkString("; "))
   }
 
@@ -91,9 +95,15 @@ class SimilaritySpec extends SparkSpec {
         .orderBy(col("cos").desc, col("vec_id")).limit(k)
         .collect().map(_.getLong(0)).toSeq
     }
+    // the q_sim_ann_nsw graph (stride-16 hubs, degree 4), built once
+    val e = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val hubs = Similarity.nswHubsOf(e, Similarity.strideIds(Similarity.NswHubStride))
+    val (edges, _) = Similarity.nswGraphFor(e, hubs, Similarity.NswM, 64)
     val recalls = Seq(0L, 30L, 120L, 241L).map { pid =>
       val brute = bruteTop(pid, 10).toSet
-      val nsw = Similarity.nswTopK(emb, pid, 10).collect().map(_.getLong(0)).toSet
+      val nsw = Similarity.probeNswIndexFor(e, edges, hubs,
+        Similarity.probeRowOf(e, pid), Some(pid), 10)
+        .collect().map(_.getLong(0)).toSet
       (brute & nsw).size / 10.0
     }
     val mean = recalls.sum / recalls.size
@@ -118,12 +128,18 @@ class SimilaritySpec extends SparkSpec {
     val pid = ProcessHandle.current().pid()
     val sfx = sf.replaceAll("[^A-Za-z0-9]", "_") + "_" + pid
 
-    // PQ: bit-identical to the per-query path (order-preserving byte
-    // remap), candidates from the code table + broadcast codebook only
-    val pq = SparkEntry_queries("q_sim_ann_pq").collect().map(_.toSeq).toSeq
+    // each persisted twin returns exactly its per-query key's rows:
+    // the same trainer, encoder and probe, with the codes packed by the
+    // commit and unpacked by the probe
+    for ((perQuery, twin) <- Seq("q_sim_ann_pq" -> "q_sim_ann_pq_persisted",
+        "q_sim_ann_ivf_pq" -> "q_sim_ann_ivf_pq_persisted")) {
+      val want = SparkEntry_queries(perQuery).collect().map(_.toSeq).toSeq
+      val got = SparkEntry_queries(twin).collect().map(_.toSeq).toSeq
+      assert(got == want, s"$twin $got != $perQuery $want")
+    }
+
+    // PQ: candidates from the code table + broadcast codebook only
     val pqP = SparkEntry_queries("q_sim_ann_pq_persisted")
-    assert(pqP.collect().map(_.toSeq).toSeq == pq,
-      "persisted PQ != per-query PQ")
     val pqScans = graftScans(pqP)
     assert(pqScans.size == 2 && pqScans.forall(_.contains("graft_ann_pq_idx_")),
       s"PQ probe not served from the persisted index: $pqScans")
@@ -141,10 +157,7 @@ class SimilaritySpec extends SparkSpec {
       org.apache.spark.sql.functions.col("codes"))).head.getInt(0) == 8)
 
     // residual IVF+PQ: same contract, plus the centroid sidecar
-    val ivfpq = SparkEntry_queries("q_sim_ann_ivf_pq").collect().map(_.toSeq).toSeq
     val ivfpqP = SparkEntry_queries("q_sim_ann_ivf_pq_persisted")
-    assert(ivfpqP.collect().map(_.toSeq).toSeq == ivfpq,
-      "persisted IVF+PQ != per-query IVF+PQ")
     val ipqScans = graftScans(ivfpqP)
     assert(ipqScans.size == 3 && ipqScans.forall(_.contains("graft_ann_ivfpq_idx_")),
       s"IVF+PQ probe not served from the persisted index: $ipqScans")

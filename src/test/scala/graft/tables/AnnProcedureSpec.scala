@@ -106,6 +106,11 @@ class AnnProcedureSpec extends SparkSpec {
         "CALL annproc.ann_build(table => 'bad', id_col => 'id', " +
           "vec_col => 'emb', k => 2)").collect())
       assert(chain(e2).exists(_.contains("ARRAY<FLOAT>")), e2.toString)
+      // ...and so does an IVF ingest from an ARRAY<DOUBLE> staging table
+      val e3 = intercept[Exception](spark.sql(
+        "CALL annproc.ann_ingest(table => 'docs', source_table => 'bad', " +
+          "id_col => 'id', vec_col => 'emb', batch_id => 8)").collect())
+      assert(chain(e3).exists(_.contains("ARRAY<FLOAT>")), e3.toString)
     } finally {
       spark.conf.unset("spark.sql.catalog.annproc")
       SnapshotTable.deleteRecursively(catRoot)

@@ -14,40 +14,42 @@ class IvfIndexDurabilitySpec extends SparkSpec {
 
   test("torn IVF ingest is invisible; the retry lands exactly once") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_torn_").toString
-    Similarity.buildIvfIndex(spark, sf, dir)
+    val e = Similarity.embeddingsBase(spark, sf)
+    Similarity.buildIvfIndexFor(spark, e, Similarity.strideIds(250), 8,
+      s"$dir/vectors", s"$dir/centroids", Seq("label"))
     val vectors = new SnapshotTable(spark, s"$dir/vectors")
     val vBuilt = vectors.currentVersion
-    val probe = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
-      .select(col("embedding").as("probe"))
-    val before = Similarity.probeIvfIndex(spark, dir, probe, 0L, nprobe = 2, k = 5)
-      .collect().map(_.toSeq).toSeq
+    def probe() = Similarity.probeIvfIndexFor(
+      Similarity.annTable(spark, s"$dir/vectors"),
+      Similarity.annTable(spark, s"$dir/centroids"), Similarity.probeRowOf(e, 0L),
+      Some(0L), nprobe = 2, topK = 5, Seq("label")).collect()
+    val before = probe().map(_.toSeq).toSeq
 
     // crash EXACTLY between the data write and visibility: the hook
     // fires after appendOnce staged its parquet files, before publish
     val fresh = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
       .select(lit(777777L).as("vec_id"), col("label"), col("embedding"))
+    def ingest() = Similarity.appendToIvfIndexFor(spark, s"$dir/vectors",
+      s"$dir/centroids", fresh, "vec_id", "embedding", batchId = 7L, Seq("label"))
     SnapshotTable.beforePublishHook =
       () => throw new RuntimeException("simulated crash before publish")
     try {
-      intercept[RuntimeException](
-        Similarity.appendToIvfIndex(spark, dir, fresh, batchId = 7L))
+      intercept[RuntimeException](ingest())
     } finally SnapshotTable.beforePublishHook = () => ()
 
     // the torn ingest published NOTHING: same version, and the probe
     // reads the exact pre-ingest rows — never a half-appended list
     assert(vectors.currentVersion == vBuilt,
       "torn ingest published a manifest")
-    val mid = Similarity.probeIvfIndex(spark, dir, probe, 0L, nprobe = 2, k = 5)
-      .collect().map(_.toSeq).toSeq
+    val mid = probe().map(_.toSeq).toSeq
     assert(mid == before, s"torn ingest leaked rows: $mid != $before")
     assert(mid.forall(_.head != 777777L))
 
     // the RETRY (same batch id — the caller's crash-recovery replay)
     // lands atomically and exactly once
-    Similarity.appendToIvfIndex(spark, dir, fresh, batchId = 7L)
+    ingest()
     assert(vectors.currentVersion == vBuilt + 1)
-    val after = Similarity.probeIvfIndex(spark, dir, probe, 0L, nprobe = 2, k = 5)
-      .collect()
+    val after = probe()
     assert(after.count(_.getLong(0) == 777777L) == 1,
       after.map(_.toSeq).mkString("; "))
     assert(after.head.getLong(0) == 777777L && after.head.getDouble(2) == 1.0)
