@@ -4,10 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -78,9 +77,11 @@ object Tables {
 
   private def list(s: SparkSession, path: String): Option[Listing] = Try {
     val (fs, p) = qualify(s, path)
-    val it = fs.listFiles(p, true)
-    val files = ArrayBuffer.empty[LocatedFileStatus]
-    while (it.hasNext) files += it.next()
+    // a listStatus walk, not listFiles: each LocatedFileStatus reads
+    // its permissions, which without native IO forks an `ls` per file
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+    val files = fs.listStatus(p).toSeq.flatMap(leaves)
     val md = MessageDigest.getInstance("SHA-256")
     files.sortBy(_.getPath.toString).foreach { f =>
       md.update(s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}\n".getBytes(UTF_8))

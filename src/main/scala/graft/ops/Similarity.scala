@@ -914,11 +914,14 @@ object Similarity extends QueryPack {
     * kernels (bucket² and n×hubs) that would otherwise execute inside
     * the single-split scan stage — see [[par]]; the bucket spread
     * doubles as the bucket join's exchange (both sides co-partition on
-    * it). localCheckpoint (lazy): the beam loop references the edge
-    * table once per round PLUS the final scoring — without the
-    * truncation the unrolled plan re-derives the whole graph build per
-    * reference (measured: a 6300-line physical plan at R=4, the graph
-    * built 5×). */
+    * it). localCheckpoint: the beam loop references the edge table
+    * once per round PLUS the final scoring — without the truncation
+    * the unrolled plan re-derives the whole graph build per reference
+    * (measured: a 6300-line physical plan at R=4, the graph built 5×).
+    * `eager = false` does not defer the build: on an adaptive plan the
+    * checkpoint calls `physicalPlan.execute()`, which runs every
+    * shuffle stage under it while this DataFrame is being built; only
+    * the last stage waits for the first action. */
   private[graft] def nswGraphFor(base: DataFrame, hubs: DataFrame, m: Int,
       dims: Int): (DataFrame, DataFrame) = {
     val buckets = base.withColumn("bucket", hyperplaneBucket(col("vec"), 4, dims))
@@ -957,10 +960,12 @@ object Similarity extends QueryPack {
     * then R rounds of frontier-edge expansion (each a small-side join,
     * pruned to the frontier's edge files on a committed graph) +
     * candidate-vector fetches from the id-keyed base. Visited/frontier
-    * are beam-bounded (≤ |hubs| + R·B·(M+2) rows) — lazy
-    * localCheckpoints keep the unrolled-round plan flat without
-    * forcing per-round jobs. base (id, vec, keep…); returns (id,
-    * keep…, score). */
+    * are beam-bounded (≤ |hubs| + R·B·(M+2) rows) — a localCheckpoint
+    * per round keeps the unrolled-round plan flat. It does not defer
+    * the rounds: on an adaptive plan even `eager = false` runs every
+    * shuffle stage under the checkpoint (`physicalPlan.execute()`), so
+    * each round's jobs run while the probe DataFrame is being built.
+    * base (id, vec, keep…); returns (id, keep…, score). */
   private[graft] def probeNswIndexFor(base: DataFrame, edges: DataFrame,
       hubs: DataFrame, probeVec: DataFrame, excludeId: Option[Long], topK: Int,
       keep: Seq[String] = Nil): DataFrame = {

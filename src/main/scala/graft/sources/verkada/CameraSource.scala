@@ -102,7 +102,6 @@ class CameraReaderFactory extends PartitionReaderFactory {
   * it FAILS TO ADVANCE (the reference's guard), or when the pushed
   * limit is satisfied. */
 class CameraReader(p: CameraPartition) extends PartitionReader[InternalRow] {
-  private val client = Json.httpClient()
   private val headers =
     if (p.token.isEmpty) Map.empty[String, String]
     else Map("Authorization" -> s"Bearer ${p.token}")
@@ -117,7 +116,7 @@ class CameraReader(p: CameraPartition) extends PartitionReader[InternalRow] {
     // cursors are opaque server strings — URL-encode them
     val url = p.url + pageToken.map(t =>
       s"?page_token=${java.net.URLEncoder.encode(t, "UTF-8")}").getOrElse("")
-    val body = Json.parse(Json.get(client, url, headers))
+    val body = Json.parse(Json.get(url, headers))
     page += 1
     val cams = body.get("cameras").elements().asScala.map { c =>
       InternalRow(UTF8String.fromString(c.toString), page)

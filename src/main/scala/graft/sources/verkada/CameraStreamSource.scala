@@ -69,7 +69,6 @@ case class CameraOffset(page: Int) extends Offset {
 
 class CameraMicroBatchStream(url: String, token: String)
     extends MicroBatchStream with SupportsAdmissionControl {
-  private val client = Json.httpClient()
   private val headers =
     if (token.isEmpty) Map.empty[String, String]
     else Map("Authorization" -> s"Bearer $token")
@@ -98,7 +97,7 @@ class CameraMicroBatchStream(url: String, token: String)
   private def fetchNext(): Unit = {
     val u = url + pageToken.map(t =>
       s"?page_token=${java.net.URLEncoder.encode(t, "UTF-8")}").getOrElse("")
-    val body = Json.parse(Json.get(client, u, headers))
+    val body = Json.parse(Json.get(u, headers))
     fetchedPages += 1
     buffered(fetchedPages) =
       body.get("cameras").elements().asScala.map(_.toString).toArray

@@ -64,8 +64,7 @@ class LeaseScan(options: Map[String, String], limit: Option[Int]) extends Scan w
     // planning-time probe for `total` (the reference reads it from the
     // first page response, task.ts:127); the probe's body is handed to
     // the page-1 partition so that page is not fetched twice
-    val page1Body = Json.get(Json.httpClient(),
-      s"$url?limit=$pageSize&page=1", authHeaders(token))
+    val page1Body = Json.get(s"$url?limit=$pageSize&page=1", authHeaders(token))
     val total = Json.parse(page1Body).get("total").asLong()
     val capped = limit.map(l => math.min(l, total)).getOrElse(total)
     val nPages = math.max(1, math.ceil(capped.toDouble / pageSize).toInt)
@@ -95,8 +94,7 @@ class LeaseReader(p: LeasePartition) extends PartitionReader[InternalRow] {
       if (p.token.isEmpty) Map.empty[String, String]
       else Map("Authorization" -> s"Bearer ${p.token}")
     val body = Json.parse(p.prefetchedBody.getOrElse(
-      Json.get(Json.httpClient(),
-        s"${p.url}?limit=${p.pageSize}&page=${p.page}", headers)))
+      Json.get(s"${p.url}?limit=${p.pageSize}&page=${p.page}", headers)))
     val all = body.get("items").elements().asScala.map { it =>
       InternalRow(
         UTF8String.fromString(it.get("id").asText()),

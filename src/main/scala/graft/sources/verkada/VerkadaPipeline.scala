@@ -1,8 +1,9 @@
 package graft.sources.verkada
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException}
 import scala.jdk.CollectionConverters._
 
 /** The reference pipeline (/root/reference/task.ts:93-286) re-expressed
@@ -19,9 +20,9 @@ import scala.jdk.CollectionConverters._
   *  5. Permission semi-join (A10, task.ts:209-212).
   *  6. Left join against leases (A11) → upsert PATCH-or-POST per
   *     camera (A15, task.ts:228-271) inside mapPartitions — the
-  *     reference's 20-concurrent fan-out (A14) becomes partition
-  *     parallelism: repartition(concurrency) gives N parallel
-  *     sequential HTTP streams across the cluster.
+  *     reference's 20-concurrent fan-out (A14) becomes one async
+  *     window per partition on the shared HTTP client, at most
+  *     `concurrency` requests in flight across the cluster.
   *  7. HLS enrichment of the feature (A16, task.ts:245-249).
   *  8. submit(): POST the FeatureCollection (A17, task.ts:280-285).
   */
@@ -65,15 +66,15 @@ object VerkadaPipeline {
 
   /** A1: OAuth token fetch (task.ts:97-106). */
   def fetchToken(cfg: Config): String = {
-    val body = Json.parse(Json.send(Json.httpClient(), "POST", s"${cfg.apiBase}/token", "{}",
+    val body = Json.parse(Json.send("POST", s"${cfg.apiBase}/token", "{}",
       Map("x-api-key" -> cfg.apiKey)))
     body.get("token").asText()
   }
 
   /** A4: stream-token fetch → permission sets + jwt (task.ts:129-141). */
   def fetchStreamGrant(cfg: Config): StreamGrant = {
-    val body = Json.parse(Json.get(Json.httpClient(),
-      s"${cfg.apiBase}/cameras/v1/footage/token", Map("x-api-key" -> cfg.apiKey)))
+    val body = Json.parse(Json.get(s"${cfg.apiBase}/cameras/v1/footage/token",
+      Map("x-api-key" -> cfg.apiKey)))
     StreamGrant(
       body.get("accessibleCameras").elements().asScala.map(_.asText()).toSeq,
       body.get("accessibleSites").elements().asScala.map(_.asText()).toSeq,
@@ -242,21 +243,30 @@ object VerkadaPipeline {
       failureCount: org.apache.spark.util.LongAccumulator)
 
   /** A11+A14+A15+A16: left-join leases, PATCH-or-POST upsert per
-    * camera with per-partition HTTP, enrich the feature with the HLS
-    * URL when the response carries one. Failures are counted AND
+    * camera, enrich the feature with the HLS URL when the response
+    * carries one. The reference's 20-wide `Promise.allSettled` batches
+    * (A14, task.ts:201-278) become a sliding window: the rows are
+    * spread over `min(concurrency, defaultParallelism)` partitions,
+    * and each partition keeps at most `concurrency / partitions`
+    * requests in flight on the shared [[Json.client]], emitting rows
+    * in input order as the oldest request settles. So at most
+    * `cfg.concurrency` requests are in flight across the cluster, and
+    * a task holds at most its window of rows. Failures are counted AND
     * captured row-by-row in a quarantine side output (the reference
     * swallows them — task.ts:276 TODO). The upsert stage is cached:
     * both returned frames derive from one pass, so consuming both
     * never replays the HTTP calls. */
   def upsertAndEnrich(features: DataFrame, leasesDf: DataFrame, cfg: Config,
       token: String, jwt: String): UpsertResult = {
+    require(cfg.concurrency > 0, s"upsert concurrency must be positive; got ${cfg.concurrency}")
     val spark = features.sparkSession
-    import spark.implicits._
     val failures = spark.sparkContext.longAccumulator("graft.verkada.upsertFailures")
+    val nParts = math.min(cfg.concurrency, spark.sparkContext.defaultParallelism)
+    val window = math.max(1, cfg.concurrency / nParts)
     val joined = features
       .join(broadcast(leasesDf), features("id") === leasesDf("source_id"), "left_outer")
       .withColumn("proxy", proxyUrl(cfg, jwt))
-      .repartition(cfg.concurrency)
+      .repartition(nParts)
 
     val stringField = (n: String) => org.apache.spark.sql.types.StructField(
       n, org.apache.spark.sql.types.StringType, nullable = true)
@@ -265,39 +275,57 @@ object VerkadaPipeline {
     val enc = org.apache.spark.sql.Encoders.row(schema)
 
     val raw = joined.mapPartitions { rows =>
-      val client = Json.httpClient()
       val headers = Map("Authorization" -> s"Bearer $token")
-      rows.map { r =>
-        val camId = r.getAs[String]("id")
-        val model = r.getAs[String]("model")
-        val name = r.getAs[String]("cam_name")
-        val leaseId = Option(r.getAs[String]("lease_id"))
+      def start(r: Row): CompletableFuture[String] = {
         // identical 7-field body for PATCH and POST (task.ts:230-260)
         val body = Json.mapper.createObjectNode()
-        body.put("name", name)
+        body.put("name", r.getAs[String]("cam_name"))
         body.put("duration", 3600L)
-        body.put("source_id", camId)
+        body.put("source_id", r.getAs[String]("id"))
         body.put("source_type", "fixed")
-        body.put("source_model", s"Verkada $model")
+        body.put("source_model", s"Verkada ${r.getAs[String]("model")}")
         body.put("proxy", r.getAs[String]("proxy"))
+        try Option(r.getAs[String]("lease_id")) match {
+          case Some(idv) => Json.sendAsync("PATCH",
+            s"${cfg.serverBase}/video/lease/$idv", body.toString, headers)
+          case None => Json.sendAsync("POST",
+            s"${cfg.serverBase}/video/lease", body.toString, headers)
+        } catch { case e: Exception => CompletableFuture.failedFuture[String](e) }
+      }
+      // allSettled per row: a failed request still emits its row
+      def settle(r: Row, f: CompletableFuture[String]) = {
         val (hls, err) =
           try {
-            val out = leaseId match {
-              case Some(idv) => Json.send(client, "PATCH",
-                s"${cfg.serverBase}/video/lease/$idv", body.toString, headers)
-              case None => Json.send(client, "POST",
-                s"${cfg.serverBase}/video/lease", body.toString, headers)
-            }
-            val node = Json.parse(out)
+            val node = Json.parse(f.get())
             val h = if (node.has("protocols") && node.get("protocols").hasNonNull("hls"))
               node.get("protocols").get("hls").get("url").asText()
             else null
             (h, null: String)
-          } catch { case e: Exception =>
+          } catch { case e0: Exception =>
+            // the exception send would have thrown, not its wrapper
+            val e = e0 match {
+              case w @ (_: ExecutionException | _: CompletionException) if w.getCause != null =>
+                w.getCause
+              case other => other
+            }
             failures.add(1)
             (null: String, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}")
           }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ hls :+ err)
+        Row.fromSeq(r.toSeq :+ hls :+ err)
+      }
+      val inFlight = scala.collection.mutable.Queue.empty[(Row, CompletableFuture[String])]
+      new Iterator[Row] {
+        private def fill(): Unit =
+          while (inFlight.size < window && rows.hasNext) {
+            val r = rows.next()
+            inFlight.enqueue(r -> start(r))
+          }
+        override def hasNext: Boolean = { fill(); inFlight.nonEmpty }
+        override def next(): Row = {
+          fill()
+          val (r, f) = inFlight.dequeue()
+          settle(r, f)
+        }
       }
     }(enc).cache()
 
@@ -336,8 +364,7 @@ object VerkadaPipeline {
       case None =>
         val rows = features.toJSON.collect()
         val fc = s"""{"type":"FeatureCollection","features":[${rows.mkString(",")}]}"""
-        Json.send(Json.httpClient(), "POST",
-          s"${cfg.serverBase}/layer/${cfg.layerId}/features",
+        Json.send("POST", s"${cfg.serverBase}/layer/${cfg.layerId}/features",
           fc, Map("Authorization" -> s"Bearer $token"))
         rows.length
     }
@@ -353,10 +380,9 @@ object VerkadaPipeline {
     val url = s"${cfg.serverBase}/layer/${cfg.layerId}/features"
     val auth = Map("Authorization" -> s"Bearer $token")
     features.toJSON.foreachPartition { (it: Iterator[String]) =>
-      val client = Json.httpClient()
       it.grouped(chunk).foreach { batch =>
         val fc = s"""{"type":"FeatureCollection","features":[${batch.mkString(",")}]}"""
-        Json.send(client, "POST", url, fc, auth)
+        Json.send("POST", url, fc, auth)
         sent.add(batch.size)
       }
     }

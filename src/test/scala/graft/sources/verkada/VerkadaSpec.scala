@@ -416,12 +416,86 @@ class VerkadaSpec extends SparkSpec {
       val f = failedRows.head
       assert(f.getAs[String]("camera_id") == "cam-3")
       assert(f.getAs[String]("lease_id") == "L4")
-      assert(f.getAs[String]("error").contains("500"))
+      // the async send raises send's own message, unwrapped from the
+      // CompletionException: "<SimpleName>: PATCH <url> -> 500: <body>"
+      assert(f.getAs[String]("error").startsWith(
+        s"RuntimeException: PATCH ${c.serverBase}/video/lease/L4 -> 500"), f.getAs[String]("error"))
       assert(res.failureCount.value == 1L)
       // and cam-3 got no video enrichment
       val cam3 = out(1).getAs[org.apache.spark.sql.Row]("properties")
       assert(cam3.getAs[AnyRef]("video") == null)
     } finally server.stop(0)
+  }
+
+  test("upsert rejects a non-positive concurrency up front") {
+    val c = VerkadaPipeline.Config("http://unused", "http://unused", "k", 7, concurrency = 0)
+    val ex = intercept[IllegalArgumentException] {
+      VerkadaPipeline.upsertAndEnrich(spark.emptyDataFrame, spark.emptyDataFrame, c, "t", "j")
+    }
+    assert(ex.getMessage.contains("upsert concurrency must be positive; got 0"), ex.getMessage)
+  }
+
+  test("upsert fan-out: more than one request in flight per task, never more than concurrency") {
+    // its own stub with a pool wider than the window: the shared stub
+    // has no executor, so it serves one request at a time
+    val inFlight = new AtomicInteger(0)
+    val maxInFlight = new AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
+    val server = HttpServer.create(new InetSocketAddress(0), 0)
+    server.setExecutor(pool)
+    server.createContext("/video/lease", ex => {
+      val now = inFlight.incrementAndGet()
+      maxInFlight.accumulateAndGet(now, math.max)
+      try {
+        val cam = Json.parse(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+          .get("source_id").asText()
+        Thread.sleep(30)
+        respond(ex, 200, s"""{"protocols":{"hls":{"url":"https://hls/$cam.m3u8"}}}""")
+      } finally inFlight.decrementAndGet()
+    })
+    server.start()
+    try {
+      import spark.implicits._
+      val dp = spark.sparkContext.defaultParallelism
+      val base = s"http://localhost:${server.getAddress.getPort}"
+      val c = VerkadaPipeline.Config(base, base, "k", 7, concurrency = 2 * dp)
+      val ids = (0 until 64).map(i => f"cam-$i%02d")
+      val feats = VerkadaPipeline.toFeatures(VerkadaPipeline.decodeCameras(
+        ids.map(id => camJson(id, "site-A", s"Cam $id", 39.0, -105.0)).toDF("json")))
+      val noLeases = Seq.empty[(String, String)].toDF("lease_id", "source_id")
+      val res = VerkadaPipeline.upsertAndEnrich(feats, noLeases, c, "tok", "jwt")
+      val out = res.features.select(col("id"), col("properties.video.url")).collect()
+        .map(r => r.getString(0) -> r.getString(1))
+      assert(out.map(_._1).sorted.toSeq == ids)
+      assert(out.forall { case (id, url) => url == s"https://hls/$id.m3u8" }, out.toSeq)
+      assert(res.failureCount.value == 0L)
+      assert(maxInFlight.get() <= c.concurrency, s"max in flight ${maxInFlight.get()}")
+      // one sequential stream per task could not exceed the task slots
+      assert(maxInFlight.get() > dp, s"max in flight ${maxInFlight.get()} with $dp slots")
+    } finally { server.stop(0); pool.shutdownNow() }
+  }
+
+  test("two syncs share one HTTP client") {
+    // a client's selector thread dies once the client is collected, so
+    // sample the live ones during the syncs instead of counting after
+    def selectors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .map(_.getName).filter(_.matches("HttpClient-\\d+-SelectorManager")).toSet
+    val before = selectors()
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var sampling = true
+    val sampler = new Thread(() => while (sampling) { selectors().foreach(seen.add); Thread.sleep(2) })
+    sampler.setDaemon(true)
+    val server = startServer()
+    try {
+      resetCounters()
+      val c = cfg(server)
+      sampler.start()
+      VerkadaPipeline.run(spark, c).collect()
+      VerkadaPipeline.run(spark, c).collect()
+      assert(submitted.size() == 2)
+    } finally { sampling = false; sampler.join(); server.stop(0) }
+    val created = seen.asScala.toSet -- before
+    assert(created.size <= 1, s"HTTP clients started by two syncs: ${created.toSeq.sorted}")
   }
 
   test("Config.fromInput validates the region enum and defaults") {
