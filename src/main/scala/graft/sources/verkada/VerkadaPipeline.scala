@@ -12,17 +12,19 @@ import scala.jdk.CollectionConverters._
   *  1. OAuth + stream-token fetches (task.ts:97-106, 129-141) —
   *     driver-side setup, results broadcast via literals/isin.
   *  2. Lease scan (A2) — LeaseSource, parallel page partitions;
-  *     filter to this layer + non-null source_id (A6, task.ts:122);
-  *     last-page-wins dedup per source_id (A7, task.ts:121-125).
+  *     filter to this layer + non-null source_id (A6, task.ts:122).
+  *     Every matching lease is kept with its page; the dedup runs in
+  *     stage 6.
   *  3. Camera scan (A3) — CameraSource cursor reader; FAILFAST
   *     from_json decode (A5).
   *  4. GeoJSON Feature projection (A8, task.ts:168-195).
   *  5. Permission semi-join (A10, task.ts:209-212).
-  *  6. Left join against leases (A11) → upsert PATCH-or-POST per
-  *     camera (A15, task.ts:228-271) inside mapPartitions — the
-  *     reference's 20-concurrent fan-out (A14) becomes one async
-  *     window per partition on the shared HTTP client, at most
-  *     `concurrency` requests in flight across the cluster.
+  *  6. Left join against leases (A11), last-page-wins pick per
+  *     camera row (A7, task.ts:121-125) → upsert PATCH-or-POST per
+  *     camera (A15, task.ts:228-271) inside mapPartitions — all in
+  *     one task with no shuffle; the reference's 20-concurrent
+  *     fan-out (A14) becomes one async window of `concurrency`
+  *     requests on the shared HTTP client.
   *  7. HLS enrichment of the feature (A16, task.ts:245-249).
   *  8. submit(): POST the FeatureCollection (A17, task.ts:280-285).
   */
@@ -81,20 +83,19 @@ object VerkadaPipeline {
       body.get("jwt").asText())
   }
 
-  /** A2+A6+A7: lease scan, filter to layer, last-page-wins dedup. */
-  def leases(spark: SparkSession, cfg: Config, token: String): DataFrame = {
-    val raw = spark.read.format(classOf[LeaseSource].getName)
+  /** A2+A6: lease scan, filtered to this layer and a non-null
+    * source_id — (lease_id, source_id, lease_page), every page fetched
+    * in parallel. A camera may still have several leases here: the
+    * last-page-wins pick (A7) runs in [[upsertAndEnrich]], on the
+    * upsert's own partition, so the scan plans no shuffle. */
+  def leases(spark: SparkSession, cfg: Config, token: String): DataFrame =
+    spark.read.format(classOf[LeaseSource].getName)
       .option("url", s"${cfg.serverBase}/video/lease")
       .option("token", token)
       .option("pageSize", cfg.leasePageSize)
       .load()
-    val w = Window.partitionBy("source_id").orderBy(col("page").desc, col("id").desc)
-    raw
       .filter(col("layer") === cfg.layerId && col("source_id").isNotNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("id").as("lease_id"), col("source_id"))
-  }
+      .select(col("id").as("lease_id"), col("source_id"), col("page").as("lease_page"))
 
   /** A5: FAILFAST schema-validated decode of raw camera JSON rows —
     * the one decode both the batch scan ([[cameras]]) and the
@@ -177,20 +178,23 @@ object VerkadaPipeline {
       col("site_id").isin(grant.accessibleSites: _*) ||
       col("id").isin(grant.accessibleCameras: _*))
 
-  /** Large-grant variant of A10: the OR of two memberships as
-    * shuffle-free broadcast HASH joins — semi(site) ∪ (anti(site) ⋉
-    * cam) — rather than a single OR-condition join (which would plan
-    * as a nested-loop) or a union+dropDuplicates (which would
-    * shuffle). Row-equivalent to the isin form for any grant. */
+  /** Large-grant variant of A10: the OR of two memberships as two
+    * shuffle-free broadcast left-outer HASH joins against the distinct
+    * site and camera keys, kept where either key matched — rather
+    * than a single OR-condition join (which would plan as a
+    * nested-loop) or a union of two branches (which would scan
+    * `features` twice). Distinct keys match each row at most once, so
+    * this is row-equivalent to the isin form for any grant. */
   def streamableSemi(features: DataFrame, grant: StreamGrant): DataFrame = {
     val s = features.sparkSession
     import s.implicits._
-    val sites = broadcast(grant.accessibleSites.toDF("site_key"))
-    val cams = broadcast(grant.accessibleCameras.toDF("cam_key"))
-    val bySite = features.join(sites, col("site_id") === col("site_key"), "left_semi")
-    val byCamOnly = features.join(sites, col("site_id") === col("site_key"), "left_anti")
-      .join(cams, col("id") === col("cam_key"), "left_semi")
-    bySite.unionAll(byCamOnly)
+    val sites = broadcast(grant.accessibleSites.distinct.toDF("site_key"))
+    val cams = broadcast(grant.accessibleCameras.distinct.toDF("cam_key"))
+    features
+      .join(sites, col("site_id") === col("site_key"), "left_outer")
+      .join(cams, col("id") === col("cam_key"), "left_outer")
+      .filter(col("site_key").isNotNull || col("cam_key").isNotNull)
+      .drop("site_key", "cam_key")
   }
 
   /** A13: the stream proxy URL — 6 constant params + url-encoded jwt,
@@ -238,35 +242,46 @@ object VerkadaPipeline {
     * knowing a tally (reference `task.ts:276` "TODO Surface errors"
     * swallows even that). `failureCount` is the executor-side
     * accumulator tally (cheap to read without running the quarantine
-    * branch). */
+    * branch). Both frames read one cached upsert stage; [[unpersist]]
+    * releases it once neither is needed. */
   case class UpsertResult(features: DataFrame, failed: DataFrame,
-      failureCount: org.apache.spark.util.LongAccumulator)
+      failureCount: org.apache.spark.util.LongAccumulator)(stage: DataFrame) {
+    def unpersist(): Unit = stage.unpersist()
+  }
 
-  /** A11+A14+A15+A16: left-join leases, PATCH-or-POST upsert per
-    * camera, enrich the feature with the HLS URL when the response
-    * carries one. The reference's 20-wide `Promise.allSettled` batches
-    * (A14, task.ts:201-278) become a sliding window: the rows are
-    * spread over `min(concurrency, defaultParallelism)` partitions,
-    * and each partition keeps at most `concurrency / partitions`
-    * requests in flight on the shared [[Json.client]], emitting rows
-    * in input order as the oldest request settles. So at most
-    * `cfg.concurrency` requests are in flight across the cluster, and
-    * a task holds at most its window of rows. Failures are counted AND
-    * captured row-by-row in a quarantine side output (the reference
-    * swallows them — task.ts:276 TODO). The upsert stage is cached:
-    * both returned frames derive from one pass, so consuming both
-    * never replays the HTTP calls. */
+  /** A7+A11+A14+A15+A16: left-join leases, pick the last-page lease,
+    * PATCH-or-POST upsert per camera, enrich the feature with the HLS
+    * URL when the response carries one. The whole stage is one task:
+    * `features` is coalesced to one partition (the camera scan is
+    * already one, a cursor) and every row gets a key
+    * before the broadcast left join; `row_number` over that key,
+    * ordered by (lease_page desc, lease_id desc), keeps the lease on
+    * the latest page, then the larger id (A7, task.ts:121-125). A
+    * window over one partition plans no exchange, and a camera row
+    * that appears twice stays two rows. The reference's 20-wide
+    * `Promise.allSettled` batches (A14, task.ts:201-278) become a
+    * sliding window of at most `cfg.concurrency` requests in flight on
+    * the shared async [[Json.client]], emitting rows in input order as
+    * the oldest request settles: the task thread only builds bodies
+    * and parses replies, so the window, not the task count, sets the
+    * throughput. Failures are counted AND captured row-by-row in a
+    * quarantine side output (the reference swallows them — task.ts:276
+    * TODO). The upsert stage is cached: both returned frames derive
+    * from one pass, so consuming both never replays the HTTP calls. */
   def upsertAndEnrich(features: DataFrame, leasesDf: DataFrame, cfg: Config,
       token: String, jwt: String): UpsertResult = {
     require(cfg.concurrency > 0, s"upsert concurrency must be positive; got ${cfg.concurrency}")
     val spark = features.sparkSession
     val failures = spark.sparkContext.longAccumulator("graft.verkada.upsertFailures")
-    val nParts = math.min(cfg.concurrency, spark.sparkContext.defaultParallelism)
-    val window = math.max(1, cfg.concurrency / nParts)
-    val joined = features
-      .join(broadcast(leasesDf), features("id") === leasesDf("source_id"), "left_outer")
+    val keyed = features.coalesce(1).withColumn("row_key", monotonically_increasing_id())
+    val lastPage = Window.partitionBy("row_key")
+      .orderBy(col("lease_page").desc, col("lease_id").desc)
+    val joined = keyed
+      .join(broadcast(leasesDf), keyed("id") === leasesDf("source_id"), "left_outer")
+      .withColumn("rn", row_number().over(lastPage))
+      .filter(col("rn") === 1)
+      .drop("rn", "row_key", "lease_page")
       .withColumn("proxy", proxyUrl(cfg, jwt))
-      .repartition(nParts)
 
     val stringField = (n: String) => org.apache.spark.sql.types.StructField(
       n, org.apache.spark.sql.types.StringType, nullable = true)
@@ -316,7 +331,7 @@ object VerkadaPipeline {
       val inFlight = scala.collection.mutable.Queue.empty[(Row, CompletableFuture[String])]
       new Iterator[Row] {
         private def fill(): Unit =
-          while (inFlight.size < window && rows.hasNext) {
+          while (inFlight.size < cfg.concurrency && rows.hasNext) {
             val r = rows.next()
             inFlight.enqueue(r -> start(r))
           }
@@ -342,7 +357,7 @@ object VerkadaPipeline {
     val failed = raw.filter(col("upsert_error").isNotNull)
       .select(col("id").as("camera_id"), col("lease_id"),
         col("upsert_error").as("error"))
-    UpsertResult(ok, failed, failures)
+    UpsertResult(ok, failed, failures)(raw)
   }
 
   /** A17: submit the FeatureCollection to the layer endpoint
@@ -398,7 +413,9 @@ object VerkadaPipeline {
     val feats = toFeatures(cams)
     val live = streamable(feats, grant)
     val res = upsertAndEnrich(live, ls, cfg, token, grant.jwt)
-    val enriched = res.features.cache()
+    // a projection over the cached upsert stage: the submit and any
+    // later action read that cache and never replay the HTTP calls
+    val enriched = res.features
     submit(enriched, cfg, token)
     if (cfg.debug) // reference DEBUG=true prints results (task.ts:23-26)
       enriched.toJSON.collect().foreach(println)
@@ -420,11 +437,15 @@ object VerkadaPipeline {
     * [[upsertAndEnrich]] — via foreachBatch, so the reference's
     * scheduled whole-snapshot job (task.ts:93) and the incremental
     * path cannot drift: there is one pipeline, batch chooses the
-    * snapshot source and streaming chooses the cursor source. Tokens,
-    * grant and the lease table are fetched once per stream start
-    * (the batch `run` posture); `onBatch` receives each micro-batch's
-    * enriched features (the caller submits, sinks, or accumulates —
-    * a standing stream has no single end-of-run FeatureCollection).
+    * snapshot source and streaming chooses the cursor source. The
+    * token and grant are fetched once per stream start; the lease
+    * table is a lazy frame, so each micro-batch re-scans every lease
+    * page and upserts against the current leases. `onBatch` receives
+    * each micro-batch's enriched features (the caller submits, sinks,
+    * or accumulates — a standing stream has no single end-of-run
+    * FeatureCollection). `onBatch` must consume them before it
+    * returns: its return releases the batch's cached upsert stage, so
+    * a later action on them would send the upserts again.
     */
   def runStream(spark: SparkSession, cfg: Config, checkpoint: String)(
       onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -461,7 +482,8 @@ object VerkadaPipeline {
       onBatch: DataFrame => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => onceOnly(spark, checkpoint, batchId) {
       val live = streamable(toFeatures(decodeCameras(batch)), grant)
-      onBatch(upsertAndEnrich(live, ls, cfg, token, grant.jwt).features)
+      val res = upsertAndEnrich(live, ls, cfg, token, grant.jwt)
+      try onBatch(res.features) finally res.unpersist()
     }
 
   /** Run `body` once per (checkpoint, batchId): a completion marker is

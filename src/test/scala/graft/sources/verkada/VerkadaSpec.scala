@@ -189,15 +189,58 @@ class VerkadaSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("lease source plans one partition per page and dedups last-wins") {
+  test("lease source plans one partition per page and keeps every lease") {
     val server = startServer()
     try {
       val c = cfg(server)
-      val ls = VerkadaPipeline.leases(spark, c, "tok123").collect()
-      // layer filter drops L2; null source_id drops L3; dup cam-1
-      // resolves to the later page's L9
-      assert(ls.map(r => (r.getString(1), r.getString(0))).toMap ==
-        Map("cam-1" -> "L9", "cam-3" -> "L4"))
+      val df = VerkadaPipeline.leases(spark, c, "tok123")
+      assert(df.rdd.getNumPartitions == 3)
+      val ls = df.collect()
+      // layer filter drops L2; null source_id drops L3; both cam-1
+      // leases stay, each with its page (the upsert picks L9)
+      assert(ls.map(r => (r.getAs[String]("lease_id"), r.getAs[String]("source_id"),
+        r.getAs[Int]("lease_page"))).toSet ==
+        Set(("L1", "cam-1", 1), ("L4", "cam-3", 2), ("L9", "cam-1", 3)))
+    } finally server.stop(0)
+  }
+
+  test("the upsert stage plans no shuffle: only broadcast exchanges") {
+    val server = startServer()
+    try {
+      val c = cfg(server)
+      val token = VerkadaPipeline.fetchToken(c)
+      val grant = VerkadaPipeline.fetchStreamGrant(c)
+      val live = VerkadaPipeline.streamable(
+        VerkadaPipeline.toFeatures(VerkadaPipeline.cameras(spark, c, token)), grant)
+      val res = VerkadaPipeline.upsertAndEnrich(live,
+        VerkadaPipeline.leases(spark, c, token), c, token, grant.jwt)
+      try {
+        assert(res.features.collect().length == 3)
+        // the plan string includes the cached stage's own plan
+        val plan = res.features.queryExecution.executedPlan.toString
+        val shuffles = plan.split("\n").filter(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
+        assert(shuffles.isEmpty, plan)
+        assert(plan.contains("InMemoryRelation") && plan.contains("BroadcastExchange"), plan)
+      } finally res.unpersist()
+    } finally server.stop(0)
+  }
+
+  test("a camera row listed twice stays two rows, both PATCH the last-page lease") {
+    val server = startServer()
+    try {
+      resetCounters()
+      import spark.implicits._
+      val c = cfg(server)
+      val row = camJson("cam-1", "site-A", "Lobby", 39.1, -104.8)
+      val feats = VerkadaPipeline.toFeatures(VerkadaPipeline.decodeCameras(Seq(row, row).toDF("json")))
+      val res = VerkadaPipeline.upsertAndEnrich(feats,
+        VerkadaPipeline.leases(spark, c, "tok123"), c, "tok123", "jwt")
+      try {
+        // cam-1 has L1 (page 1) and L9 (page 3): one output row per input row
+        assert(res.features.select("id").collect().map(_.getString(0)).toSeq == Seq("cam-1", "cam-1"))
+        assert(patches.asScala.toSeq == Seq("L9", "L9"), patches.asScala.toSeq)
+        assert(posts.get() == 0)
+      } finally res.unpersist()
     } finally server.stop(0)
   }
 
@@ -292,10 +335,14 @@ class VerkadaSpec extends SparkSpec {
           Some(props.getAs[org.apache.spark.sql.Row]("video").getAs[String]("url"))
         else None
       }
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.size
       val q = VerkadaPipeline.runStream(spark, c, ckpt) { feats =>
         batches.add(feats.collect().toSeq.map(r => (r.getAs[String]("id"), video(r))))
       }
       try q.processAllAvailable() finally q.stop()
+      // each micro-batch releases its cached upsert stage after onBatch
+      val cachedAfter = spark.sparkContext.getPersistentRDDs.size
+      assert(cachedAfter == cachedBefore, s"cached RDDs: $cachedBefore before, $cachedAfter after")
       // one micro-batch per API page; each page's streamable cameras
       // surface in ITS batch (page1: cam-1; page2: cam-3; page3: cam-5)
       val perBatch = batches.asScala.toSeq.filter(_.nonEmpty).map(_.map(_._1))
@@ -462,7 +509,7 @@ class VerkadaSpec extends SparkSpec {
       val ids = (0 until 64).map(i => f"cam-$i%02d")
       val feats = VerkadaPipeline.toFeatures(VerkadaPipeline.decodeCameras(
         ids.map(id => camJson(id, "site-A", s"Cam $id", 39.0, -105.0)).toDF("json")))
-      val noLeases = Seq.empty[(String, String)].toDF("lease_id", "source_id")
+      val noLeases = Seq.empty[(String, String, Int)].toDF("lease_id", "source_id", "lease_page")
       val res = VerkadaPipeline.upsertAndEnrich(feats, noLeases, c, "tok", "jwt")
       val out = res.features.select(col("id"), col("properties.video.url")).collect()
         .map(r => r.getString(0) -> r.getString(1))
@@ -524,8 +571,11 @@ class VerkadaSpec extends SparkSpec {
       val viaIsin = VerkadaPipeline.streamable(feats, grant)
         .select("id").collect().map(_.getString(0)).toSet
       val semi = VerkadaPipeline.streamableSemi(feats, grant)
+      resetCounters()
       val viaSemi = semi.select("id").collect().map(_.getString(0)).toSet
       assert(viaSemi == viaIsin && viaSemi == Set("cam-1", "cam-3", "cam-5"))
+      // one walk of the camera cursor, not one per membership branch
+      assert(devicePages.get() == 3, s"pages fetched: ${devicePages.get()}")
       // both memberships must plan as broadcast HASH joins — an
       // OR-condition formulation would degrade to nested-loop
       val plan = semi.queryExecution.executedPlan.toString
