@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * Everything is deterministic; no RNG anywhere. Since r7 the
   * production paths (lshBandBucket, simhash64) use the spec-stated
   * Horner hashes (mod-2³¹-prime arithmetic, see SimHash64/TokenHash64)
-  * so any engine can reproduce them from the constants alone;
-  * xxhash64 with a per-plane string salt survives only in the HOF
-  * reference twins (minhashSignatureHof and friends).
+  * so any engine can reproduce them from the constants alone. The HOF
+  * reference twins (shinglesHof, jaccardHof) stay only as semantic
+  * references for equivalence tests.
   */
 object TextSim {
 
@@ -34,20 +34,10 @@ object TextSim {
         i => array_join(slice(toks, i, lit(n)), " ")))
 
   /** MinHash signature — delegates to the native single-pass
-    * Expression (see MinHashSignature's scaladoc for why the HOF
-    * formulation below is a plan-shape hazard). */
+    * Expression (see MinHashSignature's scaladoc for why a HOF
+    * formulation is a plan-shape hazard). */
   def minhashSignature(shingleSet: Column, k: Int): Column =
     MinHashSignature.minhash_signature(shingleSet, k)
-
-  /** HOF formulation kept as the reference/baseline twin: k salted
-    * transform+array_min passes. Semantically a valid MinHash but
-    * O(k·|shingles|) per EVALUATION — and Catalyst may duplicate the
-    * expression per consumer. Tests compare its collision behavior
-    * with the native version; production paths use the native one. */
-  def minhashSignatureHof(shingleSet: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      array_min(transform(shingleSet, sh => xxhash64(concat(sh, lit(s"#mh$i")))))
-    }: _*)
 
   /** LSH band bucket for one band index: spec-stated Horner fold of
     * the band's slice of the signature mod the MinHash prime (r7, was

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import com.fasterxml.jackson.databind.JsonNode
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
@@ -64,6 +65,23 @@ object CameraSource {
     StructField("status", StringType, nullable = false),
     StructField("timezone", StringType, nullable = false),
     StructField("vehicle_history_enabled", BooleanType, nullable = false)))
+
+  /** One step of the camera cursor walk, shared by the batch reader
+    * and the micro-batch stream: GET `url` at `cursor` (URL-encoded:
+    * cursors are opaque server strings) and return the page's camera
+    * objects with the next cursor. The next cursor is None when the
+    * server sends none or one that fails to advance (task.ts:160-166),
+    * which ends the walk. */
+  private[verkada] def fetchPage(url: String, headers: Map[String, String],
+      cursor: Option[String]): (Iterator[JsonNode], Option[String]) = {
+    val u = url + cursor.map(t =>
+      s"?page_token=${java.net.URLEncoder.encode(t, "UTF-8")}").getOrElse("")
+    val body = Json.parse(Json.get(u, headers))
+    val next =
+      if (body.hasNonNull("next_page_token")) Some(body.get("next_page_token").asText())
+      else None
+    (body.get("cameras").elements().asScala, next.filterNot(cursor.contains))
+  }
 }
 
 class CameraTable(options: Map[String, String]) extends Table with SupportsRead {
@@ -102,9 +120,7 @@ class CameraReaderFactory extends PartitionReaderFactory {
   * it FAILS TO ADVANCE (the reference's guard), or when the pushed
   * limit is satisfied. */
 class CameraReader(p: CameraPartition) extends PartitionReader[InternalRow] {
-  private val headers =
-    if (p.token.isEmpty) Map.empty[String, String]
-    else Map("Authorization" -> s"Bearer ${p.token}")
+  private val headers = Json.bearer(p.token)
   private var pageToken: Option[String] = None
   private var page = 0
   private var done = false
@@ -113,21 +129,11 @@ class CameraReader(p: CameraPartition) extends PartitionReader[InternalRow] {
   private var current: InternalRow = _
 
   private def fetchPage(): Unit = {
-    // cursors are opaque server strings — URL-encode them
-    val url = p.url + pageToken.map(t =>
-      s"?page_token=${java.net.URLEncoder.encode(t, "UTF-8")}").getOrElse("")
-    val body = Json.parse(Json.get(url, headers))
+    val (cams, next) = CameraSource.fetchPage(p.url, headers, pageToken)
     page += 1
-    val cams = body.get("cameras").elements().asScala.map { c =>
-      InternalRow(UTF8String.fromString(c.toString), page)
-    }
-    buffer = cams
-    val next =
-      if (body.hasNonNull("next_page_token")) Some(body.get("next_page_token").asText())
-      else None
-    // stop on null token OR a token that failed to advance
-    // (task.ts:160-166)
-    if (next.isEmpty || next == pageToken) done = true
+    val pg = page
+    buffer = cams.map(c => InternalRow(UTF8String.fromString(c.toString), pg))
+    done = next.isEmpty
     pageToken = next
   }
 

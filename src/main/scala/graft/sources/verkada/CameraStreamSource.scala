@@ -69,9 +69,7 @@ case class CameraOffset(page: Int) extends Offset {
 
 class CameraMicroBatchStream(url: String, token: String)
     extends MicroBatchStream with SupportsAdmissionControl {
-  private val headers =
-    if (token.isEmpty) Map.empty[String, String]
-    else Map("Authorization" -> s"Bearer $token")
+  private val headers = Json.bearer(token)
 
   // driver-side cursor state, all guarded by `this`
   private var pageToken: Option[String] = None
@@ -95,18 +93,10 @@ class CameraMicroBatchStream(url: String, token: String)
 
   /** Fetch ONE page, buffer its rows, advance (or drain) the cursor. */
   private def fetchNext(): Unit = {
-    val u = url + pageToken.map(t =>
-      s"?page_token=${java.net.URLEncoder.encode(t, "UTF-8")}").getOrElse("")
-    val body = Json.parse(Json.get(u, headers))
+    val (cams, next) = CameraSource.fetchPage(url, headers, pageToken)
     fetchedPages += 1
-    buffered(fetchedPages) =
-      body.get("cameras").elements().asScala.map(_.toString).toArray
-    val next =
-      if (body.hasNonNull("next_page_token")) Some(body.get("next_page_token").asText())
-      else None
-    // null token OR a token that failed to advance drains the stream
-    // (task.ts:160-166)
-    if (next.isEmpty || next == pageToken) drained = true
+    buffered(fetchedPages) = cams.map(_.toString).toArray
+    drained = next.isEmpty
     pageToken = next
   }
 

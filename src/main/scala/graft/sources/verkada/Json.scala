@@ -15,6 +15,11 @@ object Json {
 
   def parse(s: String): JsonNode = mapper.readTree(s)
 
+  /** The bearer `Authorization` header for `token`; no header when
+    * the token is empty. */
+  private[verkada] def bearer(token: String): Map[String, String] =
+    if (token.isEmpty) Map.empty else Map("Authorization" -> s"Bearer $token")
+
   /** The one HTTP client of this JVM, shared by every driver-side
     * call and every task. The JDK client is thread-safe and pools
     * connections; its selector and worker threads are daemons, so it

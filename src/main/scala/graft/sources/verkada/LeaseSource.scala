@@ -64,7 +64,7 @@ class LeaseScan(options: Map[String, String], limit: Option[Int]) extends Scan w
     // planning-time probe for `total` (the reference reads it from the
     // first page response, task.ts:127); the probe's body is handed to
     // the page-1 partition so that page is not fetched twice
-    val page1Body = Json.get(s"$url?limit=$pageSize&page=1", authHeaders(token))
+    val page1Body = Json.get(s"$url?limit=$pageSize&page=1", Json.bearer(token))
     val total = Json.parse(page1Body).get("total").asLong()
     val capped = limit.map(l => math.min(l, total)).getOrElse(total)
     val nPages = math.max(1, math.ceil(capped.toDouble / pageSize).toInt)
@@ -73,9 +73,6 @@ class LeaseScan(options: Map[String, String], limit: Option[Int]) extends Scan w
         limit.map(l => l - (p - 1) * pageSize),
         if (p == 1) Some(page1Body) else None): InputPartition).toArray
   }
-
-  private def authHeaders(token: String): Map[String, String] =
-    if (token.isEmpty) Map.empty else Map("Authorization" -> s"Bearer $token")
 
   override def createReaderFactory(): PartitionReaderFactory = new LeaseReaderFactory
 }
@@ -90,11 +87,8 @@ class LeaseReaderFactory extends PartitionReaderFactory {
 
 class LeaseReader(p: LeasePartition) extends PartitionReader[InternalRow] {
   private lazy val items: Iterator[InternalRow] = {
-    val headers =
-      if (p.token.isEmpty) Map.empty[String, String]
-      else Map("Authorization" -> s"Bearer ${p.token}")
     val body = Json.parse(p.prefetchedBody.getOrElse(
-      Json.get(s"${p.url}?limit=${p.pageSize}&page=${p.page}", headers)))
+      Json.get(s"${p.url}?limit=${p.pageSize}&page=${p.page}", Json.bearer(p.token))))
     val all = body.get("items").elements().asScala.map { it =>
       InternalRow(
         UTF8String.fromString(it.get("id").asText()),

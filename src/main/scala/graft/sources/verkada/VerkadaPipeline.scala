@@ -290,7 +290,7 @@ object VerkadaPipeline {
     val enc = org.apache.spark.sql.Encoders.row(schema)
 
     val raw = joined.mapPartitions { rows =>
-      val headers = Map("Authorization" -> s"Bearer $token")
+      val headers = Json.bearer(token)
       def start(r: Row): CompletableFuture[String] = {
         // identical 7-field body for PATCH and POST (task.ts:230-260)
         val body = Json.mapper.createObjectNode()
@@ -380,7 +380,7 @@ object VerkadaPipeline {
         val rows = features.toJSON.collect()
         val fc = s"""{"type":"FeatureCollection","features":[${rows.mkString(",")}]}"""
         Json.send("POST", s"${cfg.serverBase}/layer/${cfg.layerId}/features",
-          fc, Map("Authorization" -> s"Bearer $token"))
+          fc, Json.bearer(token))
         rows.length
     }
 
@@ -393,7 +393,7 @@ object VerkadaPipeline {
     val sent = features.sparkSession.sparkContext
       .longAccumulator("graft.verkada.submittedFeatures")
     val url = s"${cfg.serverBase}/layer/${cfg.layerId}/features"
-    val auth = Map("Authorization" -> s"Bearer $token")
+    val auth = Json.bearer(token)
     features.toJSON.foreachPartition { (it: Iterator[String]) =>
       it.grouped(chunk).foreach { batch =>
         val fc = s"""{"type":"FeatureCollection","features":[${batch.mkString(",")}]}"""

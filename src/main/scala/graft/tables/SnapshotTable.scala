@@ -242,13 +242,17 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     *    materialize through [[read]] and so FOLD the DVs in — their
     *    commits carry no `#dv=` lines; appends carry them forward.
     *
+    * The manifest rules (dead files, inert sidecars, stat re-mints)
+    * are the one DV tombstone commit [[update]] and the SQL DML share:
+    * [[commitTombstones]].
+    *
     * Addresses use the file NAME (unique per manifest, enforced
     * here), so manifests stay relocation-safe. Returns the committed
     * version (the base version unchanged if the table has no data
     * files). Throws [[CommitConflictException]] on a publish race,
     * like every other writer. */
   def delete(cond: org.apache.spark.sql.Column): Long =
-    deleteMatching(_.filter(cond))
+    tombstoneMatching(_.filter(cond))
 
   /** DV DELETE driven by a KEY RELATION instead of a per-row
     * predicate — `MERGE ... WHEN MATCHED THEN DELETE`. Rows whose
@@ -259,7 +263,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * collects to the driver. AQE broadcasts small key sets. */
   def deleteKeys(keys: DataFrame, keyCol: String): Long = {
     val k = keys.select(col(keyCol)).distinct()
-    deleteMatching(_.join(k, Seq(keyCol), "left_semi"))
+    tombstoneMatching(_.join(k, Seq(keyCol), "left_semi"))
   }
 
   /** Live row counts for the files in `touchedAddrs` — the dead-file
@@ -291,175 +295,246 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     }
   }
 
-  private def deleteMatching(doomedOf: DataFrame => DataFrame): Long = {
+  /** [[delete]], [[deleteKeys]] and, with `assignments`, [[update]]:
+    * tombstone the live rows `matchOf` picks and commit through
+    * [[commitTombstones]]. The matched rows are cached once; their
+    * per-file counts, the sidecar, the re-mint's exclusion join, the
+    * post-images and the change feed all read that cache. */
+  private def tombstoneMatching(matchOf: DataFrame => DataFrame,
+      assignments: Option[Map[String, org.apache.spark.sql.Column]] = None): Long = {
+    val op = if (assignments.isDefined) "UPDATE" else "DELETE"
     val baseVersion = currentVersion
     require(baseVersion > 0, s"table at $root has no committed version")
     val lines = manifestLines(baseVersion)
     val files = manifestFiles(lines)
     if (files.isEmpty) return baseVersion
+    val schema = schemaOf(lines)
+    assignments.foreach(_.keys.foreach(k => require(schema.fieldNames.contains(k),
+      s"update assigns unknown column $k at $root")))
     val addrs = files.map(dvAddressOf)
     require(addrs.distinct.size == addrs.size,
-      s"delete needs manifest-unique data file addresses at $root")
-    val schema = schemaOf(lines)
+      s"${op.toLowerCase} needs manifest-unique data file addresses at $root")
     val version = baseVersion + 1
-    val live = scanAddressed(lines, files)
-    val doomed = doomedOf(live).persist()
+    val matched = matchOf(scanAddressed(lines, files)).persist()
     val dvDir = dataDir.resolve(s"v$version-dv-${UUID.randomUUID()}")
     try {
+      // per-file match counts — ≤ nFiles rows; this job fills the cache
+      val perFile: Map[String, Long] = matched.groupBy("__graft_dv_f").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val tombs = matched.select(col("__graft_dv_f").as(SnapshotTable.DvFileCol),
+        col("__graft_dv_p").as(SnapshotTable.DvPosCol))
       // range-cluster the sidecar by (file, pos): the DSv2 scan loads
       // each file's tombstones executor-side with a file==addr parquet
       // record filter, and clustered row groups let its stats skip
       // every group belonging to other files
-      doomed.select(col("__graft_dv_f").as(SnapshotTable.DvFileCol),
-        col("__graft_dv_p").as(SnapshotTable.DvPosCol))
-        .repartitionByRange(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol))
-        .sortWithinPartitions(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
-        .write.parquet(dvDir.toString)
-      // per-file doomed counts — ≤ nFiles rows, answered from the cache
-      val doomedPerFile: Map[String, Long] = doomed.groupBy("__graft_dv_f").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // file-level deletes: drop files with zero surviving rows
-      // (untouched files keep without a count; a missing count keeps
-      // conservatively)
-      val totalPerFile = livePerFile(lines, files, doomedPerFile.keySet)
-      val keptFiles = files.filter { rel =>
-        val a = dvAddressOf(rel)
-        val d = doomedPerFile.getOrElse(a, 0L)
-        d == 0L || d < totalPerFile.getOrElse(a, Long.MaxValue)
+      def stageSidecar(): Seq[String] = {
+        tombs.repartitionByRange(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol))
+          .sortWithinPartitions(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
+          .write.parquet(dvDir.toString)
+        listParquetRec(dvDir).map(p => rootPath.relativize(p).toString)
       }
-      val keptSet = keptFiles.toSet
-      val keptAddrs = keptFiles.map(dvAddressOf).toSet
-      // INERT sidecar elision: a sidecar whose every addressed file
-      // left the manifest (dead-file drop) tombstones nothing a reader
-      // can still resolve — keeping it would only push metaCount and
-      // the aggregate pushdown off their metadata-only fast paths (a
-      // `#dv=` line with an empty #dvrows ledger is indistinguishable
-      // from counts LOST to an intervening append, which must refuse).
-      // The fresh sidecar is provably inert when all its files died;
-      // carried sidecars are provably inert when the carried #dvrows
-      // ledger (complete-by-invariant whenever present: every
-      // DV-minting writer regenerates the FULL merged map, appends
-      // drop it entirely) addresses only dead files.
-      val newInert = doomedPerFile.nonEmpty &&
-        doomedPerFile.keys.forall(a => !keptAddrs(a))
-      val newDvLines =
-        if (doomedPerFile.isEmpty || newInert) {
-          deleteRecursively(dvDir); Vector.empty[String]
-        } else listParquetRec(dvDir).map(p => s"#dv=${rootPath.relativize(p)}").sorted
-      val priorDvRows = SnapshotTable.dvRowsOf(lines)
-      val priorDvInert = priorDvRows.nonEmpty &&
-        priorDvRows.keys.forall(a => !keptAddrs(a))
-      // MIN/MAX STATS UNDER DVs: on a clustered table the delete
-      // RE-MINTS the touched kept files' #range bounds over their live
-      // remainder — one extra O(touched files) job on data the delete
-      // already addressed — and marks the manifest `#dvminmax`, so
-      // [[metaAgg]] and the SQL aggregate pushdown keep answering
-      // MIN/MAX with zero IO even though a tombstone may have held the
-      // old extreme. Untouched files' commit-time bounds stay exact;
-      // stacked deletes stay exact because each re-mint scans with all
-      // prior DVs applied. Prior DVs WITHOUT the marker (a pre-feature
-      // or SQL-DML commit) forfeit the path — bounds may already be
-      // stale-conservative, so no marker is minted over them.
-      val clusterKeyPhys = lines.drop(2).collectFirst { case ClusterMeta(k) => k }
-      val priorMinMaxEligible = manifestDvFiles(lines).isEmpty ||
-        lines.drop(2).contains(SnapshotTable.DvMinMax)
-      val touchedKept = keptFiles.filter(rel => doomedPerFile.contains(dvAddressOf(rel)))
-      // #sum stats exist only on integral-keyed clustered commits —
-      // re-mint them in the SAME job as the #range bounds
-      val priorSums = lines.drop(2).exists {
-        case SnapshotTable.SumMeta(_, _, _) => true; case _ => false
+      val pre = matched.select(schema.fieldNames.map(col).toSeq :+
+        lit(if (assignments.isDefined) "update_preimage" else "delete")
+          .as(SnapshotTable.ChangeTypeCol): _*)
+      val (postSnap, postRels, cdc) = assignments match {
+        case None => (None, Vector.empty[String], pre)
+        case Some(as) =>
+          // post-images: assignments over the pre-image, schema pinned;
+          // CHECK constraints guard the new values inline
+          val post = guarded(matched.select(schema.fields.map(f =>
+            as.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name))
+              .as(f.name)).toSeq: _*))
+          val (snap, rels) =
+            if (perFile.isEmpty) (None, Vector.empty[String])
+            else {
+              // the carried schema may be column-mapped — post-images
+              // land under the same PHYSICAL names the live files use
+              val (s, parts, _) = writeData(toPhysDf(post, schema), version)
+              (Some(s), parts.toVector)
+            }
+          (snap, rels, pre.unionAll(post.withColumn(SnapshotTable.ChangeTypeCol,
+            lit("update_postimage"))))
       }
-      val remintRows: Array[Row] =
-        if (clusterKeyPhys.isEmpty || !priorMinMaxEligible || touchedKept.isEmpty)
-          Array.empty
-        else {
-          val keyCol = SnapshotTable.logicalNameFor(lines, clusterKeyPhys.get)
-          val enc = statLongExpr(schemaOf(lines)(keyCol).dataType, keyCol)
-          val doomedAddrs = doomed.select(
-            col("__graft_dv_f").as(SnapshotTable.DvFileCol),
-            col("__graft_dv_p").as(SnapshotTable.DvPosCol))
-          scanAddressed(lines, touchedKept)
-            .join(doomedAddrs,
-              col("__graft_dv_f") === col(SnapshotTable.DvFileCol) &&
-                col("__graft_dv_p") === col(SnapshotTable.DvPosCol), "left_anti")
-            .groupBy("__graft_dv_f").agg(min(enc).as("lo"), max(enc).as("hi"),
-              try_sum(enc).as("s"), count(enc).as("nn"))
-            .collect() // ≤ touched files rows — bounded driver metadata
-        }
-      val remint: Map[String, (Long, Long)] = remintRows
-        .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      // all-null-survivors record 0|0 (SUM ignores nulls) — unlike
-      // #range, which drops so pruning stays conservative; a try_sum
-      // overflow (null with nn > 0) mints no line → coverage refusal
-      val remintSums: Map[String, (Long, Long)] = remintRows.flatMap { r =>
-        val nn = r.getLong(4)
-        if (r.isNullAt(3) && nn > 0L) None
-        else Some(r.getString(0) ->
-          (if (r.isNullAt(3)) 0L else r.getLong(3), nn))
-      }.toMap
-      val remintLines = touchedKept.flatMap { rel =>
-        remint.get(dvAddressOf(rel)).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
-      } ++ (if (!priorSums) Vector.empty[String] else touchedKept.flatMap { rel =>
-        remintSums.get(dvAddressOf(rel)).map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
-      })
-      val willHaveDvs = newDvLines.nonEmpty ||
-        (manifestDvFiles(lines).nonEmpty && !priorDvInert)
-      val minMaxMarker =
-        if (clusterKeyPhys.isDefined && priorMinMaxEligible && willHaveDvs)
-          Vector(SnapshotTable.DvMinMax)
-        else Vector.empty[String]
-      // pre-image change feed: the deleted rows, op=delete
-      val cdcRows = doomed.select(
-        schema.fieldNames.map(col).toSeq :+
-          lit("delete").as(SnapshotTable.ChangeTypeCol): _*)
-      val (cdcSnap, cdcLines) = writeCdcData(cdcRows, version)
-      // carry layout meta + prior DV lines; drop stat lines of dead
-      // files. #rows SURVIVES tombstones: the paired #dvrows count
-      // (merged across stacked deletes) keeps `live = rows - dvrows`
-      // answerable from metadata alone
-      val mergedDvRows = (SnapshotTable.dvRowsOf(lines).toSeq ++ doomedPerFile.toSeq)
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-        .filter { case (a, _) => keptAddrs(a) }
-      val remintAttempted =
-        clusterKeyPhys.isDefined && priorMinMaxEligible && touchedKept.nonEmpty
-      val touchedKeptSet = touchedKept.toSet
-      val carriedMeta = lines.drop(2).filter(_.startsWith("#")).filter {
-        case l if l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-          l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-          l.startsWith("#op=") || l == SnapshotTable.CdcTracked ||
-          l == SnapshotTable.DvMinMax => false // re-minted below when valid
-        case SnapshotTable.DvRowsMeta(_, _) => false // regenerated merged
-        case DvMeta(_) => !priorDvInert // inert carried sidecars drop
-        // a touched file's commit-era bounds are STALE after a re-mint
-        // (an extreme may have been tombstoned) — replaced by the fresh
-        // lines, or dropped entirely when only null keys survive
-        case RangeMeta(rel, _, _) =>
-          keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-        // same staleness rule for per-file sums (tombstoned rows would
-        // still be counted) — replaced by the re-minted lines
-        case SnapshotTable.SumMeta(rel, _, _) =>
-          keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-        case SnapshotTable.FileStat(rel) => keptSet(rel)
-        case _ => true
+      commitTombstones(lines, version, op, perFile, tombs, stageSidecar(),
+        postRels, None, cdc, dvDir +: postSnap.toSeq)
+    } finally matched.unpersist()
+  }
+
+  /** The one DV tombstone commit behind [[delete]], [[deleteKeys]],
+    * [[update]] and the SQL row-level DML ([[commitDelta]]): publishes
+    * `version` over the base manifest `lines` with fresh tombstones
+    * and freshly staged data files. Its rules:
+    *
+    *  - DEAD FILES: a file whose live rows are all tombstoned leaves
+    *    the manifest with its stat lines ([[livePerFile]] — metadata
+    *    whenever the `#rows` counts are trusted);
+    *  - INERT SIDECARS: a sidecar whose every addressed file left the
+    *    manifest tombstones nothing a reader can still resolve —
+    *    keeping it would only push metaCount and the aggregate
+    *    pushdown off their metadata-only fast paths (a `#dv=` line
+    *    with an empty #dvrows ledger is indistinguishable from counts
+    *    LOST to an intervening append, which must refuse). The fresh
+    *    sidecar is staged only when some kept file is addressed;
+    *    carried sidecars are inert when the carried #dvrows ledger
+    *    (complete-by-invariant whenever present: every DV-minting
+    *    writer regenerates the FULL merged map, appends drop it
+    *    entirely) addresses only dead files;
+    *  - `#rows` SURVIVES tombstones: the merged `#dvrows` counts keep
+    *    `live = rows - dvrows` answerable from metadata alone;
+    *  - ZERO-IO STATS THROUGH DML: on a clustered table whose bounds
+    *    are still exact (no prior DVs, or the `#dvminmax` marker), the
+    *    touched kept files' `#range`/`#sum` RE-MINT over their live
+    *    remainder — one O(touched files) job on data the statement
+    *    already addressed, excluding `tombs` — and the staged data
+    *    files mint write-time stats ([[mintStagedStats]]), so the
+    *    marker and the full `#cluster=` claim survive and
+    *    COUNT/MIN/MAX/SUM keep answering with zero data IO. Stacked
+    *    deletes stay exact because each re-mint scans with all prior
+    *    DVs applied. Prior DVs WITHOUT the marker (a pre-feature
+    *    commit) forfeit the path: bounds may already be
+    *    stale-conservative, so no marker is minted over them, touched
+    *    `#range` lines stay (pruning-safe), touched `#sum` lines —
+    *    falsified by the tombstones — drop, and a claim over staged
+    *    stat-less files weakens to `#clusterpart` (a full claim would
+    *    answer MIN/MAX silently wrong);
+    *  - `#buckets=` drops when data files join: they are not
+    *    bucket-addressed, so the next mergeBucketed refuses loudly
+    *    instead of mis-routing.
+    *
+    * `perFile` counts the fresh tombstones per file address and
+    * `tombs` is their (file, pos) address frame; `sidecar` stages
+    * them and yields the sidecar files (root-relative) — evaluated
+    * only when the sidecar is not inert. `dataRels` are the staged
+    * data files, `stagedRows` their writers' row counts when known,
+    * `cdc` the commit's change rows. `staged` dirs are removed when
+    * the publish loses its race; SQL DML publishes its file list
+    * sorted (`sortFiles`). */
+  private def commitTombstones(lines: Vector[String], version: Long, op: String,
+      perFile: Map[String, Long], tombs: => DataFrame, sidecar: => Seq[String],
+      dataRels: Seq[String], stagedRows: Option[Map[String, Long]],
+      cdc: DataFrame, staged: Seq[Path], sortFiles: Boolean = false): Long = {
+    val files = manifestFiles(lines)
+    val schema = schemaOf(lines)
+    // untouched files keep without a count; a missing count keeps
+    // conservatively
+    val totalPerFile = livePerFile(lines, files, perFile.keySet)
+    val keptFiles = files.filter { rel =>
+      val a = dvAddressOf(rel)
+      val d = perFile.getOrElse(a, 0L)
+      d == 0L || d < totalPerFile.getOrElse(a, Long.MaxValue)
+    }
+    val keptSet = keptFiles.toSet
+    val keptAddrs = keptFiles.map(dvAddressOf).toSet
+    val newDvLines =
+      if (!perFile.keys.exists(keptAddrs)) Vector.empty[String]
+      else sidecar.map(rel => s"#dv=$rel").toVector.sorted
+    val priorDvRows = SnapshotTable.dvRowsOf(lines)
+    val priorDvInert = priorDvRows.nonEmpty &&
+      priorDvRows.keys.forall(a => !keptAddrs(a))
+    val mergedDvRows = (priorDvRows.toSeq ++ perFile.toSeq)
+      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+      .filter { case (a, _) => keptAddrs(a) }
+    val clusterKeyPhys = lines.drop(2).collectFirst { case ClusterMeta(k) => k }
+    val statsAlive = clusterKeyPhys.isDefined && (manifestDvFiles(lines).isEmpty ||
+      lines.drop(2).contains(SnapshotTable.DvMinMax))
+    val touchedKept = keptFiles.filter(rel => perFile.contains(dvAddressOf(rel)))
+    val touchedKeptSet = touchedKept.toSet
+    val remintAttempted = statsAlive && touchedKept.nonEmpty
+    // #sum stats exist only on integral-keyed clustered commits —
+    // re-mint them in the SAME job as the #range bounds
+    val priorSums = lines.drop(2).exists {
+      case SnapshotTable.SumMeta(_, _, _) => true; case _ => false
+    }
+    val remintRows: Array[Row] =
+      if (!remintAttempted) Array.empty
+      else {
+        val keyCol = SnapshotTable.logicalNameFor(lines, clusterKeyPhys.get)
+        val enc = statLongExpr(schema(keyCol).dataType, keyCol)
+        scanAddressed(lines, touchedKept)
+          .join(tombs,
+            col("__graft_dv_f") === col(SnapshotTable.DvFileCol) &&
+              col("__graft_dv_p") === col(SnapshotTable.DvPosCol), "left_anti")
+          .groupBy("__graft_dv_f").agg(min(enc).as("lo"), max(enc).as("hi"),
+            try_sum(enc).as("s"), count(enc).as("nn"))
+          .collect() // ≤ touched files rows — bounded driver metadata
       }
-      val tmp = writeTmpManifest(version, schema,
-        (SnapshotTable.CdcTracked +: (minMaxMarker ++ carriedMeta ++ remintLines ++
-          SnapshotTable.dvRowsLines(mergedDvRows) ++ cdcLines ++ newDvLines)) ++
-          keptFiles,
-        op = "DELETE")
-      try publish(version, tmp)
-      catch { case e: CommitConflictException =>
-        deleteRecursively(dvDir); deleteRecursively(cdcSnap); throw e
+    val remint: Map[String, (Long, Long)] = remintRows
+      .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // all-null-survivors record 0|0 (SUM ignores nulls) — unlike
+    // #range, which drops so pruning stays conservative; a try_sum
+    // overflow (null with nn > 0) mints no line → coverage refusal
+    val remintSums: Map[String, (Long, Long)] = remintRows.flatMap { r =>
+      val nn = r.getLong(4)
+      if (r.isNullAt(3) && nn > 0L) None
+      else Some(r.getString(0) ->
+        (if (r.isNullAt(3)) 0L else r.getLong(3), nn))
+    }.toMap
+    val remintLines = touchedKept.flatMap { rel =>
+      remint.get(dvAddressOf(rel)).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
+    } ++ (if (!priorSums) Vector.empty[String] else touchedKept.flatMap { rel =>
+      remintSums.get(dvAddressOf(rel)).map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
+    })
+    // write-time stats for the staged data files — the second half of
+    // the coverage claim (their counts ride the same pass)
+    val stagedStats: Option[(Seq[String], Seq[String], Seq[String])] =
+      if (!statsAlive) None
+      else clusterKeyPhys.map { k =>
+        mintStagedStats(dataRels, k,
+          schema(SnapshotTable.logicalNameFor(lines, k)).dataType)
       }
-      version
-    } finally doomed.unpersist()
+    val willHaveDvs = newDvLines.nonEmpty ||
+      (manifestDvFiles(lines).nonEmpty && !priorDvInert)
+    val minMaxMarker =
+      if (statsAlive && willHaveDvs) Vector(SnapshotTable.DvMinMax)
+      else Vector.empty[String]
+    val carriedMeta = lines.drop(2).filter(_.startsWith("#")).filter {
+      case l if SnapshotTable.isPerCommitLine(l) ||
+        l == SnapshotTable.DvMinMax => false // re-minted above when valid
+      case SnapshotTable.DvRowsMeta(_, _) => false // regenerated merged
+      case DvMeta(_) => !priorDvInert // inert carried sidecars drop
+      case BucketMeta(_, _) => dataRels.isEmpty
+      // a touched file's commit-era bounds are STALE after a re-mint
+      // (an extreme may have been tombstoned) — replaced by the fresh
+      // lines, or dropped entirely when only null keys survive
+      case RangeMeta(rel, _, _) =>
+        keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
+      case SnapshotTable.SumMeta(rel, _, _) =>
+        keptSet(rel) && !touchedKeptSet(rel)
+      case SnapshotTable.FileStat(rel) => keptSet(rel)
+      case _ => true
+    }.map {
+      case ClusterMeta(k) if !statsAlive && dataRels.nonEmpty => s"#clusterpart=$k"
+      case l => l
+    }
+    val (cdcSnap, cdcLines) = writeCdcData(cdc, version)
+    // rows: the cluster-claim mint already counted them; otherwise the
+    // writers' commit messages carry per-file counts (zero extra IO);
+    // a footer pass is the last resort
+    val messageRowsLines: Option[Seq[String]] =
+      stagedRows.filter(m => dataRels.forall(m.contains))
+        .map(m => dataRels.map(rel => s"#rows=$rel|${m(rel)}"))
+    val stagedRowsLines = stagedStats.map(_._3)
+      .orElse(messageRowsLines).getOrElse(footerRowsLines(dataRels))
+    val stagedStatLines = stagedStats.map(m => m._1 ++ m._2).getOrElse(Seq.empty)
+    val allFiles = keptFiles ++ dataRels
+    val tmp = writeTmpManifest(version, schema,
+      (SnapshotTable.CdcTracked +: (minMaxMarker ++ carriedMeta ++ remintLines ++
+        stagedStatLines ++ stagedRowsLines ++ SnapshotTable.dvRowsLines(mergedDvRows) ++
+        cdcLines ++ newDvLines)) ++ (if (sortFiles) allFiles.sorted else allFiles),
+      op = op)
+    try publish(version, tmp)
+    catch { case e: CommitConflictException =>
+      (staged :+ cdcSnap).foreach(deleteRecursively); throw e
+    }
+    version
   }
 
   /** Row-level UPDATE via DELETION VECTORS: rows matching `cond` are
     * tombstoned at their current address (no data file rewritten —
     * the same DV mechanics as [[delete]]) and their UPDATED images
-    * are appended as fresh data files, all in ONE atomic commit.
+    * are appended as fresh data files, all in ONE atomic commit
+    * through the shared [[commitTombstones]].
     * Cost is O(matching rows), not O(table): the copy-on-write
     * granularity is the row, not the file (Delta's DV-backed UPDATE).
     * `assignments` maps column name → replacement expression
@@ -471,190 +546,8 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * metadata drops, like [[delete]]. */
   def update(cond: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val baseVersion = currentVersion
-    require(baseVersion > 0, s"table at $root has no committed version")
     require(assignments.nonEmpty, "update needs at least one assignment")
-    val lines = manifestLines(baseVersion)
-    val files = manifestFiles(lines)
-    if (files.isEmpty) return baseVersion
-    val schema = schemaOf(lines)
-    assignments.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"update assigns unknown column $k at $root"))
-    val addrs = files.map(dvAddressOf)
-    require(addrs.distinct.size == addrs.size,
-      s"update needs manifest-unique data file addresses at $root")
-    val version = baseVersion + 1
-    val live = scanAddressed(lines, files)
-    val matched = live.filter(cond).persist()
-    val dvDir = dataDir.resolve(s"v$version-dv-${UUID.randomUUID()}")
-    try {
-      // range-clustered like delete()'s sidecar — see the note there
-      matched.select(col("__graft_dv_f").as(SnapshotTable.DvFileCol),
-        col("__graft_dv_p").as(SnapshotTable.DvPosCol))
-        .repartitionByRange(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol))
-        .sortWithinPartitions(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
-        .write.parquet(dvDir.toString)
-      val matchedPerFile: Map[String, Long] = matched.groupBy("__graft_dv_f").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val totalPerFile = livePerFile(lines, files, matchedPerFile.keySet)
-      val keptFiles = files.filter { rel =>
-        val a = dvAddressOf(rel)
-        val d = matchedPerFile.getOrElse(a, 0L)
-        d == 0L || d < totalPerFile.getOrElse(a, Long.MaxValue)
-      }
-      val keptSet = keptFiles.toSet
-      // inert sidecar elision — same reasoning as [[delete]]: sidecars
-      // addressing only dead (dropped) files carry nothing a reader
-      // resolves, and keeping them would break the metadata-only
-      // COUNT(*) contract (#dv present, #dvrows empty)
-      val updKeptAddrs = keptFiles.map(dvAddressOf).toSet
-      val newInert = matchedPerFile.nonEmpty &&
-        matchedPerFile.keys.forall(a => !updKeptAddrs(a))
-      val newDvLines =
-        if (matchedPerFile.isEmpty || newInert) {
-          deleteRecursively(dvDir); Vector.empty[String]
-        } else listParquetRec(dvDir).map(p => s"#dv=${rootPath.relativize(p)}").sorted
-      val priorDvRows = SnapshotTable.dvRowsOf(lines)
-      val priorDvInert = priorDvRows.nonEmpty &&
-        priorDvRows.keys.forall(a => !updKeptAddrs(a))
-      // post-images: assignments over the pre-image, schema pinned;
-      // CHECK constraints guard the new values inline
-      val post = guarded(matched.select(schema.fields.map(f =>
-        assignments.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name))
-          .as(f.name)).toSeq: _*))
-      val (postSnap, newFiles) =
-        if (matchedPerFile.isEmpty) (None, Vector.empty[String])
-        else {
-          // the carried schema may be column-mapped — post-images land
-          // under the same PHYSICAL names the live files use
-          val (snap, parts, _) = writeData(toPhysDf(post, schema), version)
-          (Some(snap), parts.toVector)
-        }
-      val cdcRows = matched.select(
-        schema.fieldNames.map(col).toSeq :+
-          lit("update_preimage").as(SnapshotTable.ChangeTypeCol): _*)
-        .unionAll(post.withColumn(SnapshotTable.ChangeTypeCol,
-          lit("update_postimage")))
-      val (cdcSnap, cdcLines) = writeCdcData(cdcRows, version)
-      val keptAddrs = keptFiles.map(dvAddressOf).toSet
-      val mergedDvRows = (SnapshotTable.dvRowsOf(lines).toSeq ++ matchedPerFile.toSeq)
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-        .filter { case (a, _) => keptAddrs(a) }
-      // ZERO-IO STATS THROUGH UPDATES (mirrors [[delete]]'s re-mint):
-      // on a clustered table whose bounds are still exact, the update
-      // (a) RE-MINTS the touched kept files' #range/#sum over their
-      // live remainder — one O(touched files) job on data the update
-      // already addressed — and (b) mints write-time stats for its
-      // post-image files ([[mintStagedStats]]), so per-file coverage
-      // survives and the #dvminmax claim is re-minted instead of
-      // forfeited: COUNT/MIN/MAX/SUM keep answering with zero data IO
-      // straight through row-level updates. A prior marker-less DV
-      // history keeps the forfeit (bounds may already be stale): the
-      // claim weakens to #clusterpart and the marker stays dead.
-      val clusterKeyPhys = lines.drop(2).collectFirst { case ClusterMeta(k) => k }
-      val priorMinMaxEligible = manifestDvFiles(lines).isEmpty ||
-        lines.drop(2).contains(SnapshotTable.DvMinMax)
-      val statsAlive = clusterKeyPhys.isDefined && priorMinMaxEligible
-      val touchedKept = keptFiles.filter(rel => matchedPerFile.contains(dvAddressOf(rel)))
-      val priorSums = lines.drop(2).exists {
-        case SnapshotTable.SumMeta(_, _, _) => true; case _ => false
-      }
-      val remintRows: Array[Row] =
-        if (!statsAlive || touchedKept.isEmpty) Array.empty
-        else {
-          val keyCol = SnapshotTable.logicalNameFor(lines, clusterKeyPhys.get)
-          val enc = statLongExpr(schemaOf(lines)(keyCol).dataType, keyCol)
-          val matchedAddrs = matched.select(
-            col("__graft_dv_f").as(SnapshotTable.DvFileCol),
-            col("__graft_dv_p").as(SnapshotTable.DvPosCol))
-          scanAddressed(lines, touchedKept)
-            .join(matchedAddrs,
-              col("__graft_dv_f") === col(SnapshotTable.DvFileCol) &&
-                col("__graft_dv_p") === col(SnapshotTable.DvPosCol), "left_anti")
-            .groupBy("__graft_dv_f").agg(min(enc).as("lo"), max(enc).as("hi"),
-              try_sum(enc).as("s"), count(enc).as("nn"))
-            .collect() // ≤ touched files rows — bounded driver metadata
-        }
-      val remint: Map[String, (Long, Long)] = remintRows
-        .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val remintSums: Map[String, (Long, Long)] = remintRows.flatMap { r =>
-        val nn = r.getLong(4)
-        if (r.isNullAt(3) && nn > 0L) None
-        else Some(r.getString(0) ->
-          (if (r.isNullAt(3)) 0L else r.getLong(3), nn))
-      }.toMap
-      val remintLines = touchedKept.flatMap { rel =>
-        remint.get(dvAddressOf(rel)).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
-      } ++ (if (!priorSums) Vector.empty[String] else touchedKept.flatMap { rel =>
-        remintSums.get(dvAddressOf(rel)).map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
-      })
-      // write-time stats for the post-image files — the second half
-      // of the coverage claim (their counts ride the same pass)
-      val postStats: Option[(Seq[String], Seq[String], Seq[String])] =
-        if (!statsAlive) None
-        else clusterKeyPhys.map { k =>
-          mintStagedStats(newFiles, k,
-            schemaOf(lines)(SnapshotTable.logicalNameFor(lines, k)).dataType)
-        }
-      val remintAttempted = statsAlive && touchedKept.nonEmpty
-      val touchedKeptSet = touchedKept.toSet
-      val willHaveDvs = newDvLines.nonEmpty ||
-        (manifestDvFiles(lines).nonEmpty && !priorDvInert)
-      val minMaxMarker =
-        if (statsAlive && willHaveDvs) Vector(SnapshotTable.DvMinMax)
-        else Vector.empty[String]
-      // the cluster claim: FULL when coverage survives (stats minted
-      // for post-images, touched bounds re-minted), weakened to
-      // #clusterpart otherwise — a full claim carried over stat-less
-      // post-image files would answer MIN/MAX silently wrong
-      val claimLine = lines.drop(2).collectFirst {
-        case l @ ClusterMeta(_) if statsAlive => l
-        case ClusterMeta(k) => s"#clusterpart=$k"
-        case SnapshotTable.ClusterPartMeta(k) => s"#clusterpart=$k"
-      }
-      val carriedMeta = lines.drop(2).filter(_.startsWith("#")).filter {
-        case l if l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-          l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-          l.startsWith("#op=") || l == SnapshotTable.CdcTracked => false
-        case SnapshotTable.DvRowsMeta(_, _) => false // regenerated merged
-        case DvMeta(_) => !priorDvInert // inert carried sidecars drop
-        case l if l == SnapshotTable.DvMinMax => false // re-minted above when alive
-        case ClusterMeta(_) => false // re-emitted full or weakened above
-        case SnapshotTable.ClusterPartMeta(_) => false
-        // post-image files are not bucket-addressed, so a carried
-        // bucket spec would lie to the next mergeBucketed — drop it
-        // (the merge then refuses loudly instead of mis-routing)
-        case l if l.startsWith("#buckets=") => false
-        // a touched file's key sum is falsified by its tombstones —
-        // replaced by the re-minted line when stats are alive,
-        // dropped otherwise
-        case SnapshotTable.SumMeta(rel, _, _) =>
-          keptSet(rel) && !touchedKeptSet(rel)
-        // touched bounds: replaced by the fresh re-mint when
-        // attempted; stale-conservative (pruning-safe) otherwise
-        case RangeMeta(rel, _, _) =>
-          keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-        // #rows survives (paired with #dvrows), and the post-image
-        // files mint their own counts below — live = Σrows − Σdvrows
-        // stays exact, so metaCount answers straight through updates
-        case SnapshotTable.FileStat(rel) => keptSet(rel)
-        case _ => true
-      }
-      val postRowsLines = postStats.map(_._3).getOrElse(footerRowsLines(newFiles))
-      val postStatLines = postStats.map(m => m._1 ++ m._2).getOrElse(Seq.empty)
-      val tmp = writeTmpManifest(version, schema,
-        (SnapshotTable.CdcTracked +: (minMaxMarker ++ claimLine.toVector ++
-          carriedMeta ++ remintLines ++ postStatLines ++ postRowsLines ++
-          SnapshotTable.dvRowsLines(mergedDvRows) ++ cdcLines ++ newDvLines)) ++
-          (keptFiles ++ newFiles), op = "UPDATE")
-      try publish(version, tmp)
-      catch { case e: CommitConflictException =>
-        deleteRecursively(dvDir); postSnap.foreach(deleteRecursively)
-        deleteRecursively(cdcSnap); throw e
-      }
-      version
-    } finally matched.unpersist()
+    tombstoneMatching(_.filter(cond), Some(assignments))
   }
 
   /** Read the latest committed version. */
@@ -970,11 +863,9 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     * asks the caller to re-run the statement (Delta's serializable
     * write-conflict behavior).
     *
-    * Carried-meta rules mirror [[delete]]/[[update]]: `#rows=` counts
-    * die with new tombstones (metaAgg must never sum falsified
-    * counts); `#buckets=` dies when foreign (unbucketed) data files
-    * join the layout; range/string/z-order stat lines stay — they
-    * remain CONSERVATIVE for pruning.
+    * The manifest itself is the one DV tombstone commit the instance
+    * verbs share ([[commitTombstones]]: dead files, inert sidecars,
+    * stat re-mints, `#buckets=` and cluster-claim rules).
     *
     * CDC PARITY: the delta protocol hands the writer addresses, not
     * pre-images — so the commit MINTS the row-level changelog itself,
@@ -1002,7 +893,6 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       if (!unchanged) throw new CommitConflictException(cur + 1)
     }
     val dataRels = insRels ++ updRels
-    val version = cur + 1
     val schema = schemaOf(lines)
     // CHECK constraints on the SQL row-level DML path: MERGE inserts
     // and UPDATE post-images were staged by the delta writers under
@@ -1011,149 +901,16 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     // on throw)
     validateStagedConstraints(dataRels, schema)
     // per-file tombstone counts from the freshly staged sidecars (one
-    // tiny driver job), merged with carried counts — keeps COUNT(*)
-    // metadata-only and drives the dead-file check below
+    // tiny driver job)
     val newPerFile: Map[String, Long] =
       if (dvRels.isEmpty) Map.empty
-      else spark.read.schema(SnapshotTable.DvSchema)
-        .parquet(dvRels.map(rel => rootPath.resolve(rel).toString): _*)
-        .groupBy(SnapshotTable.DvFileCol).count()
+      else dvScan(dvRels).groupBy(SnapshotTable.DvFileCol).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val mergedDvRows = (SnapshotTable.dvRowsOf(lines).toSeq ++ newPerFile.toSeq)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    // metadata dead-file detection, same rule as delete(): a file
-    // whose known #rows are all tombstoned leaves the manifest (its
-    // DV entries go inert — the address no longer resolves)
-    val rowsByAddr: Map[String, Long] = lines.drop(2).collect {
-      case RowsMeta(rel, n) => dvAddressOf(rel) -> n.toLong
-    }.toMap
-    val deadAddrs: Set[String] = mergedDvRows.collect {
-      case (a, d) if rowsByAddr.get(a).exists(d >= _) => a
-    }.toSet
-    val keptRels = manifestFiles(lines).filterNot(rel => deadAddrs(dvAddressOf(rel)))
-    val keptSet = keptRels.toSet
-    val keptDvRows = mergedDvRows.filter { case (a, _) => !deadAddrs(a) }
-    // inert sidecar elision — same reasoning as [[delete]]: a sidecar
-    // whose every addressed file just left the manifest resolves
-    // nothing; dropping it keeps the #dv ⇒ #dvrows-nonEmpty invariant
-    // that metaCount and the aggregate pushdown rely on
-    val newDvInert = newPerFile.nonEmpty && newPerFile.keys.forall(deadAddrs)
-    val priorDvRows = SnapshotTable.dvRowsOf(lines)
-    val priorDvInert = priorDvRows.nonEmpty && priorDvRows.keys.forall(deadAddrs)
-    val newDvLines =
-      if (newDvInert) Vector.empty[String] else dvRels.map(r => s"#dv=$r").sorted
-    // ZERO-IO STATS THROUGH SQL DML (the same re-mint [[delete]] and
-    // [[update]] run): on a clustered table whose bounds are still
-    // exact, the commit re-mints the TOUCHED kept files' #range/#sum
-    // over their live remainder — the new tombstones ride the staged
-    // sidecars, so the exclusion join reads them back — and mints
-    // write-time stats for the staged insert/post-image parts, so
-    // MERGE/UPDATE/DELETE FROM keep the metadata fast path alive
-    // instead of forfeiting it. This also closes a sharper hole: the
-    // full #cluster claim used to be carried over stat-less MERGE
-    // inserts, which would have answered MIN/MAX from the OLD files'
-    // ranges only — now the claim is full only with full coverage,
-    // weakened to #clusterpart otherwise.
-    val clusterKeyPhys = lines.drop(2).collectFirst { case ClusterMeta(k) => k }
-    val priorMinMaxEligible = manifestDvFiles(lines).isEmpty ||
-      lines.drop(2).contains(SnapshotTable.DvMinMax)
-    val statsAlive = clusterKeyPhys.isDefined && priorMinMaxEligible
-    val touchedKept = keptRels.filter(rel => newPerFile.contains(dvAddressOf(rel)))
-    val priorSums = lines.drop(2).exists {
-      case SnapshotTable.SumMeta(_, _, _) => true; case _ => false
-    }
-    val remintRows: Array[Row] =
-      if (!statsAlive || touchedKept.isEmpty) Array.empty
-      else {
-        val keyCol = SnapshotTable.logicalNameFor(lines, clusterKeyPhys.get)
-        val enc = statLongExpr(schemaOf(lines)(keyCol).dataType, keyCol)
-        val newAddrs = spark.read.schema(SnapshotTable.DvSchema)
-          .parquet(dvRels.map(rel => rootPath.resolve(rel).toString): _*)
-        scanAddressed(lines, touchedKept)
-          .join(newAddrs,
-            col("__graft_dv_f") === col(SnapshotTable.DvFileCol) &&
-              col("__graft_dv_p") === col(SnapshotTable.DvPosCol), "left_anti")
-          .groupBy("__graft_dv_f").agg(min(enc).as("lo"), max(enc).as("hi"),
-            try_sum(enc).as("s"), count(enc).as("nn"))
-          .collect() // ≤ touched files rows — bounded driver metadata
-      }
-    val remint: Map[String, (Long, Long)] = remintRows
-      .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val remintSums: Map[String, (Long, Long)] = remintRows.flatMap { r =>
-      val nn = r.getLong(4)
-      if (r.isNullAt(3) && nn > 0L) None
-      else Some(r.getString(0) ->
-        (if (r.isNullAt(3)) 0L else r.getLong(3), nn))
-    }.toMap
-    val remintLines = touchedKept.flatMap { rel =>
-      remint.get(dvAddressOf(rel)).map { case (lo, hi) => s"#range=$rel|$lo|$hi" }
-    } ++ (if (!priorSums) Vector.empty[String] else touchedKept.flatMap { rel =>
-      remintSums.get(dvAddressOf(rel)).map { case (sm, nn) => s"#sum=$rel|$sm|$nn" }
-    })
-    val stagedStats: Option[(Seq[String], Seq[String], Seq[String])] =
-      if (!statsAlive) None
-      else clusterKeyPhys.map { k =>
-        mintStagedStats(dataRels, k,
-          schemaOf(lines)(SnapshotTable.logicalNameFor(lines, k)).dataType)
-      }
-    val remintAttempted = statsAlive && touchedKept.nonEmpty
-    val touchedKeptSet = touchedKept.toSet
-    val willHaveDvs = newDvLines.nonEmpty ||
-      (manifestDvFiles(lines).nonEmpty && !priorDvInert)
-    val minMaxMarker =
-      if (statsAlive && willHaveDvs) Vector(SnapshotTable.DvMinMax)
-      else Vector.empty[String]
-    val claimLine = lines.drop(2).collectFirst {
-      case l @ ClusterMeta(_) if statsAlive => l
-      case ClusterMeta(k) => s"#clusterpart=$k"
-      case SnapshotTable.ClusterPartMeta(k) => s"#clusterpart=$k"
-    }
-    val carriedMeta = lines.drop(2).filter(_.startsWith("#")).filter {
-      case l if l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked => false
-      case SnapshotTable.DvRowsMeta(_, _) => false // regenerated merged
-      case DvMeta(_) => !priorDvInert // inert carried sidecars drop
-      case l if l == SnapshotTable.DvMinMax => false // re-minted above when alive
-      case ClusterMeta(_) => false // re-emitted full or weakened above
-      case SnapshotTable.ClusterPartMeta(_) => false
-      // a touched file's key sum is falsified by its tombstones —
-      // replaced by the re-minted line when stats are alive, dropped
-      // otherwise
-      case SnapshotTable.SumMeta(rel, _, _) =>
-        keptSet(rel) && !touchedKeptSet(rel)
-      case BucketMeta(_, _) => dataRels.isEmpty
-      // touched bounds: replaced by the fresh re-mint when attempted;
-      // stale-conservative (pruning-safe) otherwise
-      case RangeMeta(rel, _, _) =>
-        keptSet(rel) && !(remintAttempted && touchedKeptSet(rel))
-      case SnapshotTable.FileStat(rel) => keptSet(rel)
-      case _ => true
-    }
-    val (cdcSnap, cdcLines) = writeCdcData(deltaCdc(baseLines, dvRels,
-      insRels, updRels, schema), version)
-    // rows: the cluster-claim mint already counted them; otherwise
-    // the delta writers' commit messages carry per-file counts (zero
-    // extra IO); a footer pass is the last resort
-    val messageRowsLines: Option[Seq[String]] =
-      stagedRows.filter(m => dataRels.forall(m.contains))
-        .map(m => dataRels.map(rel => s"#rows=$rel|${m(rel)}"))
-    val stagedRowsLines = stagedStats.map(_._3)
-      .orElse(messageRowsLines).getOrElse(footerRowsLines(dataRels))
-    val stagedStatLines = stagedStats.map(m => m._1 ++ m._2).getOrElse(Seq.empty)
-    val tmp = writeTmpManifest(version, schema,
-      (SnapshotTable.CdcTracked +: cdcLines) ++ minMaxMarker ++
-        claimLine.toVector ++ carriedMeta ++ remintLines ++
-        stagedStatLines ++ stagedRowsLines ++
-        SnapshotTable.dvRowsLines(keptDvRows) ++ newDvLines ++
-        (keptRels ++ dataRels).sorted,
-      op = op)
-    try publish(version, tmp)
-    catch { case e: CommitConflictException =>
-      deleteRecursively(cdcSnap); throw e
-    }
-    version
+    // the caller removes the staged parts if the commit throws; an
+    // inert staged sidecar is left for vacuum
+    commitTombstones(lines, cur + 1, op, newPerFile, dvScan(dvRels), dvRels,
+      dataRels, stagedRows, deltaCdc(baseLines, dvRels, insRels, updRels, schema),
+      staged = Seq.empty, sortFiles = true)
   }
 
   /** The SQL-DML change set as Delta-CDF-style rows: `insert` rows
@@ -1375,10 +1132,8 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     val violations = read(cur).filter(!constraintPass(exprSql)).limit(1).count()
     require(violations == 0L,
       s"cannot add CHECK constraint $name ($exprSql): existing rows violate it at $root")
-    val body = (SnapshotTable.CdcTracked +: lines.drop(2).filterNot(l =>
-      l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked)) :+
+    val body = (SnapshotTable.CdcTracked +:
+      lines.drop(2).filterNot(SnapshotTable.isPerCommitLine)) :+
       s"#constraint=$name|$exprSql"
     val version = cur + 1
     publish(version, writeTmpManifest(version, schemaOf(lines), body, op = "ALTER"))
@@ -1419,9 +1174,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
       s"no constraint '$name' at $root")
     val body = SnapshotTable.CdcTracked +: lines.drop(2).filterNot {
       case SnapshotTable.ConstraintMeta(n, _) if n == name => true
-      case l => l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked
+      case l => SnapshotTable.isPerCommitLine(l)
     }
     val version = cur + 1
     publish(version, writeTmpManifest(version, schemaOf(lines), body,
@@ -2778,9 +2531,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
           schemaOf(lines)(SnapshotTable.logicalNameFor(lines, k)).dataType)
       }
     val carriedMeta = lines.drop(2).filter(_.startsWith("#")).filter {
-      case l if l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked => false
+      case l if SnapshotTable.isPerCommitLine(l) => false
       case SnapshotTable.DvRowsMeta(_, _) => false // regenerated filtered
       case DvMeta(_) => false // re-added above (or elided)
       // the marker's every-#range-re-minted claim only covers files
@@ -2844,10 +2595,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
         listParquetRec(dvDir).map(p => s"#dv=${rootPath.relativize(p)}").sorted
       }
     val carried = lines.drop(2).filter(_.startsWith("#")).filterNot(l =>
-      l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked ||
-        DvMeta.matches(l))
+      SnapshotTable.isPerCommitLine(l) || DvMeta.matches(l))
     val tmp = writeTmpManifest(version, schemaOf(lines),
       (SnapshotTable.CdcTracked +: (carried ++ newDvLines)) ++ manifestFiles(lines),
       op = "COMPACTDV")
@@ -3041,9 +2789,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     // pass through) exactly like addConstraint/dropConstraint
     val kept = lines.drop(2).filterNot {
       case SnapshotTable.ConstraintMeta(n, _) if dropped(n) => true
-      case l => l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked
+      case l => SnapshotTable.isPerCommitLine(l)
     }
     val tracked: Seq[String] =
       if (ops.isEmpty) Seq(SnapshotTable.CdcTracked) else Seq.empty
@@ -3073,10 +2819,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     require(toVersion >= 1 && toVersion <= cur,
       s"restore: no committed v$toVersion at $root")
     val lines = manifestLines(toVersion)
-    val body = lines.drop(2).filterNot(l =>
-      l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked)
+    val body = lines.drop(2).filterNot(SnapshotTable.isPerCommitLine)
     val version = cur + 1
     // carryConstraints=false: a restore REVERTS table metadata too —
     // the restored version's own `#constraint=` lines (already in
@@ -3105,9 +2848,7 @@ final class SnapshotTable(private[graft] val spark: SparkSession, val root: Stri
     val lines = manifestLines(v)
     def abs(rel: String): String = rootPath.resolve(rel).toString
     val body = lines.drop(2).flatMap {
-      case l if l.startsWith("#batchId=") || l.startsWith("#writer=") ||
-        l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
-        l.startsWith("#op=") || l == SnapshotTable.CdcTracked => None
+      case l if SnapshotTable.isPerCommitLine(l) => None
       case DvMeta(rel) => Some(s"#dv=${abs(rel)}")
       case BloomFMeta(rel, bloomRel) =>
         Some(s"#bloomf=${abs(rel)}|${abs(bloomRel)}")
@@ -3321,8 +3062,8 @@ object SnapshotTable {
   /** Manifest marker: every `#range=` bound is EXACT over the live
     * (DV-filtered) rows — DV deletes on clustered tables re-mint
     * touched files' bounds, so MIN/MAX stays metadata-answerable
-    * under tombstones. Dropped by any DV-adding writer that does not
-    * re-mint (SQL DML, update's stat-less post-image files). */
+    * under tombstones. Never minted over prior DVs that lack it (a
+    * pre-feature commit): their bounds may already be stale. */
   private[tables] val DvMinMax: String = "#dvminmax"
 
   /** Column tagging a quarantined row with the name of the first
@@ -3408,6 +3149,15 @@ object SnapshotTable {
         if (bar < 0) None else Some(l.substring(k.length, bar))
       }
   }
+
+  /** Lines that describe ONE commit, not the table: its `#op=` head,
+    * its write ledger (`#batchId=`, `#writer=`), its `#quarantine=`
+    * and its change feed (`#cdc=`, [[CdcTracked]]). A writer that
+    * carries a prior manifest forward drops them and mints its own. */
+  private[tables] def isPerCommitLine(l: String): Boolean =
+    l.startsWith("#batchId=") || l.startsWith("#writer=") ||
+      l.startsWith("#cdc=") || l.startsWith("#quarantine=") ||
+      l.startsWith("#op=") || l == CdcTracked
 
   /** Files among `files` whose `#rangen=` hyper-rectangle meets `box`
     * (per-dimension closed [lo, hi] in committed key order, None =

@@ -139,6 +139,30 @@ class DvMaintenanceSpec extends SparkSpec {
     } finally SnapshotTable.drop(t)
   }
 
+  test("a DV delete that cannot re-mint drops the touched files' #sum lines") {
+    val t = SnapshotTable.temp(spark, "graft_dvmaint_sum_stale_")
+    try {
+      t.commitClustered((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"), "k", 4)
+      // a manifest whose claim is the weakened #clusterpart but whose
+      // files still carry their #sum lines (what an append that lost
+      // its write-time mint leaves behind): the delete re-mints nothing
+      val v1 = lines(t, 1L)
+      val weakened = v1.drop(3).map {
+        case SnapshotTable.ClusterMeta(k) => s"#clusterpart=$k"
+        case l => l
+      }
+      t.publish(2L, t.writeTmpManifest(2L, t.read(1L).schema, weakened))
+      val v3 = t.delete(col("k") === 3L || col("k") === 90L)
+      val touched = lines(t, v3).collect { case SnapshotTable.DvRowsMeta(a, _) => a }.toSet
+      assert(touched.size == 2)
+      val sums = lines(t, v3).collect { case SnapshotTable.SumMeta(rel, _, _) => rel }
+      assert(!sums.exists(rel => touched(t.dvAddressOf(rel))),
+        "a tombstone-falsified #sum line survived the delete")
+      // the untouched files keep theirs
+      assert(sums.size == SnapshotTable.manifestFilesOf(lines(t, v3)).size - 2)
+    } finally SnapshotTable.drop(t)
+  }
+
   test("compactDvs folds stacked sidecar sets into one, content-identical, feed-skippable") {
     val t = SnapshotTable.temp(spark, "graft_dvmaint_compactdv_")
     try {

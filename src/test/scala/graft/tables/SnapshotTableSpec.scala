@@ -1041,6 +1041,17 @@ class SnapshotTableSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         t.update(col("k") === 1L, Map.empty)
       }
+      // an update that matches no row adds no data file: a bucket spec
+      // survives it, so a bucketed merge still composes afterwards
+      val tb = freshTable("dv_update_nomatch_bucketed")
+      try {
+        tb.commitBucketed(kv((1L to 8L).map(k => k -> k.toDouble): _*), "k", 2)
+        val vb = tb.update(col("k") === -1L, Map("v" -> lit(0.0)))
+        assert(SnapshotTable.manifestLinesAt(Paths.get(tb.root), vb)
+          .exists(_.startsWith("#buckets=")), "a no-match update dropped #buckets=")
+        tb.mergeBucketed(kv(3L -> 30.0), "k")
+        assert(tb.read().filter(col("k") === 3L).as[(Long, Double)].head() == ((3L, 30.0)))
+      } finally SnapshotTable.drop(tb)
     } finally SnapshotTable.drop(t)
   }
 
